@@ -1,9 +1,12 @@
-"""Deterministic hashing kernels: stable 64-bit hash, MinHash, SimHash.
+"""Deterministic hashing kernels: stable 64-bit hash, shingle hashes,
+MinHash, SimHash, and a numpy replica of Spark's ``xxhash64`` band keys.
 
 Python's builtin ``hash`` is salted per-process, so it can never be used
-on executors — every hash here is derived from blake2b and is a pure
-function of its input, reproducible across workers, runs, and resumes
-(the stable-cluster-id requirement of the north rule).
+on executors. Every hash here is a pure function of its input,
+reproducible across workers, runs, and resumes (the stable-cluster-id
+requirement of the north rule): ``hash64`` is blake2b, shingle hashes
+are a fixed mix over blake2b word hashes, and band keys are bit-exact
+Spark ``xxhash64`` values.
 """
 
 from __future__ import annotations
@@ -19,15 +22,6 @@ def hash64(s: str, seed: int = 0) -> int:
     """Stable 64-bit hash of a string."""
     h = blake2b(s.encode("utf-8"), digest_size=8, salt=seed.to_bytes(8, "little"))
     return int.from_bytes(h.digest(), "little")
-
-
-def hash_tokens64(tokens) -> np.ndarray:
-    """Vector of stable 64-bit hashes (uint64) for a token list."""
-    if not tokens:
-        return np.empty(0, dtype=np.uint64)
-    return np.fromiter(
-        (hash64(t) for t in tokens), dtype=np.uint64, count=len(tokens)
-    )
 
 
 _MIX_C = np.array(
@@ -138,31 +132,6 @@ def minhash_from_hashes(base: np.ndarray, num_perm: int = 64, seed: int = 1) -> 
         # (num_perm, n_tokens) grid of permuted hashes, min over tokens
         grid = a[:, None] * base[None, :] + b[:, None]
     return grid.min(axis=1)
-
-
-def minhash_signature(tokens, num_perm: int = 64, seed: int = 1) -> np.ndarray:
-    """MinHash signature (uint64[num_perm]) of a token set."""
-    return minhash_from_hashes(hash_tokens64(tokens), num_perm=num_perm, seed=seed)
-
-
-def minhash_band_keys(
-    signature: np.ndarray, bands: int = 16, prefix: str = "mh"
-) -> list[str]:
-    """LSH band keys: the signature split into ``bands`` equal row-groups,
-    each group hashed to one bucket key string ``"{prefix}:{band}:{hex}"``.
-
-    Two documents share a band key iff that band of their signatures is
-    identical — the classic banding construction (probability of sharing
-    ≥1 key = 1-(1-s^r)^b for Jaccard s, r rows per band).
-    """
-    num_perm = signature.shape[0]
-    rows = num_perm // bands
-    keys = []
-    for band in range(bands):
-        chunk = signature[band * rows : (band + 1) * rows]
-        digest = blake2b(chunk.tobytes(), digest_size=8).hexdigest()
-        keys.append(f"{prefix}:{band}:{digest}")
-    return keys
 
 
 # ---------------------------------------------------------------------
@@ -277,20 +246,24 @@ def simhash_from_hashes(base: np.ndarray, weights=None) -> int:
     return int(out)
 
 
-def simhash64(tokens, weights=None) -> int:
-    """64-bit SimHash of a token multiset (optionally weighted)."""
-    return simhash_from_hashes(hash_tokens64(tokens), weights=weights)
+def shingle_signature(
+    words: list, k: int, num_perm: int, word_cache: dict | None = None
+) -> tuple[np.ndarray, np.ndarray, int]:
+    """One document's word list → (shingle hashes, MinHash signature,
+    SimHash fingerprint) — the per-document signature step shared by the
+    ER features pass and the dedup family.
 
-
-def hamming64(a: int, b: int) -> int:
-    """Hamming distance between two 64-bit fingerprints."""
-    return bin((int(a) ^ int(b)) & 0xFFFFFFFFFFFFFFFF).count("1")
-
-
-def simhash_prefix_key(fingerprint: int, bits: int = 16, rotation: int = 0) -> str:
-    """Blocking key = top ``bits`` of the fingerprint rotated left by
-    ``rotation`` — multiple rotations give multiple chances for near
-    fingerprints to collide (standard SimHash table construction)."""
-    fp = int(fingerprint) & 0xFFFFFFFFFFFFFFFF
-    rot = ((fp << rotation) | (fp >> (64 - rotation))) & 0xFFFFFFFFFFFFFFFF if rotation else fp
-    return f"sh:{rotation}:{rot >> (64 - bits):04x}"
+    At least ``k`` words hash their k-word windows with
+    ``shingle_hashes64``; fewer words hash as one shingle of the joined
+    words; no words give no shingles (all-max signature, fingerprint 0).
+    Signature and fingerprint both derive from the same hashes, so
+    repeated shingles count once in the MinHash and once per occurrence
+    in the SimHash bit-sums.
+    """
+    if len(words) >= k:
+        sh = shingle_hashes64(words, k, word_cache)
+    elif words:
+        sh = np.array([hash64(" ".join(words))], dtype=np.uint64)
+    else:
+        sh = np.empty(0, dtype=np.uint64)
+    return sh, minhash_from_hashes(sh, num_perm=num_perm), simhash_from_hashes(sh)

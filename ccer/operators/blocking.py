@@ -12,7 +12,7 @@ Here the block keys are content-derived:
 - pass 4 ``simhash`` — rotated 16-bit fingerprint prefixes
 
 Block keys are 64-bit ``xxhash64`` values, NOT strings: every downstream
-shuffle (the size profile, the in-block self-join, pair dedup) moves 8
+shuffle (the size profile, the in-block pair generation, pair dedup) moves 8
 bytes per key instead of a 30-70 byte string — at 10^12 block rows that
 is the difference between a few TB and tens of TB of shuffle. A hash
 collision merely merges two unrelated blocks (extra candidates that the
@@ -23,7 +23,7 @@ Python work (signatures) happened once in the features pass, so the
 whole stage is whole-stage-codegen'd.
 
 Skew (north rule "salted, skew-aware block partitions"): a block larger
-than its cap would cost O(n²) in the self-join — one mega-host block of
+than its cap would cost O(n²) in pair generation — one mega-host block of
 10^8 rows is 10^16 pairs. Oversized blocks are subdivided by a
 CONTENT-DERIVED salt: the top ``ceil(log2(n/cap))`` SimHash bits. Exact
 and near duplicates agree on those bits with high probability, so they

@@ -6,7 +6,7 @@ The transitive-closure step of the reconcile semantics — the reference's
 
 Algorithm: alternating large-star / small-star (Kiveris et al.,
 "Connected Components in MapReduce and Beyond", SoCC'13), expressed as
-DataFrame groupBy/join rounds:
+DataFrame rounds of window mins:
 
 - large-star: for each node u, attach every strictly-larger neighbor to
   the minimum of N(u) ∪ {u};
@@ -14,11 +14,14 @@ DataFrame groupBy/join rounds:
   neighbors to the minimum.
 
 Both preserve connectivity and strictly reduce the sum of component
-"heights"; convergence is O(log n) rounds on real graphs. Each round is
-two shuffles (groupBy min + join back). Per-round ``localCheckpoint``
-truncates the lineage so the plan doesn't grow exponentially — at cluster
-scale this becomes a checkpoint to the stage store (the pipeline layer
-does exactly that for the final labels).
+"heights"; convergence is O(log n) rounds on real graphs. Each star is
+one min-over-partition window pass — one exchange, no join back — and
+small-star's output distinct is the round's only other shuffle.
+Per-round ``localCheckpoint`` truncates the lineage so the plan doesn't
+grow exponentially — at cluster scale this becomes a checkpoint to the
+stage store (the pipeline layer does exactly that for the final labels).
+A graph that has not converged after ``max_iterations`` rounds raises
+instead of returning a partial mapping.
 
 Labels are CONTENT-DERIVED: the component representative is the minimum
 stable record id, never an execution-order artifact — ids are identical
@@ -95,6 +98,10 @@ def connected_components(
     saved per run, and each round is latency-bound (several shuffle
     barriers) rather than data-bound once the graph has collapsed.
 
+    Raises ``RuntimeError`` when the edge set is still not a converged
+    star forest after ``max_iterations`` rounds — a partial mapping
+    would silently leave one component under several labels.
+
     Why the test is sufficient: small-star output always has
     id_b < id_a (targets are per-star minima), so a depth-1 forest with
     unique sources maps every node to its star's minimum, and such a
@@ -134,6 +141,12 @@ def connected_components(
             )
             if targets_that_are_sources == 0:
                 break
+    else:
+        unpersist_checkpoint(current)
+        raise RuntimeError(
+            f"connected_components did not converge in {max_iterations} "
+            "rounds: the partial mapping would split components"
+        )
     # converged star graph: every edge is (node, root); roots map to themselves
     nodes = current.select(F.col("id_a").alias("id"), F.col("id_b").alias("component"))
     roots = current.select(F.col("id_b").alias("id"), F.col("id_b").alias("component"))

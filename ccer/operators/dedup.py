@@ -6,14 +6,20 @@ engine provides beyond reference parity):
 
 - exact         hash-groupBy on the (optionally normalized) text
 - token-Jaccard in-block self-join + JVM array_intersect/array_union
-- MinHash-LSH   signature → band keys → bucket join → verify (reuses the
-                ER blocking machinery)
-- SimHash       fingerprint prefix buckets + JVM bit_count(xor) Hamming
+- MinHash-LSH   signature → ``block_keys`` band keys → ``candidate_pairs``
+                → estimated-Jaccard verify
+- SimHash       fingerprint → ``block_keys`` rotated-prefix keys →
+                ``candidate_pairs`` with the Hamming bound as prefilter
 - embedding     cosine near-dup over array<float> (see ann.py)
 
-Everything except the signature computation (one Arrow pass) is JVM-side
-column algebra — blocking keys, joins, Hamming distances, and Jaccard all
-run inside whole-stage codegen.
+The MinHash and SimHash modes are the ER near-dup core, not a copy of
+it: signatures come from the features pass's per-document step
+(``shingle_signature``), keys from ``block_keys`` and pairs from
+``candidate_pairs``, so a text's signature and band keys here equal its
+ER features-table values. Everything except the signature computation
+(one Arrow pass) is JVM-side column algebra — blocking keys, pair
+generation, Hamming distances, and Jaccard all run inside whole-stage
+codegen.
 """
 
 from __future__ import annotations
@@ -22,8 +28,9 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
-from ccer.functions.hashing import hash64, minhash_from_hashes, simhash_from_hashes
-from ccer.functions.normalize import normalize_text, word_shingles
+from ccer.functions.hashing import shingle_signature
+from ccer.functions.normalize import normalize_text
+from ccer.operators.blocking import block_keys, candidate_pairs
 
 
 def exact_dedup_groups(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -95,7 +102,7 @@ def token_jaccard_pairs(
     )
 
 
-SIGNATURE_SCHEMA = "id long, sig array<int>, simhash long, n_sh int"
+SIGNATURE_SCHEMA = "id long, sig array<int>, simhash long"
 
 
 def text_signatures(
@@ -105,16 +112,20 @@ def text_signatures(
     num_perm: int = 128,
     shingle_k: int = 3,
 ) -> DataFrame:
-    """One Arrow pass: id → (MinHash signature, SimHash fingerprint).
+    """One Arrow pass: id → (MinHash signature, SimHash fingerprint), the
+    ``id``/``sig``/``simhash`` columns ``block_keys`` reads.
 
-    Signatures are stored 32-bit (top half of each 64-bit min-hash,
-    order-preserving truncation — the same convention as the ER
-    features table, features.py:165-168, and datasketch's default
+    Each text goes through the features pass's per-document step
+    (``shingle_signature``) over its full normalized text, so a text
+    shorter than the features ``text_cap`` gets the same ``sig`` and
+    ``simhash`` as its ER features row. Signatures are stored 32-bit
+    (top half of each 64-bit min-hash, order-preserving truncation — the
+    same convention as the ER features table and datasketch's default
     precision). Halves every downstream signature byte: the band-key
-    slices, the pair-verify join-backs, and the localCheckpointed
-    live set in the curation funnel / streaming state. Cost: an extra
-    2^-32 per-position collision probability in the estimated-Jaccard
-    match count — ≪ the sketch's own 1/sqrt(num_perm) noise.
+    slices, the pair-verify join-backs, and the localCheckpointed live
+    set in the curation funnel / streaming state. Cost: an extra 2^-32
+    per-position collision probability in the estimated-Jaccard match
+    count — ≪ the sketch's own 1/sqrt(num_perm) noise.
     """
 
     target = docs.sparkSession.sparkContext.defaultParallelism
@@ -122,38 +133,46 @@ def text_signatures(
         docs = docs.repartition(target)
 
     def gen(iterator):
-        # per-task shingle-hash memo: near-dup corpora repeat shingles
-        # heavily, so most blake2b calls become dict hits (identical hash
-        # VALUES — this only caches hash_tokens64's per-string work).
-        # Bounded to keep worker RSS flat on adversarial vocabularies.
-        shingle_cache: dict = {}
+        # per-task word-hash memo for the shingle hasher, bounded as in
+        # the features pass
+        word_cache: dict = {}
         for pdf in iterator:
-            if len(shingle_cache) > 2_000_000:
-                shingle_cache.clear()
-            out = []
-            for rid, text in zip(pdf[id_col], pdf[text_col]):
-                toks = word_shingles(normalize_text(text) or "", k=shingle_k)
-                for t in toks:
-                    if t not in shingle_cache:
-                        shingle_cache[t] = hash64(t)
-                sh = np.fromiter(
-                    map(shingle_cache.__getitem__, toks),
-                    dtype=np.uint64,
-                    count=len(toks),
-                )
-                sig = minhash_from_hashes(sh, num_perm=num_perm)
-                fp = simhash_from_hashes(sh)
-                out.append(
-                    (
-                        int(rid),
-                        (sig >> np.uint64(32)).astype(np.uint32).view(np.int32).tolist(),
-                        np.uint64(fp).astype(np.int64).item(),
-                        int(sh.size),
-                    )
-                )
-            yield pd.DataFrame(out, columns=["id", "sig", "simhash", "n_sh"])
+            if len(word_cache) > 2_000_000:
+                word_cache.clear()
+            sigs = []
+            fps = np.empty(len(pdf), dtype=np.int64)
+            for i, text in enumerate(pdf[text_col].tolist()):
+                words = (normalize_text(text) or "").split()
+                _, sig, fp = shingle_signature(words, shingle_k, num_perm, word_cache)
+                sigs.append((sig >> np.uint64(32)).astype(np.uint32).view(np.int32))
+                fps[i] = np.uint64(fp).astype(np.int64)
+            yield pd.DataFrame(
+                {"id": pdf[id_col].astype(np.int64), "sig": sigs, "simhash": fps}
+            )
 
     return docs.select(id_col, text_col).mapInPandas(gen, schema=SIGNATURE_SCHEMA)
+
+
+def _join_endpoints(pairs: DataFrame, sigs: DataFrame, col: str) -> DataFrame:
+    """Join ``col`` of both pair endpoints back from the signature table
+    as ``{col}_a`` / ``{col}_b``."""
+    return pairs.join(
+        sigs.select(F.col("id").alias("id_a"), F.col(col).alias(f"{col}_a")), "id_a"
+    ).join(
+        sigs.select(F.col("id").alias("id_b"), F.col(col).alias(f"{col}_b")), "id_b"
+    )
+
+
+def estimated_jaccard(pairs: DataFrame, sigs: DataFrame, num_perm: int) -> DataFrame:
+    """(id_a, id_b) pairs → (id_a, id_b, est_jaccard): matching signature
+    positions / num_perm (JVM zip_with + filter + size — no second Python
+    pass), with both signatures joined back from ``sigs`` on id."""
+    est = F.size(
+        F.filter(F.zip_with("sig_a", "sig_b", lambda x, y: x == y), lambda m: m)
+    ) / F.lit(float(num_perm))
+    return _join_endpoints(pairs, sigs, "sig").select(
+        "id_a", "id_b", est.alias("est_jaccard")
+    )
 
 
 def minhash_neardup_pairs(
@@ -166,9 +185,8 @@ def minhash_neardup_pairs(
 ) -> DataFrame:
     """MinHash-LSH near-duplicate pairs with signature-estimated Jaccard.
 
-    band keys (JVM xxhash64 over signature slices) → bucket self-join →
-    estimated Jaccard = matching signature positions / num_perm (JVM
-    zip_with + filter + size — no second Python pass).
+    ``block_keys`` MinHash band keys → ``candidate_pairs`` (no Hamming
+    prefilter) → ``estimated_jaccard`` ≥ ``est_threshold``.
     """
     # consumed three times (band keys + the two signature join-backs):
     # materialize the Arrow pass once; blocks are reclaimed by the
@@ -176,35 +194,14 @@ def minhash_neardup_pairs(
     sigs = text_signatures(docs, text_col, id_col, num_perm=num_perm).localCheckpoint(
         eager=False
     )
-    rows_per_band = num_perm // bands
-    band_cols = [
-        F.xxhash64(F.lit(b), F.slice("sig", b * rows_per_band + 1, rows_per_band))
-        for b in range(bands)
-    ]
     # the 128-long signature (~0.5 KB at 32-bit precision) must NOT ride
-    # the band join or the pair-dedup exchange: block rows are bare
-    # (id, bucket) 16-byte pairs, the bucket self-join and dropDuplicates
-    # shuffle only ids, and the signatures join back on id afterwards
-    # (the ER scorer's slim-crossing pattern, scoring.py:253-270). At
-    # 10^12 docs the dedup exchange carries 16 B/pair instead of ~1 KB/pair.
-    blocks = sigs.select("id", F.explode(F.array(*band_cols)).alias("bucket"))
-    a = blocks.select(F.col("id").alias("id_a"), "bucket")
-    b = blocks.select(F.col("id").alias("id_b"), "bucket")
-    pairs = (
-        a.join(b, "bucket")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    sa = sigs.select(F.col("id").alias("id_a"), F.col("sig").alias("sig_a"))
-    sb = sigs.select(F.col("id").alias("id_b"), F.col("sig").alias("sig_b"))
-    est = F.size(
-        F.filter(F.zip_with("sig_a", "sig_b", lambda x, y: x == y), lambda m: m)
-    ) / F.lit(float(num_perm))
+    # the pair generation: block rows are slim (key, pass, id, simhash)
+    # rows, and the signatures join back on id afterwards (the ER
+    # scorer's slim-crossing pattern, scoring.py:253-270).
+    blocks = block_keys(sigs, passes=("minhash",), minhash_bands=bands, num_perm=num_perm)
+    pairs = candidate_pairs(blocks, hamming_prefilter=None)
     return (
-        pairs.join(sa, "id_a")
-        .join(sb, "id_b")
-        .withColumn("est_jaccard", est)
+        estimated_jaccard(pairs, sigs, num_perm)
         .filter(F.col("est_jaccard") >= est_threshold)
         .select("id_a", "id_b", F.round("est_jaccard", 6).alias("est_jaccard"))
     )
@@ -218,32 +215,23 @@ def simhash_neardup_pairs(
     rotations=(0, 21, 43),
     max_hamming: int = 6,
 ) -> DataFrame:
-    """SimHash near-dup pairs: rotated-prefix buckets, then exact Hamming
-    via JVM bit_count(a XOR b) ≤ k."""
-    sigs = text_signatures(docs, text_col, id_col)
-    shift = 64 - prefix_bits
-    key_cols = []
-    for rot in rotations:
-        rotated = (
-            F.col("simhash")
-            if rot == 0
-            else F.shiftleft("simhash", rot).bitwiseOR(
-                F.shiftrightunsigned("simhash", 64 - rot)
-            )
-        )
-        # 8-byte xxhash64 bucket keys, not strings — same shuffle-byte
-        # rationale as the ER blocking path (blocking.py module docstring)
-        key_cols.append(F.xxhash64(F.lit(rot), F.shiftrightunsigned(rotated, shift)))
-    blocks = sigs.select("id", "simhash", F.explode(F.array(*key_cols)).alias("bucket"))
-    a = blocks.select(F.col("id").alias("id_a"), F.col("simhash").alias("fp_a"), "bucket")
-    b = blocks.select(F.col("id").alias("id_b"), F.col("simhash").alias("fp_b"), "bucket")
-    return (
-        a.join(b, "bucket")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .withColumn("hamming", F.bit_count(F.col("fp_a").bitwiseXOR(F.col("fp_b"))))
-        .filter(F.col("hamming") <= max_hamming)
-        .select("id_a", "id_b", "hamming")
-        .dropDuplicates(["id_a", "id_b"])
+    """SimHash near-dup pairs: ``block_keys`` rotated-prefix keys →
+    ``candidate_pairs`` with ``max_hamming`` as its JVM
+    bit_count(a XOR b) prefilter; the distance is recomputed on the
+    surviving pairs."""
+    # consumed three times (keys + the two fingerprint join-backs)
+    sigs = text_signatures(docs, text_col, id_col).localCheckpoint(eager=False)
+    blocks = block_keys(
+        sigs,
+        passes=("simhash",),
+        simhash_bits=prefix_bits,
+        simhash_rotations=rotations,
+    )
+    pairs = candidate_pairs(blocks, hamming_prefilter=max_hamming)
+    return _join_endpoints(pairs, sigs, "simhash").select(
+        "id_a",
+        "id_b",
+        F.bit_count(F.col("simhash_a").bitwiseXOR(F.col("simhash_b"))).alias("hamming"),
     )
 
 

@@ -31,13 +31,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 
-from ccer.functions.hashing import (
-    hash64,
-    minhash_from_hashes,
-    shingle_hashes64,
-    simhash_from_hashes,
-    spark_minhash_band_keys,
-)
+from ccer.functions.hashing import hash64, shingle_signature, spark_minhash_band_keys
 from ccer.functions.normalize import html_to_text, normalize_text, normalize_url, url_host
 
 FEATURES_SCHEMA = (
@@ -145,21 +139,12 @@ def extract_features(
                 words = text_norm.split()
                 # hash shingles ONCE; signature, fingerprint, and the
                 # pairwise-overlap sketch all derive from the same hashes.
-                # Vectorized path: memoized word hashes + numpy window mix
-                # (no shingle strings, no per-shingle blake2b). Per-doc
-                # signature grids beat a batch-level segmented reduce:
-                # np.minimum.reduceat over the concatenated hashes was
-                # measured 4x SLOWER than the per-doc (num_perm × n)
+                # Per-doc signature grids beat a batch-level segmented
+                # reduce: np.minimum.reduceat over the concatenated hashes
+                # was measured 4x SLOWER than the per-doc (num_perm × n)
                 # grids — reduceat's segmented inner loop runs ~10x below
                 # contiguous ufunc throughput.
-                if len(words) >= shingle_k:
-                    sh = shingle_hashes64(words, shingle_k, word_cache)
-                elif words:
-                    sh = np.array([hash64(" ".join(words))], dtype=np.uint64)
-                else:
-                    sh = np.empty(0, dtype=np.uint64)
-                sig = minhash_from_hashes(sh, num_perm=num_perm)
-                fp = simhash_from_hashes(sh)
+                sh, sig, fp = shingle_signature(words, shingle_k, num_perm, word_cache)
                 rid = f"{url}@{tss[i].isoformat() if tss[i] is not None else ''}"
                 rids.append(rid)
                 ids2[i] = stable_id(rid)

@@ -7,7 +7,7 @@ in a stage table. Our stages:
 
 1. ``features``    one Arrow pass (normalize, signatures, stable ids)
 2. ``blocks``      multi-pass block keys, salted for skew
-3. ``pairs``       in-block self-join, distinct candidate pairs
+3. ``pairs``       in-block pair generation, distinct candidate pairs
 4. ``edges``       Arrow-batched pairwise scoring → match edges
 5. ``components``  large-star/small-star transitive closure
 6. ``clusters``    every record labeled with its stable cluster id

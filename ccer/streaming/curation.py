@@ -50,8 +50,9 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ccer.operators.blocking import block_keys
 from ccer.operators.cluster import connected_components
-from ccer.operators.dedup import text_signatures
+from ccer.operators.dedup import estimated_jaccard, text_signatures
 
 
 @dataclass
@@ -62,22 +63,11 @@ class CurationState:
     component label, compressed); everything else is append-only."""
 
     seen: DataFrame        # (text_md5 binary, survivor_id long)
-    sigs: DataFrame        # (id long, sig array<int>) — every doc ever
+    sigs: DataFrame        # (id long, sig array<int>, simhash long) — every doc ever
     buckets: DataFrame     # (bucket long, id long)
     comps: DataFrame       # (id long, component long)
     relabels: DataFrame    # (old_label long, new_label long), compressed
     next_id: int
-
-
-def _band_buckets(sigs: DataFrame, num_perm: int, bands: int) -> DataFrame:
-    rows_per_band = num_perm // bands
-    band_cols = [
-        F.xxhash64(F.lit(b), F.slice("sig", b * rows_per_band + 1, rows_per_band))
-        for b in range(bands)
-    ]
-    return sigs.select("id", F.explode(F.array(*band_cols)).alias("bucket")).select(
-        "bucket", "id"
-    )
 
 
 def _apply_relabels(df: DataFrame, col: str, relabels: DataFrame) -> DataFrame:
@@ -204,7 +194,9 @@ def curate_batch(
     sigs_new = text_signatures(
         exact_survivors, text_col=text_col, id_col="id", num_perm=num_perm
     ).localCheckpoint(eager=True)
-    buckets_new = _band_buckets(sigs_new, num_perm, bands)
+    buckets_new = block_keys(
+        sigs_new, passes=("minhash",), minhash_bands=bands, num_perm=num_perm
+    ).select(F.col("block_key").alias("bucket"), "id")
     buckets_all = (
         state.buckets.unionByName(buckets_new) if state is not None else buckets_new
     )
@@ -221,15 +213,9 @@ def curate_batch(
         )
         .dropDuplicates(["id_a", "id_b"])
     )
-    sa = sigs_all.select(F.col("id").alias("id_a"), F.col("sig").alias("sig_a"))
-    sb = sigs_all.select(F.col("id").alias("id_b"), F.col("sig").alias("sig_b"))
-    est = F.size(
-        F.filter(F.zip_with("sig_a", "sig_b", lambda x, y: x == y), lambda m: m)
-    ) / F.lit(float(num_perm))
     edges = (
-        cand.join(sa, "id_a")
-        .join(sb, "id_b")
-        .filter(est >= est_threshold)
+        estimated_jaccard(cand, sigs_all, num_perm)
+        .filter(F.col("est_jaccard") >= est_threshold)
         .select("id_a", "id_b")
     )
     # map OLD endpoints to their (relabel-compressed) component label so
@@ -303,12 +289,13 @@ def curate_batch(
 _STATE_TABLES = ("seen", "sigs", "buckets", "comps", "relabels")
 
 # Signature/bucket binary format version. Bump whenever the on-disk
-# encoding of ``sigs``/``buckets`` changes incompatibly — v2 is the
-# 32-bit MinHash signature + xxhash64-over-32-bit-slices bucket scheme;
-# v1 (array<long> sigs) state would load cleanly (unionByName widens
-# int->long silently) but its signatures/buckets never match new ones,
-# so near-duplicates of pre-upgrade docs would silently survive resume.
-_STATE_FORMAT_VERSION = 2
+# encoding of ``sigs``/``buckets`` changes incompatibly — v3 is the
+# shared ER signature step (word-hash-mixed shingles) + ``block_keys``
+# MinHash band keys; v2 (blake2b shingle strings, xxhash64(band, slice)
+# buckets) and v1 (array<long> sigs) state may load cleanly but their
+# signatures/buckets never match new ones, so near-duplicates of
+# pre-upgrade docs would silently survive resume.
+_STATE_FORMAT_VERSION = 3
 
 
 def save_state(state: CurationState, path: str) -> None:

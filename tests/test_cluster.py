@@ -73,6 +73,15 @@ def test_cc_transitivity_chain(spark):
     assert {r["id"] for r in res} == set(range(100, 161))
 
 
+def test_cc_raises_when_not_converged(spark):
+    # one star round cannot collapse a long path; returning its partial
+    # mapping would split the component, so the loop must fail loudly
+    chain = [(i, i + 1) for i in range(100, 160)]
+    df = spark.createDataFrame(chain, "id_a long, id_b long")
+    with pytest.raises(RuntimeError, match="did not converge in 1 rounds"):
+        connected_components(df, max_iterations=1)
+
+
 def test_assign_clusters_singletons(spark):
     feats = spark.createDataFrame([(1, "a"), (2, "b"), (3, "c")], "id long, rid string")
     comps = spark.createDataFrame([(2, 1), (1, 1)], "id long, component long")

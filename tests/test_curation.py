@@ -101,6 +101,58 @@ def test_simhash_neardup_finds_planted(spark, corpus):
     assert not any({a, b} == {0, 3} for a, b in pairs)
 
 
+def test_dedup_reads_er_signature_and_band_keys(spark, monkeypatch):
+    """The dedup family is the ER near-dup core, not a copy of it: on
+    texts shorter than the features text_cap, ``text_signatures`` gives
+    every text its ER features ``sig``/``simhash``, and the MinHash block
+    keys ``minhash_neardup_pairs`` generates pairs from are exactly
+    ``block_keys`` over the features table."""
+    import datetime
+
+    import ccer.operators.dedup as dedup
+    from ccer.operators.blocking import block_keys
+    from ccer.operators.features import extract_features
+
+    texts = [
+        "the quick brown fox jumps over the lazy dog",
+        "The quick brown fox jumped over the lazy dog!",
+        "Completely different: content about databases, joins and shuffles",
+        "two words",
+        "",
+    ]
+    ts = datetime.datetime(2024, 1, 1)
+    pages = spark.createDataFrame(
+        [(f"https://example.com/{i}", ts, t, "en") for i, t in enumerate(texts)],
+        "url string, warc_ts timestamp, text string, lang string",
+    )
+    feats = extract_features(pages).cache()
+    ids = {r["url"]: r["id"] for r in feats.select("url", "id").collect()}
+    docs = spark.createDataFrame(
+        [(ids[f"https://example.com/{i}"], t) for i, t in enumerate(texts)],
+        "doc_id long, text string",
+    )
+
+    def by_id(df):
+        return {r["id"]: (list(r["sig"]), r["simhash"]) for r in df.collect()}
+
+    assert by_id(dedup.text_signatures(docs)) == by_id(feats.select("id", "sig", "simhash"))
+
+    grouped = []
+    real = dedup.candidate_pairs
+
+    def spy(blocks, **kwargs):
+        grouped.append(blocks)
+        return real(blocks, **kwargs)
+
+    monkeypatch.setattr(dedup, "candidate_pairs", spy)
+    dedup.minhash_neardup_pairs(docs).collect()
+    got = grouped[0].select("id", "block_key")
+    want = block_keys(feats, passes=("minhash",)).select("id", "block_key")
+    assert got.count() == len(texts) * 32
+    assert got.exceptAll(want).count() == 0 and want.exceptAll(got).count() == 0
+    feats.unpersist()
+
+
 def test_lang_id(spark, corpus):
     got = {r["doc_id"]: r["lang_pred"] for r in detect_language(corpus).collect()}
     assert got[0] == "en" and got[5] == "de" and got[6] == "fr" and got[7] == "zh"

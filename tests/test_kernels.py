@@ -7,6 +7,7 @@ downstream.
 """
 
 import duckdb
+import numpy as np
 import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
@@ -31,11 +32,11 @@ from ccer.functions.textsim import (
     levenshtein_ratio,
 )
 from ccer.functions.hashing import (
-    hamming64,
     hash64,
-    minhash_band_keys,
-    minhash_signature,
-    simhash64,
+    minhash_from_hashes,
+    shingle_hashes64,
+    simhash_from_hashes,
+    spark_minhash_band_keys,
 )
 from ccer.functions.names import are_names_similar, parse_name_by_style
 
@@ -262,26 +263,35 @@ def test_ratio_and_setsims():
 
 
 # ----------------------------------------------------------------- hashing
+def _minhash(words, num_perm):
+    return minhash_from_hashes(shingle_hashes64(words, 3), num_perm=num_perm)
+
+
+def _simhash(words):
+    return simhash_from_hashes(shingle_hashes64(words, 3))
+
+
 def test_hashing_deterministic():
     assert hash64("abc") == hash64("abc")
     assert hash64("abc") != hash64("abd")
-    sig1 = minhash_signature(["x", "y", "z"], num_perm=64)
-    sig2 = minhash_signature(["x", "y", "z"], num_perm=64)
+    sig1 = _minhash(["x", "y", "z"], num_perm=64)
+    sig2 = _minhash(["x", "y", "z"], num_perm=64)
     assert (sig1 == sig2).all()
-    keys = minhash_band_keys(sig1, bands=16)
-    assert len(keys) == 16 and len(set(keys)) == 16
+    sig32 = (sig1 >> np.uint64(32)).astype(np.uint32).view(np.int32)
+    keys = spark_minhash_band_keys(sig32[None, :], bands=16, rows_per_band=4)[0]
+    assert len(keys) == 16 and len(set(keys.tolist())) == 16
 
 
 def test_minhash_similarity_tracks_jaccard():
     base = [f"tok{i}" for i in range(100)]
     near = base[:90] + [f"new{i}" for i in range(10)]
     far = [f"other{i}" for i in range(100)]
-    s_base = minhash_signature(base, num_perm=128)
-    s_near = minhash_signature(near, num_perm=128)
-    s_far = minhash_signature(far, num_perm=128)
+    s_base = _minhash(base, num_perm=128)
+    s_near = _minhash(near, num_perm=128)
+    s_far = _minhash(far, num_perm=128)
     est_near = float((s_base == s_near).mean())
     est_far = float((s_base == s_far).mean())
-    assert est_near > 0.65  # true J ≈ 0.818
+    assert est_near > 0.65  # true 3-shingle J = 88/108 ≈ 0.815
     assert est_far < 0.1
 
 
@@ -289,8 +299,8 @@ def test_simhash_near_duplicates_close():
     base = [f"w{i}" for i in range(200)]
     near = base[:195] + ["x1", "x2", "x3", "x4", "x5"]
     far = [f"q{i}" for i in range(200)]
-    d_near = hamming64(simhash64(base), simhash64(near))
-    d_far = hamming64(simhash64(base), simhash64(far))
+    d_near = bin(_simhash(base) ^ _simhash(near)).count("1")
+    d_far = bin(_simhash(base) ^ _simhash(far)).count("1")
     assert d_near <= 8
     assert d_far > 16
 
