@@ -201,8 +201,12 @@ def get_spark(
 
 
 def checkpoint_level():
-    """Storage level for the engine's INTERNAL localCheckpoints (CC
-    rounds, the scorer's decided/ambiguous split, the salt join-back).
+    """Storage level for the connected-components round checkpoints
+    (``ccer.operators.cluster``), and for nothing else. The scorer's base
+    (``scoring.py``) and the salt join-back (``blocking.py``) checkpoints
+    stay at the default deserialized level on purpose: they are large
+    and read hot (serialized storage measured 5x the read CPU on the
+    ``blocking.py`` one, recorded next to it).
 
     Default DataFrame.localCheckpoint caches DESERIALIZED on-heap rows:
     every checkpointed row is a live heap object (plus per-field boxes
@@ -216,9 +220,9 @@ def checkpoint_level():
     LocalRDDCheckpointData.transformStorageLevel strips the off-heap
     bit from any level passed to localCheckpoint, so serialized
     on-heap + disk is the strongest reachable level.) Read-side cost is
-    one deserialization per read of row-width bytes; every checkpoint
-    here is write-once/read-twice-or-thrice, so the trade is strictly
-    GC-bound. Storage level never affects row values — results are
+    one deserialization per read of row-width bytes; a CC round
+    checkpoint is write-once/read-twice-or-thrice, so the trade is
+    strictly GC-bound. Storage level never affects row values — results are
     bit-identical by construction.
     """
     from pyspark.storagelevel import StorageLevel
@@ -241,6 +245,27 @@ def unpersist_checkpoint(df) -> None:
         df._jdf.queryExecution().analyzed().rdd().unpersist(False)
     except Exception:
         pass
+
+
+def job_counts(spark: SparkSession) -> dict:
+    """Spark jobs and tasks run so far by this application, read from the
+    status tracker (no UI needed; it keeps the last ``spark.ui.retainedJobs``
+    jobs, 1000 by default). Tasks are the completed tasks of the
+    jobs' distinct stages, so a skipped stage (reused shuffle) adds none.
+    Both are load-independent: they count the per-job and per-task fixed
+    cost that dominates small passes, whatever the host's speed."""
+    tracker = spark.sparkContext.statusTracker()
+    job_ids = tracker.getJobIdsForGroup()
+    stage_ids = set()
+    for job_id in job_ids:
+        info = tracker.getJobInfo(job_id)
+        if info is not None:
+            stage_ids.update(info.stageIds)
+    stages = (tracker.getStageInfo(s) for s in stage_ids)
+    return {
+        "spark_jobs": len(job_ids),
+        "spark_tasks": sum(s.numCompletedTasks for s in stages if s is not None),
+    }
 
 
 def task_metrics(spark: SparkSession) -> dict | None:

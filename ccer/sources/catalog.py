@@ -12,8 +12,13 @@ In this sandbox no Iceberg jar is on the classpath, so the store degrades
 to parquet directories + a JSON manifest with an identical API; on a real
 cluster, ``table_format="iceberg"`` writes ``writeTo(...).partitionedBy(
 bucket(N, id)).createOrReplace()`` so every stage lands bucketed on ``id``
-and the downstream self-joins read co-located buckets. Lineage rows
-(per-partition counts + wall time) land next to each stage.
+and the downstream self-joins read co-located buckets. N is not a
+setting: each bucketed write derives it from the stage plan's partition
+count (floored at the default parallelism), which Spark already sized
+from the input bytes and the cores, and records it in the manifest, so
+a resume re-registers the table with the count the files were written
+with. Lineage rows (per-partition counts + wall time) land next to each
+stage.
 
 Resume safety: the manifest records a ``fingerprint`` per stage (caller-
 supplied config/input digest). ``exists`` requires (a) the manifest entry,
@@ -41,7 +46,6 @@ class StageStore:
         base_dir: str,
         table_format: str = "auto",
         fingerprint: str | None = None,
-        bucket_count: int = 64,
     ):
         self.spark = spark
         self.base_dir = base_dir
@@ -51,7 +55,6 @@ class StageStore:
             table_format = "iceberg" if self._iceberg_available() else "parquet"
         self.table_format = table_format
         self.fingerprint = fingerprint
-        self.bucket_count = bucket_count
 
     def _iceberg_available(self) -> bool:
         try:
@@ -123,9 +126,11 @@ class StageStore:
         equi-joins on that key then read co-located, pre-sorted buckets
         and skip the stage-side exchange entirely (the heavy features
         payload — signatures + sketches — is shuffled once at write time
-        instead of once per consuming join). Same-session reads resolve
-        through the catalog table; a resume in a fresh session falls back
-        to the plain parquet path (correct, just unbucketed)."""
+        instead of once per consuming join). The bucket count, and so
+        each consuming join's task count, comes from the data
+        (``_bucket_count``) and is recorded in the manifest. Same-session
+        reads resolve through the catalog table; a resume in a fresh
+        session re-registers it with the manifest's count (``read``)."""
         # ``start``: pass the timestamp from BEFORE the stage's plan was
         # built when the plan construction itself executes work (the
         # scorer's eager localCheckpoint materializes the whole pairwise
@@ -133,6 +138,7 @@ class StageStore:
         # excludes the stage's dominant cost (measured: ~50 s of scoring
         # invisible between 'pairs' and 'edges' at 960k pages).
         start = time.time() if start is None else start
+        bucket_count = None
         if self.table_format == "iceberg":
             writer = df.writeTo(f"ccer.{name}")
             if partition_by:
@@ -140,11 +146,13 @@ class StageStore:
             elif bucket_by or "id" in df.columns:
                 # bucket on the join/shuffle key so stage reads are
                 # co-located for the downstream self-joins
+                bucket_count = self._bucket_count(df)
                 writer = writer.partitionedBy(
-                    F.bucket(self.bucket_count, F.col(bucket_by or "id"))
+                    F.bucket(bucket_count, F.col(bucket_by or "id"))
                 )
             writer.createOrReplace()
         elif bucket_by:
+            bucket_count = self._bucket_count(df)
             tbl = self._table_name(name)
             self.spark.sql(f"DROP TABLE IF EXISTS {tbl}")
             shutil.rmtree(self.path(name), ignore_errors=True)
@@ -152,9 +160,9 @@ class StageStore:
                 # one shuffle to bucket layout now; one file per bucket
                 # (repartition first), sorted within — consuming sort-merge
                 # joins skip both their exchange and their sort
-                df.repartition(self.bucket_count, F.col(bucket_by))
+                df.repartition(bucket_count, F.col(bucket_by))
                 .write.mode("overwrite")
-                .bucketBy(self.bucket_count, bucket_by)
+                .bucketBy(bucket_count, bucket_by)
                 .sortBy(bucket_by)
                 .option("path", self.path(name))
                 .format("parquet")
@@ -177,7 +185,7 @@ class StageStore:
             "format": self.table_format,
             "fingerprint": self.fingerprint,
             "bucket_by": bucket_by,
-            "bucket_count": self.bucket_count if bucket_by else None,
+            "bucket_count": bucket_count,
             "finished_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
         }
         self._save_manifest(manifest)
@@ -188,6 +196,24 @@ class StageStore:
                 indent=2,
             )
         return out
+
+    def _bucket_count(self, df: DataFrame) -> int:
+        """Buckets for a stage = its plan's partition count, floored at the
+        session's default parallelism. Spark sizes a scan's partition
+        count from the input bytes and the cores, so the bucket count
+        follows the data (4 files for a few MB on 4 cores, not a fixed
+        64). The count is read with adaptive execution off: an adaptive
+        plan rooted in a shuffle (``extract_features`` repartitions a
+        small input up to the core count) would run that shuffle's map
+        stage just to report it; the static plan runs no job."""
+        conf = self.spark.conf
+        adaptive = conf.get("spark.sql.adaptive.enabled")
+        conf.set("spark.sql.adaptive.enabled", "false")
+        try:
+            n = df.rdd.getNumPartitions()
+        finally:
+            conf.set("spark.sql.adaptive.enabled", adaptive)
+        return max(n, self.spark.sparkContext.defaultParallelism)
 
     def _lineage_counts(self, name: str, out: DataFrame) -> list[dict]:
         """Per-partition lineage rows. For parquet stages the counts come
@@ -238,7 +264,7 @@ class StageStore:
                 self.spark.sql(
                     f"CREATE TABLE {tbl} ({ddl}) USING parquet "
                     f"CLUSTERED BY ({key}) SORTED BY ({key}) "
-                    f"INTO {meta.get('bucket_count') or self.bucket_count} BUCKETS "
+                    f"INTO {meta['bucket_count']} BUCKETS "
                     f"LOCATION '{self.path(name)}'"
                 )
                 return self.spark.read.table(tbl)

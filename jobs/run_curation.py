@@ -9,7 +9,8 @@ Usage:
 
 Runs pages → docs → exact-dedup → near-dup sweep → quality filter →
 decontaminate → sample, each stage checkpointed (resume skips complete
-stages). Prints one JSON line with the per-stage row funnel and timings.
+stages). Prints one JSON line with the per-stage row funnel, timings and
+the Spark jobs and tasks the run took (``spark_jobs``, ``spark_tasks``).
 """
 
 from __future__ import annotations
@@ -42,7 +43,7 @@ def main() -> None:
     args = parser.parse_args()
 
     from ccer.plans.curation_workflow import CurationConfig, run_curation, stage_counts
-    from ccer.session import get_spark, task_metrics
+    from ccer.session import get_spark, job_counts, task_metrics
     from ccer.sources.pages import synthesize_pages
 
     cfg = CurationConfig(
@@ -75,6 +76,7 @@ def main() -> None:
         "funnel": funnel,
         "elapsed_sec": round(time.time() - t0, 2),
         "workdir": args.workdir,
+        **job_counts(spark),
     }
     if args.metrics:
         summary["task_metrics"] = task_metrics(spark)

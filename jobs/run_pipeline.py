@@ -10,7 +10,8 @@ Usage:
 Iceberg table name when the catalog has Iceberg) with the input_hint
 schema (url, warc_ts, html, text, lang).
 
-Prints a one-line JSON summary: rows, clusters, stage timings, workdir.
+Prints a one-line JSON summary: rows, clusters, stage timings, workdir,
+and the Spark jobs and tasks the run took (``spark_jobs``, ``spark_tasks``).
 """
 
 from __future__ import annotations
@@ -47,7 +48,7 @@ def main() -> None:
     args = parser.parse_args()
 
     from ccer.plans.pipeline import PipelineConfig, run_pipeline
-    from ccer.session import get_spark, task_metrics
+    from ccer.session import get_spark, job_counts, task_metrics
     from ccer.sources.pages import synthesize_pages
 
     ccer_cfg = None
@@ -96,6 +97,7 @@ def main() -> None:
         "elapsed_sec": round(time.time() - t0, 2),
         "stage_sec": timings,
         "workdir": args.workdir,
+        **job_counts(spark),
     }
     if args.metrics:
         summary["task_metrics"] = task_metrics(spark)

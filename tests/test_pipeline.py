@@ -63,6 +63,24 @@ def test_pipeline_resume_equals_cold(spark, corpus, tmp_path_factory):
 
     # manifest lists all stages complete
     assert set(store.completed_stages()) == set(STAGE_ORDER)
+
+    # a fresh session has no catalog table for the bucketed features: the
+    # resume re-registers it with the bucket count derived at write time
+    bucket_count = store._load_manifest()["stages"]["features"]["bucket_count"]
+    assert bucket_count == max(
+        corpus.rdd.getNumPartitions(), spark.sparkContext.defaultParallelism
+    ) != 64
+    tbl = store._table_name("features")
+    spark.sql(f"DROP TABLE {tbl}")
+    store.invalidate_from("edges", STAGE_ORDER)
+    resumed = run_pipeline(spark, pages, cold_dir, resume=True)
+    resumed_rows = sorted((r["rid"], r["cluster_id"]) for r in resumed.collect())
+    assert cold_rows == resumed_rows
+    described = {
+        r["col_name"]: r["data_type"]
+        for r in spark.sql(f"DESCRIBE TABLE EXTENDED {tbl}").collect()
+    }
+    assert described["Num Buckets"] == str(bucket_count)
     shutil.rmtree(cold_dir, ignore_errors=True)
 
 
