@@ -1,19 +1,36 @@
 """YAML pipeline configuration (reference query_db/config.py:5-11 +
 config_sample.yaml shape, generalized to the web-page pipeline).
 
-Column mapping, thresholds, blocking passes, and org-name variants are
-file-configurable; everything has the reference's defaults
+Column mapping, linkage thresholds, org-name variants and every ER
+setting are file-configurable; everything has the reference's defaults
 (constants.py:19-22)."""
 
 from __future__ import annotations
 
+import inspect
 from dataclasses import dataclass, field
 
 import yaml
 
+from ccer.operators.scoring import ScoringConfig
+from ccer.plans.pipeline import PipelineConfig
+
+YAML_ALIASES = {"blocking_passes": "passes", "scorer": "backend"}
+
+
+def _params(cls) -> set[str]:
+    return set(inspect.signature(cls).parameters) - {"scoring"}
+
 
 @dataclass
 class CcerConfig:
+    """Column mapping, linkage and entity settings, plus ``pipeline``, the
+    ER settings. Those have one definition, ``PipelineConfig`` and its
+    ``ScoringConfig``: ``from_yaml`` hands every YAML key that names one
+    of their parameters to that constructor. ``blocking_passes`` and
+    ``scorer`` are the YAML spellings of ``passes`` and ``backend``, YAML
+    lists become tuples, and an unknown key raises ``ValueError``."""
+
     # input column mapping (config_sample.yaml:9-12 analog)
     column_mapping: dict = field(default_factory=dict)
     # linkage (constants.py:21, config_sample.yaml:21)
@@ -24,49 +41,29 @@ class CcerConfig:
     # entity validation (constants.py:22)
     entity_threshold: float = 0.85
     organization_names: list = field(default_factory=list)
-    # ER pipeline
-    blocking_passes: tuple = ("url", "host", "minhash", "simhash")
-    minhash_bands: int = 32
-    num_perm: int = 128
-    block_cap: int = 500
-    hamming_prefilter: int = 26
-    cos_hi: float = 0.80
-    cos_lo: float = 0.55
-    jw_gate: float = 0.85
-    lev_hi: float = 0.90
-    # "hybrid" (JVM cosine tiers + Python kernels for the ambiguous band),
-    # "sql" (zero Python crossings, the --no-udf mode), or "python"
-    scorer: str = "hybrid"
+    # the ER pipeline's settings, scoring included
+    pipeline: PipelineConfig = field(default_factory=PipelineConfig)
 
     @classmethod
     def from_yaml(cls, path: str) -> "CcerConfig":
         with open(path) as fh:
             raw = yaml.safe_load(fh) or {}
-        known = {k: v for k, v in raw.items() if k in cls.__dataclass_fields__}
-        cfg = cls(**known)
-        if isinstance(cfg.blocking_passes, list):
-            cfg.blocking_passes = tuple(cfg.blocking_passes)
-        return cfg
-
-    def scoring_config(self):
-        from ccer.operators.scoring import ScoringConfig
-
-        return ScoringConfig(
-            cos_hi=self.cos_hi, cos_lo=self.cos_lo,
-            jw_gate=self.jw_gate, lev_hi=self.lev_hi,
-            backend=self.scorer,
-        )
-
-    def pipeline_config(self):
-        from ccer.plans.pipeline import PipelineConfig
-
-        return PipelineConfig(
-            num_perm=self.num_perm,
-            minhash_bands=self.minhash_bands,
-            block_cap=self.block_cap,
-            passes=self.blocking_passes,
-            scoring=self.scoring_config(),
-            hamming_prefilter=self.hamming_prefilter,
+        own_keys = set(cls.__dataclass_fields__) - {"pipeline"}
+        own = {k: v for k, v in raw.items() if k in own_keys}
+        er = {
+            YAML_ALIASES.get(k, k): tuple(v) if isinstance(v, list) else v
+            for k, v in raw.items()
+            if k not in own_keys
+        }
+        scoring_keys, pipeline_keys = _params(ScoringConfig), _params(PipelineConfig)
+        unknown = sorted(set(er) - scoring_keys - pipeline_keys)
+        if unknown:
+            raise ValueError(f"unknown config keys in {path}: {unknown}")
+        scoring = {k: v for k, v in er.items() if k in scoring_keys}
+        pipeline = {k: v for k, v in er.items() if k in pipeline_keys}
+        return cls(
+            **own,
+            pipeline=PipelineConfig(**pipeline, scoring=ScoringConfig(**scoring)),
         )
 
     def apply_column_mapping(self, df):

@@ -33,8 +33,6 @@ which carries its own stable rid).
 
 from __future__ import annotations
 
-import time
-
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ccer.operators.cluster import connected_components
@@ -100,19 +98,13 @@ def run_curation(
     if not resume:
         store.invalidate_from("docs", CURATION_STAGE_ORDER)
 
-    def stage(name: str, compute, **kw):
-        if store.exists(name):
-            return store.read(name)
-        start = time.time()
-        return store.write(compute(), name, start=start, **kw)
-
     # JVM-native host normalization (parse_url runs in codegen; the ER
     # plan's Arrow features pass has its own Python url_host — this
     # stage never needs the Python crossing)
     host = F.regexp_replace(
         F.lower(F.parse_url(F.col("url"), F.lit("HOST"))), r"^www\.", ""
     )
-    docs = stage(
+    docs = store.stage(
         "docs",
         lambda: pages.select(
             F.xxhash64("url").alias("doc_id"),
@@ -123,7 +115,7 @@ def run_curation(
         ),
     )
 
-    exact = stage("exact", lambda: exact_dedup(docs))
+    exact = store.stage("exact", lambda: exact_dedup(docs))
 
     def neardup_sweep():
         edges = minhash_neardup_pairs(
@@ -139,7 +131,7 @@ def run_curation(
         )
         return exact.join(losers, "doc_id", "left_anti")
 
-    neardup = stage("neardup", neardup_sweep)
+    neardup = store.stage("neardup", neardup_sweep)
 
     def quality_gate():
         # repetition_signals and c4_filters are pure per-row column
@@ -164,7 +156,7 @@ def run_curation(
             gated = c4_filters(gated).filter(F.col("keep")).select(*keep_cols)
         return gated
 
-    quality = stage("quality", quality_gate)
+    quality = store.stage("quality", quality_gate)
 
     if eval_docs is not None:
         ev = eval_docs
@@ -179,7 +171,7 @@ def run_curation(
             flagged = decontaminate(quality, ev, n=cfg.decontam_n).select("doc_id")
             return quality.join(flagged, "doc_id", "left_anti")
 
-        decontam = stage("decontam", decontam_stage)
+        decontam = store.stage("decontam", decontam_stage)
     else:
         decontam = quality
 
@@ -193,7 +185,7 @@ def run_curation(
                 seed=cfg.sample_seed,
             )
 
-        return stage("sample", sample_stage)
+        return store.stage("sample", sample_stage)
     return decontam
 
 

@@ -1818,21 +1818,14 @@ def pages_from_documents(
 
 
 def q_er_cluster_documents(spark, sf_dir):
-    """Flagship: full blocking→scoring→CC over pages derived from the
-    documents table (no checkpointing — pure operator composition)."""
-    from ccer.operators.blocking import block_keys, candidate_pairs, salt_oversized_blocks
-    from ccer.operators.cluster import assign_clusters, connected_components
-    from ccer.operators.features import extract_features
-    from ccer.operators.scoring import match_edges, score_pairs
+    """Flagship: the ER chain (``pipeline.er_chain``, default config) over
+    pages derived from the documents table, run through the lazy stage
+    hook — no checkpointing, so ``simhash_bits="auto"`` takes its 16-bit
+    floor."""
+    from ccer.plans.pipeline import LAZY_STAGES, PipelineConfig, er_chain
 
     docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 1500)
-    pages = pages_from_documents(docs)
-    feats = extract_features(pages)
-    blocks = salt_oversized_blocks(block_keys(feats), block_cap=500)
-    pairs = candidate_pairs(blocks)
-    edges = match_edges(score_pairs(pairs, feats))
-    comps = connected_components(edges)
-    clusters = assign_clusters(feats, comps)
+    clusters = er_chain(pages_from_documents(docs), PipelineConfig(), LAZY_STAGES)
     return (
         clusters.groupBy("cluster_id")
         .agg(F.count(F.lit(1)).alias("n_members"), F.min("url").alias("canonical_url"))
@@ -1898,26 +1891,22 @@ def q_er_cluster_invariants(spark, sf_dir):
     - n_split_groups = 0: no base/variant pair is split across clusters
       (the pairwise-F1-relevant transitivity invariant);
     - n_label_violations = 0: cluster_id is the minimum member id
-      (large-star/small-star min-label convergence, cluster.py:68-90).
+      (large-star/small-star min-label convergence, cluster.py).
+
+    The clusters come from the ER chain (``pipeline.er_chain``, default
+    config) run through the lazy stage hook, as in
+    ``q_er_cluster_documents``.
     """
-    from ccer.operators.blocking import block_keys, candidate_pairs, salt_oversized_blocks
-    from ccer.operators.cluster import assign_clusters, connected_components
-    from ccer.operators.features import extract_features
-    from ccer.operators.scoring import match_edges, score_pairs
+    from ccer.plans.pipeline import LAZY_STAGES, PipelineConfig, er_chain
 
     docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 1500)
-    pages = pages_from_documents(docs)
-    feats = extract_features(pages)
-    blocks = salt_oversized_blocks(block_keys(feats), block_cap=500)
-    pairs = candidate_pairs(blocks)
-    edges = match_edges(score_pairs(pairs, feats))
-    comps = connected_components(edges)
+    clusters = er_chain(pages_from_documents(docs), PipelineConfig(), LAZY_STAGES)
     # the three invariant aggregates below each consume `clusters`; the
     # internal scoring/CC localCheckpoints already bound most of the
     # re-execution, but without this the features+assign subtree still
     # runs once per branch — modest at sf0.01 (~1 s), O(corpus scans) at
     # scale, so materialize the final assignment once
-    clusters = assign_clusters(feats, comps).localCheckpoint(eager=True)
+    clusters = clusters.localCheckpoint(eager=True)
 
     page_key = F.regexp_replace("url", r"\?.*$", "")
     groups = (

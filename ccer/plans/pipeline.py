@@ -1,5 +1,13 @@
 """The flagship plan: pages → features → blocks → pairs → edges →
-components → clusters, each stage checkpointed and resumable.
+components → clusters. The chain is defined once, in ``er_chain``;
+every consumer runs it through a stage hook:
+
+- ``run_pipeline`` passes a ``StageStore``, whose ``stage`` reuses a
+  complete checkpoint or writes the stage, and whose ``rows`` reads a
+  written stage's row count from the manifest;
+- ``q_er_cluster_documents`` and ``q_er_cluster_invariants`` pass
+  ``LAZY_STAGES``, the identity hook: each stage is its unmaterialized
+  plan and reports no row count.
 
 Reference lifecycle analog: FileProcessor.run (query_db/workflows.py:56-100)
 — prescan ids → linkage → discovery → combine — with every phase landing
@@ -18,9 +26,9 @@ kill the job after any stage and the next run does not repeat it.
 
 from __future__ import annotations
 
-import time
+from types import SimpleNamespace
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession
 
 from ccer.operators.blocking import block_keys, candidate_pairs, salt_oversized_blocks
 from ccer.operators.cluster import assign_clusters, connected_components
@@ -77,33 +85,24 @@ class PipelineConfig:
         return hashlib.sha256(payload.encode()).hexdigest()[:16]
 
 
-def run_pipeline(
-    spark: SparkSession,
-    pages: DataFrame,
-    workdir: str,
-    config: PipelineConfig | None = None,
-    resume: bool = True,
-) -> DataFrame:
-    """Run (or resume) the full ER pipeline; returns the clusters table
-    (rid, id, url, warc_ts, lang, cluster_id, ...)."""
-    cfg = config or PipelineConfig()
-    store = StageStore(spark, workdir, fingerprint=cfg.fingerprint())
-    if not resume:
-        store.invalidate_from("features", STAGE_ORDER)
+# the identity stage hook: each stage is its unmaterialized plan, and no
+# stage has a known row count
+LAZY_STAGES = SimpleNamespace(
+    stage=lambda name, compute, **write_kwargs: compute(),
+    rows=lambda name: None,
+)
 
-    def stage(name: str, compute, **write_kwargs):
-        if store.exists(name):
-            return store.read(name)
-        # time from BEFORE the plan is built: the scoring stage's eager
-        # localCheckpoint executes the pairwise crossing during compute(),
-        # and duration_sec must own that cost (catalog.write docstring)
-        start = time.time()
-        return store.write(compute(), name, start=start, **write_kwargs)
 
+def er_chain(pages: DataFrame, cfg: PipelineConfig, stages) -> DataFrame:
+    """The ER stage chain; returns the clusters table (rid, id, url,
+    warc_ts, lang, url_norm, host, n_tokens, cluster_id). ``stages`` is
+    the hook: ``stages.stage(name, compute, **write_kwargs)`` returns the
+    stage's DataFrame, ``stages.rows(name)`` a written stage's row count
+    or None. The operators are called through this module's globals."""
     # features is bucketed on id: the scoring stage joins it TWICE (id_a,
     # id_b) and cluster assignment once more — bucketing pays one shuffle
     # at write time and deletes the features-side exchange from all three
-    features = stage(
+    features = stages.stage(
         "features",
         lambda: extract_features(
             pages,
@@ -121,12 +120,13 @@ def run_pipeline(
     # scales the prefix so buckets hold ~8 rows: the pass stays a
     # bounded-cost secondary net at any corpus size, while the primary
     # nets (url, MinHash bands) have corpus-proportional key spaces.
+    # Without a known count (the lazy hook) the 16-bit floor applies.
     if cfg.simhash_bits == "auto":
-        n_rows = store._load_manifest()["stages"]["features"].get("rows") or 1
+        n_rows = stages.rows("features") or 1
         simhash_bits = min(40, max(16, (max(1, n_rows // 8)).bit_length()))
     else:
         simhash_bits = cfg.simhash_bits
-    blocks = stage(
+    blocks = stages.stage(
         "blocks",
         lambda: salt_oversized_blocks(
             block_keys(
@@ -141,7 +141,7 @@ def run_pipeline(
             salt_bits_max=cfg.salt_bits_max,
         ),
     )
-    pairs = stage(
+    pairs = stages.stage(
         "pairs",
         lambda: candidate_pairs(
             blocks,
@@ -149,10 +149,10 @@ def run_pipeline(
             host_hamming_prefilter=cfg.host_hamming_prefilter,
         ),
     )
-    edges = stage(
+    edges = stages.stage(
         "edges", lambda: match_edges(score_pairs(pairs, features, cfg.scoring))
     )
-    components = stage("components", lambda: connected_components(edges))
+    components = stages.stage("components", lambda: connected_components(edges))
     # the clusters table is the pipeline's OUTPUT — keep it slim (the
     # signature/sketch columns live in the features checkpoint; rewriting
     # them here would double the heaviest write for no reader)
@@ -160,35 +160,23 @@ def run_pipeline(
         "rid", "id", "url", "warc_ts", "lang", "url_norm", "host",
         "n_tokens", "cluster_id",
     ]
-    clusters = stage(
+    return stages.stage(
         "clusters",
         lambda: assign_clusters(features, components).select(*slim),
     )
-    return clusters
 
 
-def cluster_pages(
+def run_pipeline(
     spark: SparkSession,
     pages: DataFrame,
     workdir: str,
     config: PipelineConfig | None = None,
+    resume: bool = True,
 ) -> DataFrame:
-    """Convenience: fresh full run (no resume)."""
-    return run_pipeline(spark, pages, workdir, config=config, resume=False)
-
-
-def predicted_pairs_from_clusters(clusters: DataFrame) -> DataFrame:
-    """Intra-cluster record pairs (rid_a < rid_b) — the pairwise view used
-    for F1 evaluation against labeled pairs."""
-    a = clusters.select(
-        F.col("cluster_id").alias("c"), F.col("rid").alias("rid_a")
-    )
-    b = clusters.select(
-        F.col("cluster_id").alias("c"), F.col("rid").alias("rid_b")
-    )
-    return (
-        a.join(b, "c")
-        .filter(F.col("rid_a") < F.col("rid_b"))
-        .select("rid_a", "rid_b")
-        .distinct()
-    )
+    """Run (or resume) the full ER pipeline through the stage store;
+    returns the clusters table of ``er_chain``."""
+    cfg = config or PipelineConfig()
+    store = StageStore(spark, workdir, fingerprint=cfg.fingerprint())
+    if not resume:
+        store.invalidate_from("features", STAGE_ORDER)
+    return er_chain(pages, cfg, store)

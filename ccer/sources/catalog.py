@@ -110,6 +110,22 @@ class StageStore:
             return False
         return True
 
+    def rows(self, name: str) -> int | None:
+        """The row count ``write`` recorded for a stage (None when it was
+        never written), read from the manifest without a Spark job."""
+        return self._load_manifest()["stages"].get(name, {}).get("rows")
+
+    def stage(self, name: str, compute, **write_kwargs) -> DataFrame:
+        """The stage runner: reuse ``name`` when it is complete, otherwise
+        build its plan with ``compute()`` and ``write`` it. The clock
+        starts before ``compute()``: the scorer's eager localCheckpoint
+        runs the pairwise crossing while the plan is built, and
+        ``duration_sec`` must own that cost (see ``write``)."""
+        if self.exists(name):
+            return self.read(name)
+        start = time.time()
+        return self.write(compute(), name, start=start, **write_kwargs)
+
     def write(
         self,
         df: DataFrame,

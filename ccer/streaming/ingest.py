@@ -25,7 +25,6 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from ccer.operators.blocking import (
     block_keys,
     block_size_profile,
-    candidate_pairs,
     merge_profiles,
     salt_oversized_blocks,
 )

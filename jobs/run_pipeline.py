@@ -3,12 +3,15 @@
 Usage:
     spark-submit --py-files ccer.zip jobs/run_pipeline.py \
         --input /path/to/pages_parquet_or_"synth:N" \
-        --workdir /path/to/checkpoints [--resume] [--cores 32]
+        --workdir /path/to/checkpoints [--resume] [--cores 32] \
+        [--config ccer.yaml] [--no-udf] [--metrics]
 
 ``--input synth:N`` generates the deterministic N-row synthetic corpus
 (no external data); otherwise the argument is a parquet path (or an
 Iceberg table name when the catalog has Iceberg) with the input_hint
-schema (url, warc_ts, html, text, lang).
+schema (url, warc_ts, html, text, lang). ``--config`` is a YAML
+``ccer.config.CcerConfig``: a column mapping plus any ER setting
+(``block_cap: 5``, ``blocking_passes``, ``scorer``, ...).
 
 Prints a one-line JSON summary: rows, clusters, stage timings, workdir,
 and the Spark jobs and tasks the run took (``spark_jobs``, ``spark_tasks``).
@@ -31,7 +34,6 @@ def main() -> None:
     parser.add_argument("--workdir", required=True)
     parser.add_argument("--resume", action="store_true")
     parser.add_argument("--cores", type=int, default=None)
-    parser.add_argument("--block-cap", type=int, default=500)
     parser.add_argument(
         "--no-udf",
         action="store_true",
@@ -47,20 +49,15 @@ def main() -> None:
     )
     args = parser.parse_args()
 
-    from ccer.plans.pipeline import PipelineConfig, run_pipeline
+    from ccer.config import CcerConfig
+    from ccer.plans.curation_workflow import stage_counts
+    from ccer.plans.pipeline import run_pipeline
     from ccer.session import get_spark, job_counts, task_metrics
     from ccer.sources.pages import synthesize_pages
 
-    ccer_cfg = None
-    if args.config:
-        from ccer.config import CcerConfig
-
-        ccer_cfg = CcerConfig.from_yaml(args.config)
-        pipeline_config = ccer_cfg.pipeline_config()
-    else:
-        pipeline_config = PipelineConfig(block_cap=args.block_cap)
+    ccer_cfg = CcerConfig.from_yaml(args.config) if args.config else CcerConfig()
     if args.no_udf:
-        pipeline_config.scoring.backend = "sql"
+        ccer_cfg.pipeline.scoring.backend = "sql"
 
     extra_conf = {"spark.ui.enabled": "true"} if args.metrics else None
     spark = get_spark(app_name="ccer-pipeline", cores=args.cores, extra_conf=extra_conf)
@@ -73,23 +70,19 @@ def main() -> None:
         pages = spark.read.table(args.input.split(":", 1)[1])
     else:
         pages = spark.read.parquet(args.input)
-    if ccer_cfg is not None:
-        pages = ccer_cfg.apply_column_mapping(pages)
+    pages = ccer_cfg.apply_column_mapping(pages)
 
     clusters = run_pipeline(
         spark,
         pages,
         args.workdir,
-        config=pipeline_config,
+        config=ccer_cfg.pipeline,
         resume=args.resume,
     )
     n_rows = clusters.count()
     n_clusters = clusters.select("cluster_id").distinct().count()
-    manifest_path = os.path.join(args.workdir, "_manifest.json")
-    with open(manifest_path) as fh:
-        manifest = json.load(fh)
     timings = {
-        name: meta.get("duration_sec") for name, meta in manifest["stages"].items()
+        name: meta["duration_sec"] for name, meta in stage_counts(args.workdir).items()
     }
     summary = {
         "rows": n_rows,

@@ -238,17 +238,25 @@ def test_multimodal_plumbing(spark):
 
 
 def test_yaml_scorer_backend(tmp_path):
-    """YAML `scorer:` selects the scoring backend; --no-udf maps to sql."""
+    """YAML `scorer:` selects the scoring backend; --no-udf maps to sql.
+    Every PipelineConfig / ScoringConfig parameter is settable from YAML,
+    and YAML lists arrive as tuples."""
     from ccer.config import CcerConfig
 
     p = tmp_path / "cfg.yaml"
-    p.write_text("scorer: sql\nblock_cap: 99\n")
+    p.write_text(
+        "scorer: sql\nblock_cap: 99\ntext_cap: 1000\n"
+        "host_hamming_prefilter: 12\nlev_band: [0.4, 0.8]\n"
+    )
     cfg = CcerConfig.from_yaml(str(p))
-    pc = cfg.pipeline_config()
+    pc = cfg.pipeline
     assert pc.scoring.backend == "sql"
     assert pc.block_cap == 99
+    assert pc.text_cap == 1000
+    assert pc.host_hamming_prefilter == 12
+    assert pc.scoring.lev_band == (0.4, 0.8)
     # default is the hybrid backend
-    assert CcerConfig().pipeline_config().scoring.backend == "hybrid"
+    assert CcerConfig().pipeline.scoring.backend == "hybrid"
 
 
 def test_repetition_and_c4(spark):

@@ -7,7 +7,13 @@ import pytest
 from pyspark.sql import functions as F
 
 from ccer.plans.evaluate import pairwise_scores
-from ccer.plans.pipeline import PipelineConfig, STAGE_ORDER, run_pipeline
+from ccer.plans.pipeline import (
+    LAZY_STAGES,
+    PipelineConfig,
+    STAGE_ORDER,
+    er_chain,
+    run_pipeline,
+)
 from ccer.sources.catalog import StageStore
 from ccer.sources.pages import synthesize_pages
 
@@ -82,6 +88,21 @@ def test_pipeline_resume_equals_cold(spark, corpus, tmp_path_factory):
     }
     assert described["Num Buckets"] == str(bucket_count)
     shutil.rmtree(cold_dir, ignore_errors=True)
+
+
+def test_lazy_chain_equals_run_pipeline(spark, corpus, tmp_path_factory):
+    """The one ER chain through the identity hook (the query registry's
+    path) labels every record exactly as the staged run does."""
+    workdir = str(tmp_path_factory.mktemp("lazy"))
+    pages = corpus.drop("true_cluster_id")
+    staged = run_pipeline(spark, pages, workdir, resume=False)
+    lazy = er_chain(pages, PipelineConfig(), LAZY_STAGES)
+    assert lazy.columns == staged.columns
+    staged_rows = sorted((r["rid"], r["cluster_id"]) for r in staged.collect())
+    lazy_rows = sorted((r["rid"], r["cluster_id"]) for r in lazy.collect())
+    assert len(lazy_rows) == corpus.count()
+    assert lazy_rows == staged_rows
+    shutil.rmtree(workdir, ignore_errors=True)
 
 
 def test_skew_salting_bounds_block_size(spark, corpus, tmp_path_factory):

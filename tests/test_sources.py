@@ -129,6 +129,13 @@ organization_names: [EMBL]
     )
     cfg = CcerConfig.from_yaml(str(p))
     assert cfg.name_threshold == 0.9
-    assert cfg.blocking_passes == ("url", "minhash")
-    assert cfg.pipeline_config().passes == ("url", "minhash")
-    assert cfg.scoring_config().cos_hi == 0.80
+    assert cfg.pipeline.passes == ("url", "minhash")
+    assert cfg.pipeline.scoring.cos_hi == 0.80
+
+
+def test_config_yaml_rejects_unknown_keys(tmp_path):
+    """A misspelt key fails loudly instead of running with the default."""
+    p = tmp_path / "cfg.yaml"
+    p.write_text("block_cpa: 99\nscorer: sql\nname_threshold: 0.9\n")
+    with pytest.raises(ValueError, match=r"\['block_cpa'\]"):
+        CcerConfig.from_yaml(str(p))
