@@ -8,7 +8,7 @@ Here the block keys are content-derived:
 
 - pass 1 ``url``  — exact normalized-url key (catches re-crawls free)
 - pass 2 ``host`` — normalized host (cheap same-site signal, weak)
-- pass 3 ``minhash`` — LSH band keys over the stored MinHash signature
+- pass 3 ``minhash`` — LSH band keys (the features table's ``bands``)
 - pass 4 ``simhash`` — rotated 16-bit fingerprint prefixes
 
 Block keys are 64-bit ``xxhash64`` values, NOT strings: every downstream
@@ -19,8 +19,8 @@ collision merely merges two unrelated blocks (extra candidates that the
 scorer rejects), never loses a pair.
 
 Everything here is JVM-side column algebra over the features table — the
-Python work (signatures) happened once in the features pass, so the
-whole stage is whole-stage-codegen'd.
+Python work (signatures, band keys) happened once in the features pass,
+so the whole stage is whole-stage-codegen'd.
 
 Skew (north rule "salted, skew-aware block partitions"): a block larger
 than its cap would cost O(n²) in pair generation — one mega-host block of
@@ -53,7 +53,9 @@ def block_keys(
     ``num_perm`` must match the signature length produced by the features
     pass and be a multiple of ``minhash_bands`` — otherwise band slices
     would run past the signature end (empty-array band keys collapse
-    every record into one degenerate mega-block per band).
+    every record into one degenerate mega-block per band). A table with
+    ``bands`` must carry exactly ``minhash_bands`` keys per row; the
+    MinHash pass raises on any row that does not.
     """
     if num_perm % minhash_bands != 0:
         raise ValueError(
@@ -88,38 +90,41 @@ def block_keys(
             )
         )
     if "minhash" in passes:
-        # the features pass precomputes the default banding's keys in its
-        # vectorized Arrow crossing (features.py FEATURE_BANDS), VALUE-
-        # identical to the JVM expression below (spark_minhash_band_keys
-        # is a verified bit-exact xxhash64 replica) — consuming them here
-        # removes 32 slice+hash calls per record from this explode
-        # (~115 executor-CPU-s per corpus pass at 242k pages). Any other
-        # banding, or a features table written before the column existed,
-        # falls back to the JVM path with the SAME key values, so mixed
-        # provenance (resume, incremental batches) stays consistent.
-        from ccer.operators.features import FEATURE_BANDS
-
-        precomputed = (
-            minhash_bands == FEATURE_BANDS
-            and num_perm % FEATURE_BANDS == 0
-            and "bands" in features.columns
-        )
-        for band in range(minhash_bands):
-            if precomputed:
-                key = F.coalesce(
-                    F.col("bands").getItem(band),
-                    F.xxhash64(
-                        F.lit("m"),
-                        F.lit(band),
-                        F.slice("sig", band * rows_per_band + 1, rows_per_band),
-                    ),
+        # one band-key source per table: the ER features pass emits the
+        # configured banding's keys in its vectorized Arrow crossing
+        # (``bands``, VALUE-identical to the JVM slice+hash below —
+        # spark_minhash_band_keys is a verified bit-exact xxhash64
+        # replica), which removes 32 slice+hash calls per record from this
+        # explode (~115 executor-CPU-s per corpus pass at 242k pages).
+        # Tables without ``bands`` (dedup's ``text_signatures``) carry the
+        # signature and take the slice+hash path.
+        if "bands" in features.columns:
+            # a table written for another banding (a direct call with a
+            # different ``minhash_bands``, or a resumed features stage)
+            # fails the row instead of emitting keys of the wrong banding:
+            # band 0's key is in every row's entry array, so the check
+            # runs once per row inside this projection, with no extra job
+            width = F.coalesce(F.size("bands"), F.lit(-1))
+            msg = (
+                f"features bands do not match minhash_bands={minhash_bands} "
+                "(rebuild the features stage with this banding); keys in row: "
+            )
+            wrong_width = F.raise_error(F.concat(F.lit(msg), width.cast("string")))
+            keys = [
+                F.when(width != minhash_bands, wrong_width).otherwise(
+                    F.col("bands").getItem(0)
                 )
-            else:
-                key = F.xxhash64(
+            ] + [F.col("bands").getItem(band) for band in range(1, minhash_bands)]
+        else:
+            keys = [
+                F.xxhash64(
                     F.lit("m"),
                     F.lit(band),
                     F.slice("sig", band * rows_per_band + 1, rows_per_band),
                 )
+                for band in range(minhash_bands)
+            ]
+        for key in keys:
             entries.append(
                 F.struct(
                     key.alias("block_key"),

@@ -117,15 +117,17 @@ def text_signatures(
 
     Each text goes through the features pass's per-document step
     (``shingle_signature``) over its full normalized text, so a text
-    shorter than the features ``text_cap`` gets the same ``sig`` and
-    ``simhash`` as its ER features row. Signatures are stored 32-bit
-    (top half of each 64-bit min-hash, order-preserving truncation — the
-    same convention as the ER features table and datasketch's default
-    precision). Halves every downstream signature byte: the band-key
-    slices, the pair-verify join-backs, and the localCheckpointed live
-    set in the curation funnel / streaming state. Cost: an extra 2^-32
-    per-position collision probability in the estimated-Jaccard match
-    count — ≪ the sketch's own 1/sqrt(num_perm) noise.
+    shorter than the features ``text_cap`` gets the signature its ER
+    features row derived ``bands`` from (``block_keys`` over this table
+    emits the same MinHash keys as over the features table) and the same
+    ``simhash``. Signatures are stored 32-bit (top half of each 64-bit
+    min-hash, order-preserving truncation — the convention of the ER
+    features pass and datasketch's default precision). Halves every
+    downstream signature byte: the band-key slices, the pair-verify
+    join-backs, and the localCheckpointed live set in the curation funnel
+    / streaming state. Cost: an extra 2^-32 per-position collision
+    probability in the estimated-Jaccard match count — ≪ the sketch's own
+    1/sqrt(num_perm) noise.
     """
 
     target = docs.sparkSession.sparkContext.defaultParallelism

@@ -1,7 +1,7 @@
 """Per-record feature extraction — ONE Arrow pass over the page table.
 
 Everything the downstream stages need (normalized url/host, capped
-normalized text, title, MinHash signature, SimHash fingerprint, stable
+normalized text, title, MinHash band keys, SimHash fingerprint, stable
 63-bit record id) is computed in a single ``mapInPandas`` crossing so the
 text is normalized exactly once (the byte-identical invariant) and no
 later stage re-enters Python for per-record work.
@@ -18,11 +18,15 @@ byte here rides it once per consuming join):
 - the normalized text is NOT carried (its 64-bit hash is, for the
   byte-identical-extraction check); the scorer needs only the capped
   ``text_prefix``;
-- the MinHash signature and the KMV overlap sketch store 32-bit values
-  (the order-preserving top half of each 64-bit hash): position-equality
-  and bottom-k semantics are preserved with collision probability 2^-32
-  per comparison — immaterial next to the estimators' own variance —
-  at half the bytes.
+- the MinHash signature is NOT carried: its only reader is blocking, so
+  the pass emits the LSH band keys of the configured banding (``bands``)
+  and the signature stays a local of the Arrow pass;
+- the KMV overlap sketch stores 32-bit values (the order-preserving top
+  half of each 64-bit hash): bottom-k semantics are preserved with
+  collision probability 2^-32 per comparison — immaterial next to the
+  estimator's own variance — at half the bytes. The band keys hash the
+  same 32-bit truncation of the signature, so they equal the slice+hash
+  keys over dedup's stored 32-bit signatures.
 """
 
 from __future__ import annotations
@@ -37,15 +41,13 @@ from ccer.functions.normalize import html_to_text, normalize_text, normalize_url
 FEATURES_SCHEMA = (
     "rid string, id long, url string, warc_ts timestamp, lang string, "
     "url_norm string, host string, title_norm string, text_norm_hash long, "
-    "text_prefix string, n_tokens int, n_sh int, sig array<int>, "
+    "text_prefix string, n_tokens int, n_sh int, "
     "simhash long, sh array<int>, bands array<long>"
 )
-
-# the precomputed LSH band-key layout carried in ``bands`` (see
-# spark_minhash_band_keys): block_keys consumes it only when asked for
-# exactly this banding, else it falls back to the value-identical JVM
-# slice+hash path
-FEATURE_BANDS = 32
+# ``bands``: the ``minhash_bands`` LSH band keys of the row's 32-bit
+# MinHash signature, value-identical to the JVM slice+hash over that
+# signature (spark_minhash_band_keys) — the one band-key source
+# ``block_keys`` reads for this table
 
 
 def stable_id(rid: str) -> int:
@@ -67,13 +69,23 @@ def extract_features(
     title_cap: int = 120,
     prefix_cap: int = 128,
     sketch_k: int = 64,
+    minhash_bands: int = 32,
 ) -> DataFrame:
     """(url, warc_ts, html?, text?, lang) → features table.
 
     ``text`` is taken from the text column when present, else extracted
-    deterministically from ``html`` via the canonical kernel.
+    deterministically from ``html`` via the canonical kernel. ``bands``
+    holds ``minhash_bands`` keys per row, so ``num_perm`` must be a
+    multiple of ``minhash_bands``.
     """
     from pyspark.sql import functions as F
+
+    if num_perm % minhash_bands != 0:
+        raise ValueError(
+            f"num_perm ({num_perm}) must be a multiple of "
+            f"minhash_bands ({minhash_bands})"
+        )
+    rows_per_band = num_perm // minhash_bands
 
     cols = pages.columns
     has_text = "text" in cols
@@ -116,16 +128,17 @@ def extract_features(
             langs = pdf["lang"].tolist() if "lang" in pdf else [None] * n
             texts = pdf["text"].tolist() if has_text else [None] * n
             htmls = pdf["html"].tolist() if has_html else [None] * n
-            # column-wise output buffers; signature/sketch columns stay
+            # column-wise output buffers; sketch/band-key columns stay
             # numpy (Arrow consumes ndarray cells directly — boxing the
-            # 384 ints per row into Python lists would dominate the pass)
+            # ints per row into Python lists would dominate the pass)
             rids, ids2 = [], np.empty(n, dtype=np.int64)
             url_norms, hosts, title_norms = [], [], []
             text_prefixes = []
             text_norm_hashes = np.empty(n, dtype=np.int64)
             n_tokens = np.empty(n, dtype=np.int32)
             n_shs = np.empty(n, dtype=np.int32)
-            sigs, shs = [], []
+            sig32 = np.empty((n, num_perm), dtype=np.int32)
+            shs = []
             fps = np.empty(n, dtype=np.int64)
             for i in range(n):
                 url = urls[i] or ""
@@ -156,8 +169,7 @@ def extract_features(
                 n_tokens[i] = len(words)
                 # 32-bit hash space for signature + sketch: the top half
                 # of each 64-bit hash (order-preserving truncation)
-                sig32 = (sig >> np.uint64(32)).astype(np.uint32).view(np.int32)
-                sigs.append(sig32)
+                sig32[i] = (sig >> np.uint64(32)).astype(np.uint32).view(np.int32)
                 # bottom-k (KMV) sketch over the 32-bit hashes — unique
                 # ascending, so the scorer's set ops can assume_unique
                 h32 = np.unique((sh >> np.uint64(32)).astype(np.uint32))
@@ -167,13 +179,7 @@ def extract_features(
             # batch-vectorized LSH band keys (guide §4.2: hand the whole
             # batch to numpy): value-identical to the JVM slice+hash the
             # blocking stage would otherwise run per row per band
-            if n and num_perm % FEATURE_BANDS == 0:
-                band_mat = spark_minhash_band_keys(
-                    np.stack(sigs), FEATURE_BANDS, num_perm // FEATURE_BANDS
-                )
-                bands_col = list(band_mat)
-            else:
-                bands_col = [None] * n
+            bands_col = list(spark_minhash_band_keys(sig32, minhash_bands, rows_per_band))
             yield pd.DataFrame(
                 {
                     "rid": rids,
@@ -188,7 +194,6 @@ def extract_features(
                     "text_prefix": text_prefixes,
                     "n_tokens": n_tokens,
                     "n_sh": n_shs,
-                    "sig": sigs,
                     "simhash": fps,
                     "sh": shs,
                     "bands": bands_col,

@@ -110,6 +110,24 @@ def _set_cosine_batch(
     return _cosine_from_mats(A, ska, B, skb, na, nb, k)
 
 
+def _list_values_offsets(arr):
+    """An Arrow ``ListArray`` of int32 → (backing values as int32, int64
+    offsets into them), the inputs of ``_mat_from_flat``. ``arr.values``
+    ignores the array's slice window while ``arr.offsets`` is already
+    windowed and absolute, so the pair addresses the right values for a
+    sliced array with no re-basing. A null entry may still own a
+    non-empty offset span (a non-canonical producer), which no gather can
+    tell apart from a real sketch — so any null raises."""
+    if arr.null_count:
+        raise ValueError(
+            f"sketch list column has {arr.null_count} null entries; "
+            "every scored row must carry a sketch"
+        )
+    values = arr.values.to_numpy(zero_copy_only=False)
+    offs = arr.offsets.to_numpy(zero_copy_only=False).astype(np.int64)
+    return np.ascontiguousarray(values, dtype=np.int32), offs
+
+
 def _mat_from_flat(flat_i32, offs, rows, pad_base, k):
     """Padded (len(rows), k) int64 sketch matrix gathered straight from
     an Arrow ListArray's flat values + offsets — value-identical to
@@ -393,21 +411,13 @@ def _numpy_cosine_pass(slim: DataFrame, sketch_k: int) -> DataFrame:
             def np_col(name):
                 return cols[name].to_numpy(zero_copy_only=False)
 
-            def flat_offs(name):
-                arr = cols[name]
-                # flatten() honors the array's own offset window; offsets
-                # re-based so index 0 addresses the flattened values
-                flat = arr.flatten().to_numpy(zero_copy_only=False)
-                offs = arr.offsets.to_numpy(zero_copy_only=False).astype(np.int64)
-                return np.ascontiguousarray(flat, dtype=np.int32), offs - offs[0]
-
             n = rb.num_rows
             same_url = np_col("same_url").astype(bool, copy=False)
             s_set = np.zeros(n)
             rest = np.flatnonzero(~same_url)
             if rest.size:
-                fa, oa = flat_offs("sh_a")
-                fb, ob = flat_offs("sh_b")
+                fa, oa = _list_values_offsets(cols["sh_a"])
+                fb, ob = _list_values_offsets(cols["sh_b"])
                 A, ska = _mat_from_flat(fa, oa, rest, np.int64(1) << 33, sketch_k)
                 B, skb = _mat_from_flat(fb, ob, rest, np.int64(1) << 34, sketch_k)
                 s_set[rest] = _cosine_from_mats(

@@ -13,7 +13,7 @@ Reference lifecycle analog: FileProcessor.run (query_db/workflows.py:56-100)
 — prescan ids → linkage → discovery → combine — with every phase landing
 in a stage table. Our stages:
 
-1. ``features``    one Arrow pass (normalize, signatures, stable ids)
+1. ``features``    one Arrow pass (normalize, band keys, sketches, stable ids)
 2. ``blocks``      multi-pass block keys, salted for skew
 3. ``pairs``       in-block pair generation, distinct candidate pairs
 4. ``edges``       Arrow-batched pairwise scoring → match edges
@@ -109,6 +109,7 @@ def er_chain(pages: DataFrame, cfg: PipelineConfig, stages) -> DataFrame:
             num_perm=cfg.num_perm,
             shingle_k=cfg.shingle_k,
             text_cap=cfg.text_cap,
+            minhash_bands=cfg.minhash_bands,
         ),
         bucket_by="id",
     )
@@ -154,7 +155,7 @@ def er_chain(pages: DataFrame, cfg: PipelineConfig, stages) -> DataFrame:
     )
     components = stages.stage("components", lambda: connected_components(edges))
     # the clusters table is the pipeline's OUTPUT — keep it slim (the
-    # signature/sketch columns live in the features checkpoint; rewriting
+    # band-key/sketch columns live in the features checkpoint; rewriting
     # them here would double the heaviest write for no reader)
     slim = [
         "rid", "id", "url", "warc_ts", "lang", "url_norm", "host",

@@ -141,7 +141,7 @@ class StageStore:
         ``bucket_by``: hash-bucket the stage on a join key. Downstream
         equi-joins on that key then read co-located, pre-sorted buckets
         and skip the stage-side exchange entirely (the heavy features
-        payload — signatures + sketches — is shuffled once at write time
+        payload — band keys + sketches — is shuffled once at write time
         instead of once per consuming join). The bucket count, and so
         each consuming join's task count, comes from the data
         (``_bucket_count``) and is recorded in the manifest. Same-session

@@ -102,14 +102,20 @@ def test_simhash_neardup_finds_planted(spark, corpus):
 
 
 def test_dedup_reads_er_signature_and_band_keys(spark, monkeypatch):
-    """The dedup family is the ER near-dup core, not a copy of it: on
-    texts shorter than the features text_cap, ``text_signatures`` gives
-    every text its ER features ``sig``/``simhash``, and the MinHash block
-    keys ``minhash_neardup_pairs`` generates pairs from are exactly
-    ``block_keys`` over the features table."""
+    """The dedup family is the ER near-dup core, not a copy of it:
+    ``text_signatures`` gives every text the ``shingle_signature`` of its
+    normalized words (the features pass's per-document step) and, on
+    texts shorter than the features text_cap, its ER features
+    ``simhash``; the MinHash block keys ``minhash_neardup_pairs``
+    generates pairs from are exactly ``block_keys`` over the features
+    table's ``bands``."""
     import datetime
 
+    import numpy as np
+
     import ccer.operators.dedup as dedup
+    from ccer.functions.hashing import shingle_signature
+    from ccer.functions.normalize import normalize_text
     from ccer.operators.blocking import block_keys
     from ccer.operators.features import extract_features
 
@@ -132,10 +138,23 @@ def test_dedup_reads_er_signature_and_band_keys(spark, monkeypatch):
         "doc_id long, text string",
     )
 
-    def by_id(df):
-        return {r["id"]: (list(r["sig"]), r["simhash"]) for r in df.collect()}
-
-    assert by_id(dedup.text_signatures(docs)) == by_id(feats.select("id", "sig", "simhash"))
+    want = {}
+    for i, t in enumerate(texts):
+        words = (normalize_text(t) or "").split()
+        _, sig, fp = shingle_signature(words, 3, 128, {})
+        sig32 = (sig >> np.uint64(32)).astype(np.uint32).view(np.int32)
+        want[ids[f"https://example.com/{i}"]] = (
+            sig32.tolist(),
+            int(np.uint64(fp).astype(np.int64)),
+        )
+    got = {
+        r["id"]: (list(r["sig"]), r["simhash"])
+        for r in dedup.text_signatures(docs).collect()
+    }
+    assert got == want
+    assert {r["id"]: r["simhash"] for r in feats.collect()} == {
+        i: fp for i, (_, fp) in want.items()
+    }
 
     grouped = []
     real = dedup.candidate_pairs

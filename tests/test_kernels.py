@@ -386,6 +386,48 @@ def test_set_cosine_batch_matches_scalar_reference():
         assert abs(got[i] - want) < 1e-12, (i, got[i], want)
 
 
+def test_sketch_gather_reads_sliced_lists_and_rejects_nulls():
+    """The scorer's Arrow gather (``_list_values_offsets`` →
+    ``_mat_from_flat``) builds the padded sketch matrix of a sliced
+    ListArray exactly as the per-row lists would, and equal to the
+    flatten()-plus-rebased-offsets gather it replaced; a null entry that
+    owns a non-empty offset span raises instead of shifting every later
+    row's values."""
+    import numpy as np
+    import pyarrow as pa
+
+    from ccer.operators.scoring import _list_values_offsets, _mat_from_flat
+
+    k = 4
+    pad = np.int64(1) << 33
+    lists = [[5, -1], [7], [], [2, 3, 4, 8], [9], [-7, 6]]
+    arr = pa.array(lists, type=pa.list_(pa.int32()))
+    for start, length in [(0, 6), (1, 4), (3, 3)]:
+        window = arr.slice(start, length)
+        flat, offs = _list_values_offsets(window)
+        old_flat = window.flatten().to_numpy(zero_copy_only=False).astype(np.int32)
+        old_offs = window.offsets.to_numpy().astype(np.int64)
+        for rows in (np.arange(length), np.arange(0, length, 2)):
+            got, lens = _mat_from_flat(flat, offs, rows, pad, k)
+            old, old_lens = _mat_from_flat(old_flat, old_offs - old_offs[0], rows, pad, k)
+            assert (got == old).all() and (lens == old_lens).all()
+            for r, row in enumerate(rows):
+                want = lists[start + row]
+                assert lens[r] == len(want)
+                assert got[r].tolist() == [
+                    v & 0xFFFFFFFF for v in want
+                ] + [int(pad) + c for c in range(len(want), k)]
+
+    null_span = pa.ListArray.from_arrays(
+        pa.array([0, 2, 4, 5], pa.int32()),
+        pa.array([1, 2, 3, 4, 5], pa.int32()),
+        mask=pa.array([False, True, False]),
+    )
+    assert null_span.offsets.to_pylist() == [0, 2, 4, 5]
+    with pytest.raises(ValueError, match="null"):
+        _list_values_offsets(null_span)
+
+
 def test_shingle_hashes64_windows():
     """Vectorized shingle hasher: deterministic, window-positional, cache-
     transparent, and empty below k words."""

@@ -203,8 +203,8 @@ def test_scoring_null_url_pair(spark):
 def test_spark_minhash_band_keys_bit_exact(spark):
     """The numpy xxhash64 replica that lets the features pass precompute
     LSH band keys must match Spark's JVM expression bit-for-bit — this is
-    what keeps precomputed and fallback-derived blocks mutually
-    compatible (blocking.py block_keys, features.py FEATURE_BANDS)."""
+    what keeps the features table's ``bands`` and the slice+hash keys of
+    a signature table mutually compatible (blocking.py block_keys)."""
     import numpy as np
     from pyspark.sql import functions as F
 
@@ -230,15 +230,89 @@ def test_spark_minhash_band_keys_bit_exact(spark):
                 assert got[i][f"b{b}"] == int(expect[i, b])
 
 
+def _signatures_of(features, corpus):
+    """``dedup.text_signatures`` of the texts behind a features table,
+    keyed by the features id. On texts shorter than the features
+    ``text_cap`` each signature is the one the features pass derived its
+    band keys from."""
+    from ccer.operators.dedup import text_signatures
+
+    docs = features.select("id", "url", "warc_ts").join(
+        corpus.select("url", "warc_ts", "text"), ["url", "warc_ts"]
+    )
+    assert docs.count() == features.count()
+    return text_signatures(docs.select(F.col("id").alias("doc_id"), "text"))
+
+
 def test_block_keys_precomputed_bands_match_jvm(spark, corpus):
-    """block_keys over features WITH the precomputed bands column must
-    produce exactly the rows the JVM fallback produces."""
+    """block_keys over the features table reads its ``bands`` column; its
+    rows must equal the JVM slice+hash keys over the same signatures
+    (``text_signatures``, which has no ``bands``), at the default and at
+    a non-default banding."""
     from ccer.operators.blocking import block_keys
     from ccer.operators.features import extract_features
 
-    feats = extract_features(corpus).cache()
-    with_bands = block_keys(feats)
-    without_bands = block_keys(feats.drop("bands"))
-    assert with_bands.exceptAll(without_bands).count() == 0
-    assert without_bands.exceptAll(with_bands).count() == 0
-    feats.unpersist()
+    passes = ("minhash", "simhash")
+    for bands in (32, 16):
+        feats = extract_features(corpus, minhash_bands=bands).cache()
+        assert "sig" not in feats.columns
+        sigs = _signatures_of(feats, corpus)
+        from_bands = block_keys(feats, passes=passes, minhash_bands=bands)
+        from_sig = block_keys(sigs, passes=passes, minhash_bands=bands)
+        assert from_bands.count() == corpus.count() * (bands + 3)
+        assert from_bands.exceptAll(from_sig).count() == 0
+        assert from_sig.exceptAll(from_bands).count() == 0
+        feats.unpersist()
+
+
+def test_pipeline_non_default_banding_blocks_match_jvm(spark, corpus, tmp_path_factory):
+    """run_pipeline at minhash_bands=16: the stored features carry 16 band
+    keys per row, and the stored MinHash block rows are exactly the JVM
+    ``xxhash64("m", band, slice(sig, ...))`` keys over the same texts'
+    ``text_signatures``."""
+    workdir = str(tmp_path_factory.mktemp("bands16"))
+    bands, rows_per_band = 16, 128 // 16
+    run_pipeline(
+        spark,
+        corpus.drop("true_cluster_id"),
+        workdir,
+        PipelineConfig(minhash_bands=bands),
+        resume=False,
+    )
+    store = StageStore(spark, workdir)
+    feats = store.read("features")
+    assert {r[0] for r in feats.select(F.size("bands")).distinct().collect()} == {bands}
+    sigs = _signatures_of(feats, corpus)
+    want = sigs.select(
+        "id",
+        F.explode(
+            F.array(
+                *[
+                    F.xxhash64(
+                        F.lit("m"),
+                        F.lit(b),
+                        F.slice("sig", b * rows_per_band + 1, rows_per_band),
+                    )
+                    for b in range(bands)
+                ]
+            )
+        ).alias("block_key"),
+    )
+    got = store.read("blocks").filter(F.col("pass_id") == 3).select("id", "block_key")
+    assert got.count() == corpus.count() * bands
+    assert got.exceptAll(want).count() == 0
+    assert want.exceptAll(got).count() == 0
+    shutil.rmtree(workdir, ignore_errors=True)
+
+
+def test_block_keys_rejects_features_of_another_banding(spark, corpus):
+    """A features table built for one banding fails the MinHash pass of
+    another instead of emitting keys of the wrong banding."""
+    from ccer.operators.blocking import block_keys
+    from ccer.operators.features import extract_features
+
+    feats = extract_features(corpus.limit(20))
+    with pytest.raises(Exception, match="minhash_bands=16"):
+        block_keys(feats, minhash_bands=16).collect()
+    with pytest.raises(ValueError, match="multiple"):
+        extract_features(corpus, num_perm=100)

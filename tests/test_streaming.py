@@ -85,7 +85,8 @@ def test_stream_ingest_foreachbatch(spark, tmp_path):
     q.awaitTermination(120)
     out = spark.read.parquet(os.path.join(workdir, "features_stream"))
     assert out.count() == 120
-    assert "sig" in out.columns and "batch_id" in out.columns
+    assert "bands" in out.columns and "batch_id" in out.columns
+    assert "sig" not in out.columns
     # features identical to the batch kernel (byte-identical invariant)
     batch = extract_features(pages)
     a = {r["rid"]: r["text_norm_hash"] for r in out.collect()}
