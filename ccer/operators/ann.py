@@ -25,6 +25,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
 
+from ccer.operators.blocking import candidate_pairs
+
 
 def cosine_col(u, v):
     """Cosine similarity of two array<float/double> columns, JVM-side."""
@@ -121,14 +123,12 @@ def embedding_neardup_pairs(
     buckets = parts[0]
     for p in parts[1:]:
         buckets = buckets.unionByName(p)
-    a = buckets.select(F.col("id").alias("id_a"), "bucket")
-    b = buckets.select(F.col("id").alias("id_b"), "bucket")
-    pairs = (
-        a.join(b, "bucket")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .dropDuplicates(["id_a", "id_b"])
+    # the buckets as block rows; no fingerprint, so no Hamming prefilter
+    blocks = buckets.select(
+        F.col("bucket").alias("block_key"), F.lit(0).alias("pass_id"), "id",
+        F.lit(0).cast("long").alias("simhash"),
     )
+    pairs = candidate_pairs(blocks, hamming_prefilter=None)
     va = vectors.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("vec_a"))
     vb = vectors.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("vec_b"))
     return (

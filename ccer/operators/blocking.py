@@ -284,19 +284,15 @@ def candidate_pairs(
     members (sorted by id), the per-block rows are re-partitioned by
     their minimum member id, and the quadratic pair generation runs as
     two chained codegen generators (posexplode + slice-explode) over the
-    member arrays — no self-join at all. The previous self-join consumed
-    the ``blocks`` subtree twice (two exchanges of every block row; in
-    an uncheckpointed composed plan the whole upstream explode was
-    COMPUTED twice) and emitted one pair row per containing block: with
-    32 MinHash bands plus 3 SimHash rotations a true near-dup clique
+    member arrays — no self-join at all. A self-join consumes the
+    ``blocks`` subtree twice and emits one pair row per containing block:
+    with 32 MinHash bands plus 3 SimHash rotations a true near-dup clique
     crossed the pair-dedup exchange ~20-35x over (measured at 242k
-    pages: 1.86 GB shuffled, 271 executor-CPU-s to generate-then-discard
-    the duplicates). The min-id co-location makes the rediscoveries
-    collapse in the dedup's map-side partial aggregate instead; the
-    global ``dropDuplicates`` still guarantees exact distinctness
-    (reference analog: DISTINCT over the OR-join, repository.py:113).
-    The pair SET is bit-identical to the self-join formulation — only
-    where duplicates get dropped moved.
+    pages: 1.86 GB shuffled, 271 executor-CPU-s). The min-id co-location
+    makes the rediscoveries collapse in the dedup's map-side partial
+    aggregate; the global ``dropDuplicates`` still guarantees exact
+    distinctness (reference analog: DISTINCT over the OR-join,
+    repository.py:113).
 
     ``hamming_prefilter``: pairs whose 64-bit SimHash fingerprints differ
     in more than this many bits are discarded in the generator stage (JVM
@@ -314,17 +310,26 @@ def candidate_pairs(
     generated 14.5M of 58M raw candidates). A pair that only the host
     pass finds is a same-site near-identical page, which sits at single-
     digit hamming; 16 bits keeps those while killing the correlated junk.
+
+    Probe mode (a delta against a corpus): when ``blocks`` carries a
+    boolean ``new`` column, only blocks with a new member and pairs with
+    a new endpoint are kept — exactly the batch output over the same rows
+    restricted to pairs that touch a new row.
     """
+    probe = "new" in blocks.columns
+    member = ["id", "simhash"] + (["new"] if probe else [])
     # one shuffle of the slim block rows; singleton blocks (most of the
     # url pass) die here instead of riding a join
     per_block = (
         blocks.groupBy("block_key")
         .agg(
             F.min("pass_id").alias("pass_id"),
-            F.sort_array(F.collect_list(F.struct("id", "simhash"))).alias("members"),
+            F.sort_array(F.collect_list(F.struct(*member))).alias("members"),
         )
         .filter(F.size("members") > 1)
     )
+    if probe:
+        per_block = per_block.filter(F.array_contains("members.new", True))
     # co-locate blocks by their minimum member id: blocks of the same
     # near-dup cluster (all the band/rotation blocks that keep
     # re-discovering the same pairs) overwhelmingly share their min
@@ -342,14 +347,20 @@ def candidate_pairs(
     exploded = rep.select(
         "pass_id", "members", F.posexplode("members").alias("_i", "_a")
     )
+    new_a = [F.col("_a.new").alias("new_a")] if probe else []
     joined = exploded.select(
         "pass_id",
         F.col("_a.id").alias("id_a"),
         F.col("_a.simhash").alias("fp_a"),
+        *new_a,
         F.explode(
             F.slice("members", F.col("_i") + F.lit(2), F.size("members"))
         ).alias("_b"),
-    ).select(
+    )
+    if probe:
+        # a pair of two old members is already in the corpus's edges
+        joined = joined.filter(F.col("new_a") | F.col("_b.new"))
+    joined = joined.select(
         "pass_id",
         "id_a",
         "fp_a",

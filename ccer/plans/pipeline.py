@@ -73,6 +73,40 @@ class PipelineConfig:
         self.hamming_prefilter = hamming_prefilter
         self.host_hamming_prefilter = host_hamming_prefilter
 
+    # knob -> operator arguments, shared by er_chain and the ER delta
+    def features_args(self) -> dict:
+        return dict(
+            num_perm=self.num_perm, shingle_k=self.shingle_k,
+            text_cap=self.text_cap, minhash_bands=self.minhash_bands,
+        )
+
+    def block_args(self, n_rows: int | None) -> dict:
+        """``block_keys`` arguments for ``n_rows`` features rows (None:
+        unknown, which gives "auto" its 16-bit floor). The simhash key
+        space (rotations x 2^bits) is FIXED, so at constant bits in-bucket
+        pairs grow QUADRATICALLY with the corpus (measured: 21.7M candidates
+        at 960k pages, 86.1M at 1.92M); "auto" scales the prefix so buckets
+        hold ~8 rows, keeping the pass a bounded-cost secondary net."""
+        bits = self.simhash_bits
+        if bits == "auto":
+            bits = min(40, max(16, (max(1, (n_rows or 1) // 8)).bit_length()))
+        return dict(
+            passes=self.passes, minhash_bands=self.minhash_bands,
+            num_perm=self.num_perm, simhash_bits=bits,
+        )
+
+    def salt_args(self) -> dict:
+        return dict(
+            block_cap=self.block_cap, weak_pass_caps=self.weak_pass_caps,
+            salt_bits_max=self.salt_bits_max,
+        )
+
+    def pair_args(self) -> dict:
+        return dict(
+            hamming_prefilter=self.hamming_prefilter,
+            host_hamming_prefilter=self.host_hamming_prefilter,
+        )
+
     def fingerprint(self) -> str:
         """Stable digest of every knob that changes stage contents — stored
         in the checkpoint manifest so resume never reuses a stage computed
@@ -103,53 +137,17 @@ def er_chain(pages: DataFrame, cfg: PipelineConfig, stages) -> DataFrame:
     # id_b) and cluster assignment once more — bucketing pays one shuffle
     # at write time and deletes the features-side exchange from all three
     features = stages.stage(
-        "features",
-        lambda: extract_features(
-            pages,
-            num_perm=cfg.num_perm,
-            shingle_k=cfg.shingle_k,
-            text_cap=cfg.text_cap,
-            minhash_bands=cfg.minhash_bands,
-        ),
+        "features", lambda: extract_features(pages, **cfg.features_args()),
         bucket_by="id",
     )
-    # the simhash pass's key space (rotations x 2^bits buckets) is FIXED,
-    # so at constant bits the per-bucket population grows linearly with
-    # the corpus and the in-bucket pair count QUADRATICALLY (measured:
-    # 21.7M pair-candidates upper bound at 960k pages, 86.1M at 1.92M —
-    # 4x for 2x docs, every bucket of the 196,608 saturated). "auto"
-    # scales the prefix so buckets hold ~8 rows: the pass stays a
-    # bounded-cost secondary net at any corpus size, while the primary
-    # nets (url, MinHash bands) have corpus-proportional key spaces.
-    # Without a known count (the lazy hook) the 16-bit floor applies.
-    if cfg.simhash_bits == "auto":
-        n_rows = stages.rows("features") or 1
-        simhash_bits = min(40, max(16, (max(1, n_rows // 8)).bit_length()))
-    else:
-        simhash_bits = cfg.simhash_bits
+    block_args = cfg.block_args(stages.rows("features"))
     blocks = stages.stage(
         "blocks",
         lambda: salt_oversized_blocks(
-            block_keys(
-                features,
-                passes=cfg.passes,
-                minhash_bands=cfg.minhash_bands,
-                num_perm=cfg.num_perm,
-                simhash_bits=simhash_bits,
-            ),
-            block_cap=cfg.block_cap,
-            weak_pass_caps=cfg.weak_pass_caps,
-            salt_bits_max=cfg.salt_bits_max,
+            block_keys(features, **block_args), **cfg.salt_args()
         ),
     )
-    pairs = stages.stage(
-        "pairs",
-        lambda: candidate_pairs(
-            blocks,
-            hamming_prefilter=cfg.hamming_prefilter,
-            host_hamming_prefilter=cfg.host_hamming_prefilter,
-        ),
-    )
+    pairs = stages.stage("pairs", lambda: candidate_pairs(blocks, **cfg.pair_args()))
     edges = stages.stage(
         "edges", lambda: match_edges(score_pairs(pairs, features, cfg.scoring))
     )

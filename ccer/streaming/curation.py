@@ -8,9 +8,10 @@ micro-batch at a time with per-batch compute proportional to the BATCH:
 
 - exact dedup:   within-batch min-arrival-id survivor, then an anti-join
                  of 16-byte text digests against the seen-digest state;
-- near-dup:      the batch's MinHash band buckets probe the accumulated
-                 bucket state (equi-join whose probe side is the batch),
-                 candidate pairs are verified against the signature
+- near-dup:      ``candidate_pairs`` probes the batch's MinHash band
+                 rows (tagged ``new``) against the bucket state — the
+                 batch sweep's own pair generator; pairs with a new
+                 endpoint are verified against the signature
                  state, and each OLD endpoint is mapped to its near-dup
                  component label — so a chain
                  A(batch1) ← B(batch2, dropped as near-dup of A) ←
@@ -39,9 +40,10 @@ behavior itself is pinned by its own test.
 
 State is O(corpus) storage (signatures + buckets of every doc ever —
 the checkpointed-features-stage asymptotics, unavoidable for exact
-cross-batch semantics); per-batch shuffle is O(batch + candidates), and
-the corpus-sized state tables are only ever probed by batch-sized
-builds or appended to — never rewritten.
+cross-batch semantics); per-batch shuffle is O(batch + candidates) plus
+one pass over the bucket state (``candidate_pairs``' per-block aggregate
+reads every state row and keeps the blocks with a new member), and the
+corpus-sized state tables are only ever appended to — never rewritten.
 """
 
 from __future__ import annotations
@@ -50,7 +52,7 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ccer.operators.blocking import block_keys
+from ccer.operators.blocking import block_keys, candidate_pairs
 from ccer.operators.cluster import connected_components
 from ccer.operators.dedup import estimated_jaccard, text_signatures
 
@@ -64,7 +66,7 @@ class CurationState:
 
     seen: DataFrame        # (text_md5 binary, survivor_id long)
     sigs: DataFrame        # (id long, sig array<int>, simhash long) — every doc ever
-    buckets: DataFrame     # (bucket long, id long)
+    buckets: DataFrame     # block_keys rows: (block_key, pass_id, id, simhash)
     comps: DataFrame       # (id long, component long)
     relabels: DataFrame    # (old_label long, new_label long), compressed
     next_id: int
@@ -136,7 +138,8 @@ def curate_batch(
     driver-side partition offsets), never a single-partition global
     window, so a large catch-up batch doesn't funnel through one
     reducer. Ties among byte-identical texts are broken arbitrarily —
-    the copies are indistinguishable for curation purposes.
+    the copies are indistinguishable for curation purposes. The near-dup
+    probe is ``candidate_pairs`` over ``new``-tagged band rows.
     """
     next_id = state.next_id if state is not None else 0
 
@@ -196,23 +199,13 @@ def curate_batch(
     ).localCheckpoint(eager=True)
     buckets_new = block_keys(
         sigs_new, passes=("minhash",), minhash_bands=bands, num_perm=num_perm
-    ).select(F.col("block_key").alias("bucket"), "id")
-    buckets_all = (
-        state.buckets.unionByName(buckets_new) if state is not None else buckets_new
     )
-    sigs_all = state.sigs.unionByName(sigs_new) if state is not None else sigs_new
-
-    probe = buckets_new.select("bucket", F.col("id").alias("id_a"))
-    build = buckets_all.select("bucket", F.col("id").alias("id_b"))
-    cand = (
-        probe.join(build, "bucket")
-        .filter(F.col("id_a") != F.col("id_b"))
-        .select(
-            F.least("id_a", "id_b").alias("id_a"),
-            F.greatest("id_a", "id_b").alias("id_b"),
-        )
-        .dropDuplicates(["id_a", "id_b"])
-    )
+    tagged = buckets_new.withColumn("new", F.lit(True))
+    sigs_all = sigs_new
+    if state is not None:
+        tagged = state.buckets.withColumn("new", F.lit(False)).unionByName(tagged)
+        sigs_all = state.sigs.unionByName(sigs_new)
+    cand = candidate_pairs(tagged, hamming_prefilter=None)
     edges = (
         estimated_jaccard(cand, sigs_all, num_perm)
         .filter(F.col("est_jaccard") >= est_threshold)
@@ -274,7 +267,7 @@ def curate_batch(
     new_state = CurationState(
         seen=state.seen.unionByName(seen_delta) if state is not None else seen_delta,
         sigs=sigs_all,
-        buckets=buckets_all,
+        buckets=tagged.drop("new"),
         comps=state.comps.unionByName(new_comps) if state is not None else new_comps,
         relabels=relabels,
         next_id=next_id + batch_n,
@@ -289,13 +282,13 @@ def curate_batch(
 _STATE_TABLES = ("seen", "sigs", "buckets", "comps", "relabels")
 
 # Signature/bucket binary format version. Bump whenever the on-disk
-# encoding of ``sigs``/``buckets`` changes incompatibly — v3 is the
-# shared ER signature step (word-hash-mixed shingles) + ``block_keys``
-# MinHash band keys; v2 (blake2b shingle strings, xxhash64(band, slice)
-# buckets) and v1 (array<long> sigs) state may load cleanly but their
-# signatures/buckets never match new ones, so near-duplicates of
-# pre-upgrade docs would silently survive resume.
-_STATE_FORMAT_VERSION = 3
+# encoding of ``sigs``/``buckets`` changes incompatibly — v4 stores
+# ``buckets`` as the ``block_keys`` rows ``candidate_pairs`` probes; v3
+# (bucket, id) lacks their columns. v2 (blake2b shingle strings) and v1
+# (array<long> sigs) state may load cleanly but their signatures/buckets
+# never match new ones, so near-duplicates of pre-upgrade docs would
+# silently survive resume.
+_STATE_FORMAT_VERSION = 4
 
 
 def save_state(state: CurationState, path: str) -> None:

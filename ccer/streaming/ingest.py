@@ -7,6 +7,11 @@ micro-batches through ``foreachBatch``; each batch runs the SAME feature
 kernel (one code path — the byte-identical invariant again) and appends
 to the features stage; clustering is then advanced incrementally.
 
+The delta probe is ``candidate_pairs`` over ``new``-tagged blocks: the
+batch's own pair generator, salting and Hamming prefilter, under the one
+``PipelineConfig``, so a delta scores exactly the batch's candidate pairs
+that touch a new record.
+
 Incremental clustering correctness: connected components over
 (previous id→component mapping edges) ∪ (edges incident to new records)
 equals connected components over the full edge set, because a component
@@ -25,12 +30,14 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from ccer.operators.blocking import (
     block_keys,
     block_size_profile,
+    candidate_pairs,
     merge_profiles,
     salt_oversized_blocks,
 )
 from ccer.operators.cluster import assign_clusters, connected_components
 from ccer.operators.features import extract_features
-from ccer.operators.scoring import ScoringConfig, match_edges, score_pairs
+from ccer.operators.scoring import match_edges, score_pairs
+from ccer.plans.pipeline import PipelineConfig
 
 PAGE_SCHEMA_DDL = (
     "url string, warc_ts timestamp, html binary, text string, lang string"
@@ -42,8 +49,7 @@ def incremental_update(
     prior_features: DataFrame | None,
     prior_components: DataFrame | None,
     new_pages: DataFrame,
-    config: ScoringConfig | None = None,
-    block_cap: int = 500,
+    config: PipelineConfig | None = None,
     prior_blocks: DataFrame | None = None,
     prior_profile: DataFrame | None = None,
 ) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame, DataFrame]:
@@ -51,6 +57,9 @@ def incremental_update(
 
     Returns (features_all, blocks_raw_all, components_all, clusters_all,
     profile_all).
+
+    ``config`` is the batch's ``PipelineConfig``, passed on as ``er_chain``
+    does; with no row count, "auto" simhash bits take the 16-bit floor.
 
     Per-batch work that scales with the BATCH, not the corpus: feature
     extraction (Arrow pass) and block-key derivation (band explosion)
@@ -62,45 +71,33 @@ def incremental_update(
     skew salting: only the BATCH's block rows are counted and the delta
     is merged into the prior profile (#distinct-keys rows of 20 bytes),
     so no per-batch aggregation ever re-scans the corpus's block rows.
-    Per-batch work that necessarily touches the corpus: the pair join's
-    build side — a key-only shuffle, no signature or text movement. Only
-    pairs with ≥1 new-side record are scored: new block rows join
-    against ALL block rows (old ∪ new) — an equi-join whose probe side
-    is just the batch.
+
+    The delta probe is ``candidate_pairs`` over ``new``-tagged blocks
+    (tagged before salting); its per-block shuffle of slim block rows is
+    the one pass over corpus rows, and keeps only blocks with a new member.
     """
-    feats_new = extract_features(new_pages)
+    cfg = config or PipelineConfig()
+    feats_new = extract_features(new_pages, **cfg.features_args())
     if prior_features is None:
         feats_all = feats_new
     else:
         feats_all = prior_features.unionByName(feats_new)
 
-    blocks_new_raw = block_keys(feats_new)
+    block_args = cfg.block_args(None)
+    blocks_new_raw = block_keys(feats_new, **block_args)
+    tagged = blocks_new_raw.withColumn("new", F.lit(True))
+    if prior_blocks is None and prior_features is not None:
+        prior_blocks = block_keys(prior_features, **block_args)
     if prior_blocks is not None:
-        blocks_raw_all = prior_blocks.unionByName(blocks_new_raw)
-    else:
-        blocks_raw_all = block_keys(feats_all) if prior_features is not None else blocks_new_raw
-    if prior_profile is not None and prior_blocks is not None:
+        tagged = prior_blocks.withColumn("new", F.lit(False)).unionByName(tagged)
+    blocks_raw_all = tagged.drop("new")
+    if prior_profile is not None:
         profile_all = merge_profiles(prior_profile, block_size_profile(blocks_new_raw))
     else:
         profile_all = block_size_profile(blocks_raw_all)
-    blocks_all = salt_oversized_blocks(
-        blocks_raw_all, block_cap=block_cap, profile=profile_all
-    )
-    new_ids = feats_new.select("id").distinct()
-    blocks_new = blocks_all.join(new_ids, "id", "left_semi")
-
-    left = blocks_new.select("block_key", F.col("id").alias("id_a"))
-    right = blocks_all.select("block_key", F.col("id").alias("id_b"))
-    pairs = (
-        left.join(right, "block_key")
-        .filter(F.col("id_a") != F.col("id_b"))
-        .select(
-            F.least("id_a", "id_b").alias("id_a"),
-            F.greatest("id_a", "id_b").alias("id_b"),
-        )
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    new_edges = match_edges(score_pairs(pairs, feats_all, config))
+    blocks = salt_oversized_blocks(tagged, profile=profile_all, **cfg.salt_args())
+    pairs = candidate_pairs(blocks, **cfg.pair_args())
+    new_edges = match_edges(score_pairs(pairs, feats_all, cfg.scoring))
     if prior_components is not None:
         prior_edges = prior_components.select(
             F.col("id").alias("id_a"), F.col("component").alias("id_b")

@@ -316,3 +316,44 @@ def test_block_keys_rejects_features_of_another_banding(spark, corpus):
         block_keys(feats, minhash_bands=16).collect()
     with pytest.raises(ValueError, match="multiple"):
         extract_features(corpus, num_perm=100)
+
+
+def test_candidate_pairs_probe_mode(spark):
+    """Block rows carrying ``new``: the output is the batch output over
+    the same rows restricted to pairs with a new endpoint, through the
+    same pass-aware Hamming prefilter; all-old blocks generate nothing.
+    Simhashes are nested low-bit masks, so xor distance = |bits_a - bits_b|."""
+    from ccer.operators.blocking import PASS_HOST, PASS_MINHASH, PASS_URL, candidate_pairs
+
+    bits = {1: 0, 2: 4, 3: 5, 4: 10, 5: 11, 6: 40, 7: 1}
+    new = {2, 4, 5, 6}
+    blocks = {
+        100: (PASS_URL, [1, 6]),             # distance 40: the url pass bypasses
+        101: (PASS_URL, [3, 7]),             # all old
+        200: (PASS_HOST, [1, 2, 3, 4, 7]),   # host bound 4: 4 kept, 5 and 6 dropped
+        300: (PASS_MINHASH, [1, 3, 4, 5, 6]),  # bound 10: 10 kept, 11 dropped
+        301: (PASS_MINHASH, [1, 7]),         # all old
+        302: (PASS_MINHASH, [4]),            # singleton
+    }
+    rows = spark.createDataFrame(
+        [
+            (key, pass_id, i, (1 << bits[i]) - 1, i in new)
+            for key, (pass_id, ids) in blocks.items()
+            for i in ids
+        ],
+        "block_key long, pass_id int, id long, simhash long, new boolean",
+    )
+
+    def pairs(df):
+        out = candidate_pairs(df, hamming_prefilter=10, host_hamming_prefilter=4)
+        return {(r["id_a"], r["id_b"]) for r in out.collect()}
+
+    batch = pairs(rows.drop("new"))
+    probe = pairs(rows)
+    assert batch == {
+        (1, 6), (3, 7), (1, 2), (1, 7), (2, 3), (2, 7),
+        (1, 3), (1, 4), (3, 4), (3, 5), (4, 5),
+    }
+    assert probe == {p for p in batch if new & set(p)}
+    assert probe == {(1, 6), (1, 2), (2, 3), (2, 7), (1, 4), (3, 4), (3, 5), (4, 5)}
+    assert pairs(rows.filter(~F.col("new"))) == set()

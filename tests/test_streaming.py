@@ -5,28 +5,32 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from ccer.operators.blocking import block_keys, candidate_pairs, salt_oversized_blocks
-from ccer.operators.cluster import assign_clusters, connected_components
+from ccer.operators.blocking import block_keys
 from ccer.operators.features import extract_features
-from ccer.operators.scoring import match_edges, score_pairs
+from ccer.plans.pipeline import LAZY_STAGES, PipelineConfig, er_chain
 from ccer.sources.pages import synthesize_pages
 from ccer.streaming.ingest import incremental_update, stream_ingest
 
 
-def test_incremental_equals_batch(spark):
+@pytest.mark.parametrize(
+    "cfg",
+    [
+        PipelineConfig(),
+        PipelineConfig(minhash_bands=16, hamming_prefilter=8, host_hamming_prefilter=4),
+    ],
+    ids=["default", "bands16_prefilter8"],
+)
+def test_incremental_equals_batch(spark, cfg):
     pages = synthesize_pages(spark, 300, seed=42, with_labels=False).cache()
     pages.count()
-    # batch reference run
-    feats = extract_features(pages)
-    blocks = salt_oversized_blocks(block_keys(feats))
-    edges = match_edges(score_pairs(candidate_pairs(blocks), feats))
-    batch_clusters = assign_clusters(feats, connected_components(edges))
+    # batch reference run: the one ER chain under the same config
+    batch_clusters = er_chain(pages, cfg, LAZY_STAGES)
     batch_map = {r["rid"]: r["cluster_id"] for r in batch_clusters.collect()}
 
     # two-increment run over the same rows (split by hash for stability)
     p1 = pages.filter(F.xxhash64("url") % 2 == 0)
     p2 = pages.subtract(p1)
-    f1, b1, c1, _, pr1 = incremental_update(spark, None, None, p1)
+    f1, b1, c1, _, pr1 = incremental_update(spark, None, None, p1, cfg)
     f1 = f1.localCheckpoint(eager=True)
     b1 = b1.localCheckpoint(eager=True)
     c1 = c1.localCheckpoint(eager=True)
@@ -36,14 +40,17 @@ def test_incremental_equals_batch(spark):
     # is advanced by the batch delta only — no per-batch aggregation
     # re-scans the corpus's block rows
     _, _, _, inc_clusters, pr2 = incremental_update(
-        spark, f1, c1, p2, prior_blocks=b1, prior_profile=pr1
+        spark, f1, c1, p2, cfg, prior_blocks=b1, prior_profile=pr1
     )
     inc_map = {r["rid"]: r["cluster_id"] for r in inc_clusters.collect()}
     assert inc_map == batch_map
     # the merged profile equals a from-scratch count over all block rows
+    all_blocks = block_keys(
+        extract_features(pages, **cfg.features_args()), **cfg.block_args(None)
+    )
     full = {
         (r["block_key"], r["pass_id"]): r["count"]
-        for r in block_keys(extract_features(pages)).groupBy("block_key", "pass_id").count().collect()
+        for r in all_blocks.groupBy("block_key", "pass_id").count().collect()
     }
     merged = {(r["block_key"], r["pass_id"]): r["count"] for r in pr2.collect()}
     assert merged == full

@@ -174,9 +174,11 @@ def test_stream_curate_end_to_end(spark, tmp_path, vocab):
     st = load_state(spark, workdir + "/curation_state")
     assert st.next_id == 4 and st.seen.count() == 4
 
-    # state persisted by a pre-v2 build (64-bit sigs, no version stamp)
-    # must REFUSE to load: old sigs/buckets never match new ones, so a
-    # silent resume would miss near-duplicates of pre-upgrade docs.
+    # state persisted by an older build must REFUSE to load: a pre-v2
+    # build (64-bit sigs, no version stamp) wrote sigs/buckets that never
+    # match new ones, so a silent resume would miss near-duplicates of
+    # pre-upgrade docs; a v3 build wrote buckets as (bucket, id), which
+    # lacks the block_keys columns the probe reads.
     import json
     import os
 
@@ -193,6 +195,10 @@ def test_stream_curate_end_to_end(spark, tmp_path, vocab):
     with open(meta_path, "w") as fh:
         json.dump(stale, fh)
     with pytest.raises(ValueError, match="format_version=1"):
+        load_state(spark, workdir + "/curation_state")
+    with open(meta_path, "w") as fh:
+        json.dump(dict(meta, format_version=3), fh)
+    with pytest.raises(ValueError, match="format_version=3"):
         load_state(spark, workdir + "/curation_state")
     with open(meta_path, "w") as fh:
         json.dump(meta, fh)
