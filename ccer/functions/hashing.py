@@ -197,6 +197,16 @@ def _xxh_hash_bytes(data: bytes, seed) -> np.uint64:
     return _xxh_fmix(h)
 
 
+def band_rows(num_perm: int, bands: int) -> int:
+    """Signature rows per LSH band; ``num_perm`` must split evenly into
+    ``bands`` (a ragged last band would hash a short slice)."""
+    if num_perm % bands != 0:
+        raise ValueError(
+            f"num_perm ({num_perm}) must be a multiple of minhash_bands ({bands})"
+        )
+    return num_perm // bands
+
+
 def spark_minhash_band_keys(sig32: np.ndarray, bands: int, rows_per_band: int) -> np.ndarray:
     """(n, num_perm) int32 signature matrix → (n, bands) int64 band keys,
     value-identical to the JVM expression

@@ -8,7 +8,7 @@ Here the block keys are content-derived:
 
 - pass 1 ``url``  — exact normalized-url key (catches re-crawls free)
 - pass 2 ``host`` — normalized host (cheap same-site signal, weak)
-- pass 3 ``minhash`` — LSH band keys (the features table's ``bands``)
+- pass 3 ``minhash`` — LSH band keys, read from the table's ``bands``
 - pass 4 ``simhash`` — rotated 16-bit fingerprint prefixes
 
 Block keys are 64-bit ``xxhash64`` values, NOT strings: every downstream
@@ -19,8 +19,10 @@ collision merely merges two unrelated blocks (extra candidates that the
 scorer rejects), never loses a pair.
 
 Everything here is JVM-side column algebra over the features table — the
-Python work (signatures, band keys) happened once in the features pass,
-so the whole stage is whole-stage-codegen'd.
+Python work (signatures, band keys) happened once in the Arrow pass that
+made the table (``extract_features`` or ``dedup.text_signatures``, both
+through ``spark_minhash_band_keys``), so the whole stage is
+whole-stage-codegen'd. There is no other band-key formula.
 
 Skew (north rule "salted, skew-aware block partitions"): a block larger
 than its cap would cost O(n²) in pair generation — one mega-host block of
@@ -46,23 +48,20 @@ def block_keys(
     minhash_bands: int = 32,
     simhash_bits: int = 16,
     simhash_rotations=(0, 21, 43),
-    num_perm: int = 128,
 ) -> DataFrame:
     """features → (block_key long, pass_id int, id long, simhash long).
 
-    ``num_perm`` must match the signature length produced by the features
-    pass and be a multiple of ``minhash_bands`` — otherwise band slices
-    would run past the signature end (empty-array band keys collapse
-    every record into one degenerate mega-block per band). A table with
-    ``bands`` must carry exactly ``minhash_bands`` keys per row; the
-    MinHash pass raises on any row that does not.
+    The MinHash pass reads the table's ``bands`` column: the band keys
+    the Arrow pass that made the table computed (``extract_features``
+    and ``dedup.text_signatures``, both via ``spark_minhash_band_keys``).
+    A table without ``bands`` raises ``ValueError``; a row that does not
+    carry exactly ``minhash_bands`` keys fails the job.
     """
-    if num_perm % minhash_bands != 0:
+    if "minhash" in passes and "bands" not in features.columns:
         raise ValueError(
-            f"num_perm ({num_perm}) must be a multiple of "
-            f"minhash_bands ({minhash_bands})"
+            "the minhash pass reads precomputed band keys: the table has no "
+            "'bands' column (build it with extract_features or text_signatures)"
         )
-    rows_per_band = num_perm // minhash_bands
 
     # ONE scan of the features table for ALL passes: every pass's keys go
     # into one struct array that a single inline() explodes (a 4-branch
@@ -90,40 +89,22 @@ def block_keys(
             )
         )
     if "minhash" in passes:
-        # one band-key source per table: the ER features pass emits the
-        # configured banding's keys in its vectorized Arrow crossing
-        # (``bands``, VALUE-identical to the JVM slice+hash below —
-        # spark_minhash_band_keys is a verified bit-exact xxhash64
-        # replica), which removes 32 slice+hash calls per record from this
-        # explode (~115 executor-CPU-s per corpus pass at 242k pages).
-        # Tables without ``bands`` (dedup's ``text_signatures``) carry the
-        # signature and take the slice+hash path.
-        if "bands" in features.columns:
-            # a table written for another banding (a direct call with a
-            # different ``minhash_bands``, or a resumed features stage)
-            # fails the row instead of emitting keys of the wrong banding:
-            # band 0's key is in every row's entry array, so the check
-            # runs once per row inside this projection, with no extra job
-            width = F.coalesce(F.size("bands"), F.lit(-1))
-            msg = (
-                f"features bands do not match minhash_bands={minhash_bands} "
-                "(rebuild the features stage with this banding); keys in row: "
+        # a table written for another banding (a direct call with a
+        # different ``minhash_bands``, or a resumed features stage) fails
+        # the row instead of emitting keys of the wrong banding: band 0's
+        # key is in every row's entry array, so the check runs once per
+        # row inside this projection, with no extra job
+        width = F.coalesce(F.size("bands"), F.lit(-1))
+        msg = (
+            f"features bands do not match minhash_bands={minhash_bands} "
+            "(rebuild the features stage with this banding); keys in row: "
+        )
+        wrong_width = F.raise_error(F.concat(F.lit(msg), width.cast("string")))
+        keys = [
+            F.when(width != minhash_bands, wrong_width).otherwise(
+                F.col("bands").getItem(0)
             )
-            wrong_width = F.raise_error(F.concat(F.lit(msg), width.cast("string")))
-            keys = [
-                F.when(width != minhash_bands, wrong_width).otherwise(
-                    F.col("bands").getItem(0)
-                )
-            ] + [F.col("bands").getItem(band) for band in range(1, minhash_bands)]
-        else:
-            keys = [
-                F.xxhash64(
-                    F.lit("m"),
-                    F.lit(band),
-                    F.slice("sig", band * rows_per_band + 1, rows_per_band),
-                )
-                for band in range(minhash_bands)
-            ]
+        ] + [F.col("bands").getItem(band) for band in range(1, minhash_bands)]
         for key in keys:
             entries.append(
                 F.struct(
@@ -225,7 +206,7 @@ def salt_oversized_blocks(
         # profile and the salt join-back, and in a composed (unstaged)
         # plan the whole upstream key explode would run once per branch
         # (measured at 242k pages: ~115 executor-CPU-s of duplicated
-        # slice+hash work). A lazy localCheckpoint materializes the slim
+        # band-key work). A lazy localCheckpoint materializes the slim
         # rows on first use so the second branch reads blocks instead of
         # recomputing; callers that manage their own staging (the
         # checkpointed pipeline, the incremental path) pass ``profile``

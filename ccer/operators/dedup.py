@@ -14,12 +14,12 @@ engine provides beyond reference parity):
 
 The MinHash and SimHash modes are the ER near-dup core, not a copy of
 it: signatures come from the features pass's per-document step
-(``shingle_signature``), keys from ``block_keys`` and pairs from
-``candidate_pairs``, so a text's signature and band keys here equal its
-ER features-table values. Everything except the signature computation
-(one Arrow pass) is JVM-side column algebra — blocking keys, pair
-generation, Hamming distances, and Jaccard all run inside whole-stage
-codegen.
+(``shingle_signature``), band keys from its ``spark_minhash_band_keys``,
+block rows from ``block_keys`` and pairs from ``candidate_pairs``, so a
+text's signature and band keys here equal its ER features-table values.
+Everything except the one Arrow pass (signatures and band keys) is
+JVM-side column algebra — blocking keys, pair generation, Hamming
+distances, and Jaccard all run inside whole-stage codegen.
 """
 
 from __future__ import annotations
@@ -28,7 +28,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
-from ccer.functions.hashing import shingle_signature
+from ccer.functions.hashing import band_rows, shingle_signature, spark_minhash_band_keys
 from ccer.functions.normalize import normalize_text
 from ccer.operators.blocking import block_keys, candidate_pairs
 
@@ -102,7 +102,7 @@ def token_jaccard_pairs(
     )
 
 
-SIGNATURE_SCHEMA = "id long, sig array<int>, simhash long"
+SIGNATURE_SCHEMA = "id long, sig array<int>, simhash long, bands array<long>"
 
 
 def text_signatures(
@@ -111,25 +111,27 @@ def text_signatures(
     id_col: str = "doc_id",
     num_perm: int = 128,
     shingle_k: int = 3,
+    minhash_bands: int = 32,
 ) -> DataFrame:
-    """One Arrow pass: id → (MinHash signature, SimHash fingerprint), the
-    ``id``/``sig``/``simhash`` columns ``block_keys`` reads.
+    """One Arrow pass: id → (MinHash signature, SimHash fingerprint, LSH
+    band keys), the ``id``/``sig``/``simhash``/``bands`` columns
+    ``block_keys`` and ``estimated_jaccard`` read.
 
     Each text goes through the features pass's per-document step
-    (``shingle_signature``) over its full normalized text, so a text
-    shorter than the features ``text_cap`` gets the signature its ER
-    features row derived ``bands`` from (``block_keys`` over this table
-    emits the same MinHash keys as over the features table) and the same
-    ``simhash``. Signatures are stored 32-bit (top half of each 64-bit
-    min-hash, order-preserving truncation — the convention of the ER
-    features pass and datasketch's default precision). Halves every
-    downstream signature byte: the band-key slices, the pair-verify
-    join-backs, and the localCheckpointed live set in the curation funnel
+    (``shingle_signature``) over its full normalized text, and the batch's
+    band keys through its ``spark_minhash_band_keys`` for ``minhash_bands``
+    bands. A text shorter than the features ``text_cap`` therefore gets
+    its ER features row's ``simhash`` and ``bands``, and ``block_keys``
+    emits the same MinHash keys over both tables. Signatures are stored
+    32-bit (top half of each 64-bit min-hash, order-preserving truncation
+    — the convention of the ER features pass and datasketch's default
+    precision). Halves every downstream signature byte: the pair-verify
+    join-backs and the localCheckpointed live set in the curation funnel
     / streaming state. Cost: an extra 2^-32 per-position collision
     probability in the estimated-Jaccard match count — ≪ the sketch's own
     1/sqrt(num_perm) noise.
     """
-
+    rows_per_band = band_rows(num_perm, minhash_bands)
     target = docs.sparkSession.sparkContext.defaultParallelism
     if docs.rdd.getNumPartitions() < target:
         docs = docs.repartition(target)
@@ -141,15 +143,22 @@ def text_signatures(
         for pdf in iterator:
             if len(word_cache) > 2_000_000:
                 word_cache.clear()
-            sigs = []
+            sig32 = np.empty((len(pdf), num_perm), dtype=np.int32)
             fps = np.empty(len(pdf), dtype=np.int64)
             for i, text in enumerate(pdf[text_col].tolist()):
                 words = (normalize_text(text) or "").split()
                 _, sig, fp = shingle_signature(words, shingle_k, num_perm, word_cache)
-                sigs.append((sig >> np.uint64(32)).astype(np.uint32).view(np.int32))
+                sig32[i] = (sig >> np.uint64(32)).astype(np.uint32).view(np.int32)
                 fps[i] = np.uint64(fp).astype(np.int64)
             yield pd.DataFrame(
-                {"id": pdf[id_col].astype(np.int64), "sig": sigs, "simhash": fps}
+                {
+                    "id": pdf[id_col].astype(np.int64),
+                    "sig": list(sig32),
+                    "simhash": fps,
+                    "bands": list(
+                        spark_minhash_band_keys(sig32, minhash_bands, rows_per_band)
+                    ),
+                }
             )
 
     return docs.select(id_col, text_col).mapInPandas(gen, schema=SIGNATURE_SCHEMA)
@@ -193,14 +202,14 @@ def minhash_neardup_pairs(
     # consumed three times (band keys + the two signature join-backs):
     # materialize the Arrow pass once; blocks are reclaimed by the
     # ContextCleaner when the result DataFrame is collected.
-    sigs = text_signatures(docs, text_col, id_col, num_perm=num_perm).localCheckpoint(
-        eager=False
-    )
+    sigs = text_signatures(
+        docs, text_col, id_col, num_perm=num_perm, minhash_bands=bands
+    ).localCheckpoint(eager=False)
     # the 128-long signature (~0.5 KB at 32-bit precision) must NOT ride
     # the pair generation: block rows are slim (key, pass, id, simhash)
     # rows, and the signatures join back on id afterwards (the ER
     # scorer's slim-crossing pattern, scoring.py:253-270).
-    blocks = block_keys(sigs, passes=("minhash",), minhash_bands=bands, num_perm=num_perm)
+    blocks = block_keys(sigs, passes=("minhash",), minhash_bands=bands)
     pairs = candidate_pairs(blocks, hamming_prefilter=None)
     return (
         estimated_jaccard(pairs, sigs, num_perm)
@@ -221,8 +230,13 @@ def simhash_neardup_pairs(
     ``candidate_pairs`` with ``max_hamming`` as its JVM
     bit_count(a XOR b) prefilter; the distance is recomputed on the
     surviving pairs."""
-    # consumed three times (keys + the two fingerprint join-backs)
-    sigs = text_signatures(docs, text_col, id_col).localCheckpoint(eager=False)
+    # consumed three times (keys + the two fingerprint join-backs); only
+    # the fingerprint is kept
+    sigs = (
+        text_signatures(docs, text_col, id_col)
+        .select("id", "simhash")
+        .localCheckpoint(eager=False)
+    )
     blocks = block_keys(
         sigs,
         passes=("simhash",),

@@ -25,8 +25,8 @@ byte here rides it once per consuming join):
   half of each 64-bit hash): bottom-k semantics are preserved with
   collision probability 2^-32 per comparison — immaterial next to the
   estimator's own variance — at half the bytes. The band keys hash the
-  same 32-bit truncation of the signature, so they equal the slice+hash
-  keys over dedup's stored 32-bit signatures.
+  same 32-bit truncation of the signature that ``dedup.text_signatures``
+  stores, with the same kernel, so a text's keys are equal in both.
 """
 
 from __future__ import annotations
@@ -35,7 +35,12 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 
-from ccer.functions.hashing import hash64, shingle_signature, spark_minhash_band_keys
+from ccer.functions.hashing import (
+    band_rows,
+    hash64,
+    shingle_signature,
+    spark_minhash_band_keys,
+)
 from ccer.functions.normalize import html_to_text, normalize_text, normalize_url, url_host
 
 FEATURES_SCHEMA = (
@@ -45,9 +50,8 @@ FEATURES_SCHEMA = (
     "simhash long, sh array<int>, bands array<long>"
 )
 # ``bands``: the ``minhash_bands`` LSH band keys of the row's 32-bit
-# MinHash signature, value-identical to the JVM slice+hash over that
-# signature (spark_minhash_band_keys) — the one band-key source
-# ``block_keys`` reads for this table
+# MinHash signature (spark_minhash_band_keys) — what ``block_keys``
+# reads for the MinHash pass
 
 
 def stable_id(rid: str) -> int:
@@ -80,12 +84,7 @@ def extract_features(
     """
     from pyspark.sql import functions as F
 
-    if num_perm % minhash_bands != 0:
-        raise ValueError(
-            f"num_perm ({num_perm}) must be a multiple of "
-            f"minhash_bands ({minhash_bands})"
-        )
-    rows_per_band = num_perm // minhash_bands
+    rows_per_band = band_rows(num_perm, minhash_bands)
 
     cols = pages.columns
     has_text = "text" in cols
@@ -177,8 +176,7 @@ def extract_features(
                 shs.append(h32[:sketch_k].view(np.int32))
                 fps[i] = np.uint64(fp).astype(np.int64)
             # batch-vectorized LSH band keys (guide §4.2: hand the whole
-            # batch to numpy): value-identical to the JVM slice+hash the
-            # blocking stage would otherwise run per row per band
+            # batch to numpy) instead of a JVM hash per row per band
             bands_col = list(spark_minhash_band_keys(sig32, minhash_bands, rows_per_band))
             yield pd.DataFrame(
                 {

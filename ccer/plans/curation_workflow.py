@@ -39,7 +39,7 @@ from ccer.operators.cluster import connected_components
 from ccer.operators.dedup import decontaminate, exact_dedup, minhash_neardup_pairs
 from ccer.operators.quality import repetition_signals
 from ccer.operators.textstats import stratified_sample
-from ccer.sources.catalog import StageStore
+from ccer.sources.catalog import StageStore, load_manifest
 
 CURATION_STAGE_ORDER = ["docs", "exact", "neardup", "quality", "decontam", "sample"]
 
@@ -192,16 +192,10 @@ def run_curation(
 def stage_counts(workdir: str) -> dict:
     """Read the per-stage row counts (the curation funnel) from the
     StageStore manifest — no recount scans."""
-    import json
-    import os
-
-    path = os.path.join(workdir, "_manifest.json")
-    with open(path) as fh:
-        manifest = json.load(fh)
     return {
         name: {
             "rows": meta.get("rows"),
             "duration_sec": meta.get("duration_sec"),
         }
-        for name, meta in manifest["stages"].items()
+        for name, meta in load_manifest(workdir)["stages"].items()
     }

@@ -30,6 +30,7 @@ from types import SimpleNamespace
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ccer.functions.hashing import band_rows
 from ccer.operators.blocking import block_keys, candidate_pairs, salt_oversized_blocks
 from ccer.operators.cluster import assign_clusters, connected_components
 from ccer.operators.features import extract_features
@@ -55,11 +56,7 @@ class PipelineConfig:
         hamming_prefilter: int | None = 26,
         host_hamming_prefilter: int | None = 16,
     ):
-        if num_perm % minhash_bands != 0:
-            raise ValueError(
-                f"num_perm ({num_perm}) must be a multiple of "
-                f"minhash_bands ({minhash_bands})"
-            )
+        band_rows(num_perm, minhash_bands)  # raises on a ragged banding
         self.num_perm = num_perm
         self.minhash_bands = minhash_bands
         self.simhash_bits = simhash_bits
@@ -78,6 +75,7 @@ class PipelineConfig:
         return dict(
             num_perm=self.num_perm, shingle_k=self.shingle_k,
             text_cap=self.text_cap, minhash_bands=self.minhash_bands,
+            sketch_k=self.scoring.sketch_k, prefix_cap=self.scoring.lev_prefix,
         )
 
     def block_args(self, n_rows: int | None) -> dict:
@@ -92,7 +90,7 @@ class PipelineConfig:
             bits = min(40, max(16, (max(1, (n_rows or 1) // 8)).bit_length()))
         return dict(
             passes=self.passes, minhash_bands=self.minhash_bands,
-            num_perm=self.num_perm, simhash_bits=bits,
+            simhash_bits=bits,
         )
 
     def salt_args(self) -> dict:

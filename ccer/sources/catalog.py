@@ -39,6 +39,16 @@ import time
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 
+def load_manifest(base_dir: str) -> dict:
+    """The stage manifest of a store directory (``{"stages": {}}`` when
+    nothing has been written there yet)."""
+    path = os.path.join(base_dir, "_manifest.json")
+    if os.path.exists(path):
+        with open(path) as fh:
+            return json.load(fh)
+    return {"stages": {}}
+
+
 class StageStore:
     def __init__(
         self,
@@ -65,12 +75,6 @@ class StageStore:
             return False
 
     # ------------------------------------------------------------- manifest
-    def _load_manifest(self) -> dict:
-        if os.path.exists(self.manifest_path):
-            with open(self.manifest_path) as fh:
-                return json.load(fh)
-        return {"stages": {}}
-
     def _save_manifest(self, manifest: dict) -> None:
         tmp = self.manifest_path + ".tmp"
         with open(tmp, "w") as fh:
@@ -78,7 +82,8 @@ class StageStore:
         os.replace(tmp, self.manifest_path)
 
     def completed_stages(self) -> list[str]:
-        return [name for name in self._load_manifest()["stages"] if self.exists(name)]
+        stages = load_manifest(self.base_dir)["stages"]
+        return [name for name in stages if self.exists(name)]
 
     # --------------------------------------------------------------- stages
     def path(self, name: str) -> str:
@@ -101,7 +106,7 @@ class StageStore:
         return os.path.exists(os.path.join(self.path(name), "_SUCCESS"))
 
     def exists(self, name: str) -> bool:
-        meta = self._load_manifest()["stages"].get(name, {})
+        meta = load_manifest(self.base_dir)["stages"].get(name, {})
         if not meta.get("complete", False):
             return False
         if not self._data_present(name):
@@ -113,7 +118,7 @@ class StageStore:
     def rows(self, name: str) -> int | None:
         """The row count ``write`` recorded for a stage (None when it was
         never written), read from the manifest without a Spark job."""
-        return self._load_manifest()["stages"].get(name, {}).get("rows")
+        return load_manifest(self.base_dir)["stages"].get(name, {}).get("rows")
 
     def stage(self, name: str, compute, **write_kwargs) -> DataFrame:
         """The stage runner: reuse ``name`` when it is complete, otherwise
@@ -192,7 +197,7 @@ class StageStore:
         out = self.read(name)
         per_partition = self._lineage_counts(name, out)
         rows = sum(p["rows"] for p in per_partition)
-        manifest = self._load_manifest()
+        manifest = load_manifest(self.base_dir)
         manifest["stages"][name] = {
             "complete": True,
             "rows": rows,
@@ -269,7 +274,7 @@ class StageStore:
             tbl = self._table_name(name)
             if self.spark.catalog.tableExists(tbl):
                 return self.spark.read.table(tbl)
-            meta = self._load_manifest()["stages"].get(name, {})
+            meta = load_manifest(self.base_dir)["stages"].get(name, {})
             if meta.get("bucket_by"):
                 # resume in a fresh session: re-register the external
                 # bucketed table over the existing files (bucket ids are
@@ -290,7 +295,7 @@ class StageStore:
 
     def invalidate_from(self, name: str, order: list[str]) -> None:
         """Mark ``name`` and all later stages incomplete (re-run policy)."""
-        manifest = self._load_manifest()
+        manifest = load_manifest(self.base_dir)
         if name in order:
             for stage in order[order.index(name):]:
                 if stage in manifest["stages"]:

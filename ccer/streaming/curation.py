@@ -31,12 +31,16 @@ BRIDGES two previously-emitted survivors (near-dup of both, which batch
 mode would have merged into one component keeping only the older), the
 already-emitted younger survivor is NOT retracted — an online pipeline
 cannot unship a document. The merge is still recorded in a small
-``relabels`` table (old component label → merged label, transitively
-compressed every batch), so all FUTURE matching treats the two
-components as one; divergence is bounded to the bridged survivors
-themselves and does not compound. Batch equality is exact whenever no
-batch bridges two distinct prior components (tested), and the bridge
-behavior itself is pinned by its own test.
+``relabels`` table (old component label → merged label), so all FUTURE
+matching treats the two components as one; divergence is bounded to the
+bridged survivors themselves and does not compound. Each batch
+compresses ``relabels`` transitively with ``connected_components`` over
+its (old_label, new_label) edges, the engine's one transitive closure:
+every relabel points at a smaller label, so a merge chain's component
+label is its root, and every old label maps straight to the root.
+Batch equality is exact whenever no batch bridges two distinct prior
+components (tested), and the bridge behavior itself is pinned by its
+own test.
 
 State is O(corpus) storage (signatures + buckets of every doc ever —
 the checkpointed-features-stage asymptotics, unavoidable for exact
@@ -83,41 +87,6 @@ def _apply_relabels(df: DataFrame, col: str, relabels: DataFrame) -> DataFrame:
         .withColumn(col, F.coalesce("__nl", col))
         .drop("__nl")
     )
-
-
-def _compress(relabels: DataFrame, max_iter: int = 10) -> DataFrame:
-    """Transitively compress old_label → new_label chains (new_label is
-    itself an old_label of a later merge). The table is tiny; each hop
-    is a self-join, and chains shrink geometrically like the CC star
-    rounds."""
-    cur = relabels.localCheckpoint(eager=True)
-    for _ in range(max_iter):
-        nxt = (
-            cur.alias("a")
-            .join(
-                cur.select(
-                    F.col("old_label").alias("new_label"),
-                    F.col("new_label").alias("__hop"),
-                ).alias("b"),
-                "new_label",
-                "left",
-            )
-            .select(
-                "old_label", F.coalesce("__hop", "new_label").alias("new_label")
-            )
-            .localCheckpoint(eager=True)
-        )
-        changed = (
-            nxt.alias("n")
-            .join(cur.alias("c"), "old_label")
-            .filter(F.col("n.new_label") != F.col("c.new_label"))
-            .limit(1)
-            .count()
-        )
-        cur = nxt
-        if changed == 0:
-            break
-    return cur
 
 
 def curate_batch(
@@ -194,12 +163,14 @@ def curate_batch(
     exact_survivors = exact_survivors.localCheckpoint(eager=True)
 
     # ---- near-dup: batch buckets probe the accumulated bucket state ---
-    sigs_new = text_signatures(
-        exact_survivors, text_col=text_col, id_col="id", num_perm=num_perm
+    sigs_bands = text_signatures(
+        exact_survivors, text_col=text_col, id_col="id", num_perm=num_perm,
+        minhash_bands=bands,
     ).localCheckpoint(eager=True)
-    buckets_new = block_keys(
-        sigs_new, passes=("minhash",), minhash_bands=bands, num_perm=num_perm
-    )
+    buckets_new = block_keys(sigs_bands, passes=("minhash",), minhash_bands=bands)
+    # the band keys live on in ``buckets``; the signature state is
+    # (id, sig, simhash)
+    sigs_new = sigs_bands.drop("bands")
     tagged = buckets_new.withColumn("new", F.lit(True))
     sigs_all = sigs_new
     if state is not None:
@@ -258,10 +229,21 @@ def curate_batch(
     ).select(
         F.col("id").alias("old_label"), F.col("component").alias("new_label")
     )
+    relabels = relabel_delta
     if state is not None:
-        relabels = _compress(state.relabels.unionByName(relabel_delta))
-    else:
-        relabels = _compress(relabel_delta)
+        relabels = state.relabels.unionByName(relabel_delta)
+    # transitive compression: every relabel points at a smaller label, so
+    # each merge chain is a tree whose root is its minimum — the component
+    # label; the non-root members are exactly the relabelled labels
+    relabels = (
+        connected_components(
+            relabels.select(
+                F.col("old_label").alias("id_a"), F.col("new_label").alias("id_b")
+            )
+        )
+        .filter(F.col("id") != F.col("component"))
+        .select(F.col("id").alias("old_label"), F.col("component").alias("new_label"))
+    )
 
     seen_delta = in_batch.select("text_md5", F.col("id").alias("survivor_id"))
     new_state = CurationState(

@@ -77,7 +77,11 @@ def incremental_update(
     the one pass over corpus rows, and keeps only blocks with a new member.
     """
     cfg = config or PipelineConfig()
-    feats_new = extract_features(new_pages, **cfg.features_args())
+    # the batch's features feed its block keys, the profile delta, the
+    # scorer and cluster assignment: materialize the Arrow pass once
+    feats_new = extract_features(new_pages, **cfg.features_args()).localCheckpoint(
+        eager=False
+    )
     if prior_features is None:
         feats_all = feats_new
     else:

@@ -14,7 +14,7 @@ from ccer.plans.pipeline import (
     er_chain,
     run_pipeline,
 )
-from ccer.sources.catalog import StageStore
+from ccer.sources.catalog import StageStore, load_manifest
 from ccer.sources.pages import synthesize_pages
 
 
@@ -72,7 +72,7 @@ def test_pipeline_resume_equals_cold(spark, corpus, tmp_path_factory):
 
     # a fresh session has no catalog table for the bucketed features: the
     # resume re-registers it with the bucket count derived at write time
-    bucket_count = store._load_manifest()["stages"]["features"]["bucket_count"]
+    bucket_count = load_manifest(cold_dir)["stages"]["features"]["bucket_count"]
     assert bucket_count == max(
         corpus.rdd.getNumPartitions(), spark.sparkContext.defaultParallelism
     ) != 64
@@ -103,6 +103,25 @@ def test_lazy_chain_equals_run_pipeline(spark, corpus, tmp_path_factory):
     assert len(lazy_rows) == corpus.count()
     assert lazy_rows == staged_rows
     shutil.rmtree(workdir, ignore_errors=True)
+
+
+def test_er_chain_builds_features_for_the_scorer_config(spark, corpus):
+    """The features pass builds the KMV sketches and text prefixes at the
+    scorer's ``sketch_k`` and ``lev_prefix``: a 32-value sketch runs the
+    chain end to end and still recovers the labelled clusters."""
+    from ccer.operators.features import extract_features
+    from ccer.operators.scoring import ScoringConfig
+
+    cfg = PipelineConfig(scoring=ScoringConfig(sketch_k=32, lev_prefix=64))
+    feats = extract_features(corpus, **cfg.features_args())
+    widest = feats.agg(
+        F.max(F.size("sh")).alias("sh"), F.max(F.length("text_prefix")).alias("prefix")
+    ).collect()[0]
+    assert (widest["sh"], widest["prefix"]) == (32, 64)
+    clusters = er_chain(corpus.drop("true_cluster_id"), cfg, LAZY_STAGES)
+    labels = corpus.select("url", "warc_ts", "true_cluster_id")
+    scores = pairwise_scores(clusters, labels)
+    assert scores["f1"] >= 0.99, scores
 
 
 def test_skew_salting_bounds_block_size(spark, corpus, tmp_path_factory):
@@ -202,9 +221,9 @@ def test_scoring_null_url_pair(spark):
 
 def test_spark_minhash_band_keys_bit_exact(spark):
     """The numpy xxhash64 replica that lets the features pass precompute
-    LSH band keys must match Spark's JVM expression bit-for-bit — this is
-    what keeps the features table's ``bands`` and the slice+hash keys of
-    a signature table mutually compatible (blocking.py block_keys)."""
+    LSH band keys must match Spark's JVM expression bit-for-bit on
+    arbitrary signatures: the band keys of every Arrow pass are values of
+    that reference formula."""
     import numpy as np
     from pyspark.sql import functions as F
 
@@ -230,7 +249,7 @@ def test_spark_minhash_band_keys_bit_exact(spark):
                 assert got[i][f"b{b}"] == int(expect[i, b])
 
 
-def _signatures_of(features, corpus):
+def _signatures_of(features, corpus, minhash_bands=32):
     """``dedup.text_signatures`` of the texts behind a features table,
     keyed by the features id. On texts shorter than the features
     ``text_cap`` each signature is the one the features pass derived its
@@ -241,37 +260,57 @@ def _signatures_of(features, corpus):
         corpus.select("url", "warc_ts", "text"), ["url", "warc_ts"]
     )
     assert docs.count() == features.count()
-    return text_signatures(docs.select(F.col("id").alias("doc_id"), "text"))
+    return text_signatures(
+        docs.select(F.col("id").alias("doc_id"), "text"), minhash_bands=minhash_bands
+    )
+
+
+def _jvm_band_keys(sigs, bands):
+    """The reference band-key formula, in Spark's JVM: (id, block_key)
+    rows of ``xxhash64("m", band, slice(sig, band * rows + 1, rows))``
+    over a signature table."""
+    rows = 128 // bands
+    keys = [
+        F.xxhash64(F.lit("m"), F.lit(b), F.slice("sig", b * rows + 1, rows))
+        for b in range(bands)
+    ]
+    return sigs.select("id", F.explode(F.array(*keys)).alias("block_key"))
+
+
+def _assert_same_rows(got, want):
+    assert got.exceptAll(want).count() == 0
+    assert want.exceptAll(got).count() == 0
 
 
 def test_block_keys_precomputed_bands_match_jvm(spark, corpus):
-    """block_keys over the features table reads its ``bands`` column; its
-    rows must equal the JVM slice+hash keys over the same signatures
-    (``text_signatures``, which has no ``bands``), at the default and at
-    a non-default banding."""
+    """The band keys of both Arrow passes — ``extract_features`` and
+    ``dedup.text_signatures`` — equal the JVM slice+hash formula over the
+    texts' signatures, and ``block_keys`` emits exactly them, at the
+    default and at a non-default banding."""
     from ccer.operators.blocking import block_keys
     from ccer.operators.features import extract_features
 
-    passes = ("minhash", "simhash")
     for bands in (32, 16):
         feats = extract_features(corpus, minhash_bands=bands).cache()
         assert "sig" not in feats.columns
-        sigs = _signatures_of(feats, corpus)
-        from_bands = block_keys(feats, passes=passes, minhash_bands=bands)
-        from_sig = block_keys(sigs, passes=passes, minhash_bands=bands)
-        assert from_bands.count() == corpus.count() * (bands + 3)
-        assert from_bands.exceptAll(from_sig).count() == 0
-        assert from_sig.exceptAll(from_bands).count() == 0
+        sigs = _signatures_of(feats, corpus, minhash_bands=bands).cache()
+        want = _jvm_band_keys(sigs, bands)
+        for table in (feats, sigs):
+            got = block_keys(table, passes=("minhash",), minhash_bands=bands)
+            assert got.count() == corpus.count() * bands
+            _assert_same_rows(got.select("id", "block_key"), want)
         feats.unpersist()
+        sigs.unpersist()
 
 
 def test_pipeline_non_default_banding_blocks_match_jvm(spark, corpus, tmp_path_factory):
     """run_pipeline at minhash_bands=16: the stored features carry 16 band
     keys per row, and the stored MinHash block rows are exactly the JVM
     ``xxhash64("m", band, slice(sig, ...))`` keys over the same texts'
+    signatures — which are also the ``bands`` of their 16-band
     ``text_signatures``."""
     workdir = str(tmp_path_factory.mktemp("bands16"))
-    bands, rows_per_band = 16, 128 // 16
+    bands = 16
     run_pipeline(
         spark,
         corpus.drop("true_cluster_id"),
@@ -282,27 +321,28 @@ def test_pipeline_non_default_banding_blocks_match_jvm(spark, corpus, tmp_path_f
     store = StageStore(spark, workdir)
     feats = store.read("features")
     assert {r[0] for r in feats.select(F.size("bands")).distinct().collect()} == {bands}
-    sigs = _signatures_of(feats, corpus)
-    want = sigs.select(
-        "id",
-        F.explode(
-            F.array(
-                *[
-                    F.xxhash64(
-                        F.lit("m"),
-                        F.lit(b),
-                        F.slice("sig", b * rows_per_band + 1, rows_per_band),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("block_key"),
-    )
+    sigs = _signatures_of(feats, corpus, minhash_bands=bands)
+    want = _jvm_band_keys(sigs, bands)
     got = store.read("blocks").filter(F.col("pass_id") == 3).select("id", "block_key")
     assert got.count() == corpus.count() * bands
-    assert got.exceptAll(want).count() == 0
-    assert want.exceptAll(got).count() == 0
+    _assert_same_rows(got, want)
+    _assert_same_rows(
+        sigs.select("id", F.explode("bands").alias("block_key")), want
+    )
     shutil.rmtree(workdir, ignore_errors=True)
+
+
+def test_block_keys_minhash_pass_needs_bands(spark):
+    """The MinHash pass has one band-key source, the ``bands`` column: a
+    table without it raises instead of deriving keys some other way."""
+    from ccer.operators.blocking import block_keys
+
+    sigs = spark.createDataFrame(
+        [(1, [0] * 128, 0)], "id long, sig array<int>, simhash long"
+    )
+    with pytest.raises(ValueError, match="bands"):
+        block_keys(sigs, passes=("minhash",))
+    assert block_keys(sigs, passes=("simhash",)).count() == 3
 
 
 def test_block_keys_rejects_features_of_another_banding(spark, corpus):

@@ -74,12 +74,22 @@ def test_incremental_profile_skips_corpus_recount(spark):
     _, _, _, _, pr2 = incremental_update(
         spark, f1, c1, p2, prior_blocks=b1, prior_profile=pr1
     )
-    # pr2 = merge(pr1 checkpoint, count(batch block rows)). The four
-    # prior-state checkpoints all surface as "Scan ExistingRDD"; exactly
-    # ONE (pr1) may appear in pr2's plan. A fallback that re-counted
-    # blocks_raw_all would pull in b1's checkpoint as a second scan.
-    pr2_plan = pr2._jdf.queryExecution().toString()
-    assert pr2_plan.count("Scan ExistingRDD") == 1, pr2_plan
+    # pr2 = merge(pr1 checkpoint, count(batch block rows)). Checkpoints
+    # surface as "Scan ExistingRDD[<their output attributes>]"; of the
+    # four prior-state checkpoints exactly ONE (pr1) may appear in pr2's
+    # plan, next to the batch's own features checkpoint. A fallback that
+    # re-counted blocks_raw_all would pull in b1's checkpoint.
+    import re
+
+    def scans(df):
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        return re.findall(r"Scan ExistingRDD\[[^\]]*\]", plan)
+
+    pr2_scans = scans(pr2)
+    assert len(pr2_scans) == 2, pr2_scans
+    assert scans(pr1)[0] in pr2_scans, pr2_scans
+    for prior in (f1, b1, c1):
+        assert scans(prior)[0] not in pr2_scans, pr2_scans
     pages.unpersist()
 
 

@@ -131,6 +131,73 @@ def test_bridge_merges_for_future_not_retroactively(spark, vocab):
     assert s3.count() == 0
 
 
+def _union_find_relabels(sigs, survivors, threshold=0.7):
+    """Oracle for the ``relabels`` table: union every pair of state
+    signatures whose estimated Jaccard reaches ``threshold`` (min id as
+    the root), and map each emitted survivor's label to its root."""
+    parent = {i: i for i in sigs}
+
+    def find(i):
+        while parent[i] != i:
+            i = parent[i]
+        return i
+
+    ids = sorted(sigs)
+    for n, i in enumerate(ids):
+        for j in ids[n + 1:]:
+            if (sigs[i] == sigs[j]).mean() >= threshold:
+                ri, rj = find(i), find(j)
+                parent[max(ri, rj)] = min(ri, rj)
+    return {s: find(s) for s in survivors if find(s) != s}
+
+
+def test_relabels_equal_union_find_over_two_bridges(spark, vocab):
+    """Three batches, two bridges that chain: batch 2's m1 merges c and b
+    (b → c), batch 3's m2 merges a with b's merged component (c → a), so
+    the compressed relabels must send b straight to a. After every batch
+    ``relabels`` equals a union-find over the state's signatures."""
+    base = list(vocab[:80])
+
+    def mutate(words, positions, name):
+        out = list(words)
+        for j, pos in enumerate(positions):
+            out[pos] = f"{name}{j}"
+        return out
+
+    # a mutates position 0 to sort (and so get its arrival id) first;
+    # a, b and c are pairwise below the threshold (est 0.48, 0.25, 0.60)
+    a = mutate(base, (0, 10, 20, 30, 40, 50, 60, 70), "amut")
+    c = mutate(base, (5, 15, 25, 35, 45, 55, 65, 75), "cmut")
+    m1 = list(base)
+    for pos in (15, 25, 35, 45):
+        m1[pos] = c[pos]             # est 0.79 to b, 0.77 to c
+    m2 = list(base)
+    for pos in (40, 50, 60, 70):
+        m2[pos] = a[pos]             # est 0.75 to a, 0.72 to b
+    batches = [
+        [("a", _doc("a", a)), ("b", _doc("a", base)), ("c", _doc("a", c))],
+        [("m1", _doc("a", m1)), ("fresh", _doc("b", vocab[200:280]))],
+        [("m2", _doc("a", m2))],
+    ]
+
+    st, survivors, names, sizes = None, set(), {}, []
+    for rows in batches:
+        surv, st = curate_batch(
+            spark, st, spark.createDataFrame(rows, "name string, text string")
+        )
+        for r in surv.collect():
+            survivors.add(r["id"])
+            names[r["name"]] = r["id"]
+        sigs = {r["id"]: np.array(r["sig"]) for r in st.sigs.collect()}
+        want = _union_find_relabels(sigs, survivors)
+        got = {r["old_label"]: r["new_label"] for r in st.relabels.collect()}
+        assert got == want
+        sizes.append(len(got))
+    assert set(names) == {"a", "b", "c", "fresh"}        # both bridges drop
+    assert sizes == [0, 1, 2]
+    assert got == {names["b"]: names["a"], names["c"]: names["a"]}
+
+
 def test_stream_curate_end_to_end(spark, tmp_path, vocab):
     """File-source streaming curation: two files → two curated appends,
     persisted state, cross-file dedup. A second availableNow pass with a
