@@ -1,5 +1,7 @@
 """Deterministic hashing kernels: stable 64-bit hash, shingle hashes,
-MinHash, SimHash, and a numpy replica of Spark's ``xxhash64`` band keys.
+MinHash, SimHash, and a numpy replica of Spark's ``xxhash64`` band keys,
+composed per batch by ``signature_batch`` — the one step both Arrow
+passes (ER features, dedup signatures) run.
 
 Python's builtin ``hash`` is salted per-process, so it can never be used
 on executors. Every hash here is a pure function of its input,
@@ -256,24 +258,63 @@ def simhash_from_hashes(base: np.ndarray, weights=None) -> int:
     return int(out)
 
 
-def shingle_signature(
-    words: list, k: int, num_perm: int, word_cache: dict | None = None
-) -> tuple[np.ndarray, np.ndarray, int]:
-    """One document's word list → (shingle hashes, MinHash signature,
-    SimHash fingerprint) — the per-document signature step shared by the
-    ER features pass and the dedup family.
+# per-process word-hash memo for ``signature_batch`` (web text is
+# Zipfian: most word hashes are hits), cleared past the bound to keep
+# worker RSS flat on adversarial vocabularies
+_WORD_CACHE: dict = {}
 
-    At least ``k`` words hash their k-word windows with
-    ``shingle_hashes64``; fewer words hash as one shingle of the joined
-    words; no words give no shingles (all-max signature, fingerprint 0).
-    Signature and fingerprint both derive from the same hashes, so
-    repeated shingles count once in the MinHash and once per occurrence
-    in the SimHash bit-sums.
+
+def signature_batch(
+    word_lists, k: int, num_perm: int, *,
+    sig: bool = False, bands: int | None = None, sketch_k: int | None = None,
+) -> dict:
+    """Documents' word lists → ``{column: values}`` holding ``simhash``
+    (every caller's ``block_keys`` reads it) and only the other columns
+    asked for; array columns hold one numpy array per document (Arrow
+    takes ndarray cells directly; boxing ints into Python lists would
+    dominate the pass). ``word_lists`` is iterated once, so a generator
+    keeps one document's words alive at a time.
+
+    A document's shingle hashes are ``shingle_hashes64`` over its k-word
+    windows; fewer than ``k`` words hash as one shingle of the joined
+    words, no words give none. From them: ``sig`` is the ``num_perm``
+    MinHash signature truncated to 32 bits (top half of each 64-bit
+    min-hash, order-preserving; all-max when empty); ``bands`` its
+    ``bands`` LSH band keys (``spark_minhash_band_keys``); ``simhash`` is
+    the int64 SimHash (0 when empty); ``sh``/``n_sh`` the bottom-
+    ``sketch_k`` unique 32-bit hashes (ascending int32) and their
+    unique count. The MinHash grid, the costliest step, runs only for
+    ``sig`` or ``bands``. Grids stay per document: ``np.minimum.reduceat``
+    over the concatenated hashes measured 4x slower.
     """
-    if len(words) >= k:
-        sh = shingle_hashes64(words, k, word_cache)
-    elif words:
-        sh = np.array([hash64(" ".join(words))], dtype=np.uint64)
-    else:
-        sh = np.empty(0, dtype=np.uint64)
-    return sh, minhash_from_hashes(sh, num_perm=num_perm), simhash_from_hashes(sh)
+    rows_per_band = band_rows(num_perm, bands) if bands is not None else None
+    want_minhash = sig or bands is not None
+    if len(_WORD_CACHE) > 2_000_000:
+        _WORD_CACHE.clear()
+    sigs, fps, sketches, n_sh = [], [], [], []
+    for words in word_lists:
+        if len(words) >= k:
+            sh = shingle_hashes64(words, k, _WORD_CACHE)
+        elif words:
+            sh = np.array([hash64(" ".join(words))], dtype=np.uint64)
+        else:
+            sh = np.empty(0, dtype=np.uint64)
+        if want_minhash:
+            sigs.append(minhash_from_hashes(sh, num_perm=num_perm))
+        fps.append(simhash_from_hashes(sh))
+        if sketch_k is not None:
+            h32 = np.unique((sh >> np.uint64(32)).astype(np.uint32))
+            n_sh.append(h32.size)
+            sketches.append(h32[:sketch_k].view(np.int32))
+    out: dict = {"simhash": np.array(fps, dtype=np.uint64).view(np.int64)}
+    if want_minhash:
+        sig64 = np.array(sigs, dtype=np.uint64).reshape(-1, num_perm)
+        sig32 = (sig64 >> np.uint64(32)).astype(np.uint32).view(np.int32)
+        if sig:
+            out["sig"] = list(sig32)
+        if bands is not None:
+            out["bands"] = list(spark_minhash_band_keys(sig32, bands, rows_per_band))
+    if sketch_k is not None:
+        out["sh"] = sketches
+        out["n_sh"] = np.array(n_sh, dtype=np.int32)
+    return out

@@ -21,7 +21,7 @@ scorer rejects), never loses a pair.
 Everything here is JVM-side column algebra over the features table — the
 Python work (signatures, band keys) happened once in the Arrow pass that
 made the table (``extract_features`` or ``dedup.text_signatures``, both
-through ``spark_minhash_band_keys``), so the whole stage is
+through ``hashing.signature_batch``), so the whole stage is
 whole-stage-codegen'd. There is no other band-key formula.
 
 Skew (north rule "salted, skew-aware block partitions"): a block larger
@@ -53,14 +53,14 @@ def block_keys(
 
     The MinHash pass reads the table's ``bands`` column: the band keys
     the Arrow pass that made the table computed (``extract_features``
-    and ``dedup.text_signatures``, both via ``spark_minhash_band_keys``).
+    and ``dedup.text_signatures``, both via ``hashing.signature_batch``).
     A table without ``bands`` raises ``ValueError``; a row that does not
     carry exactly ``minhash_bands`` keys fails the job.
     """
     if "minhash" in passes and "bands" not in features.columns:
         raise ValueError(
-            "the minhash pass reads precomputed band keys: the table has no "
-            "'bands' column (build it with extract_features or text_signatures)"
+            "the minhash pass reads precomputed band keys: the table has no 'bands' "
+            "column (build it with extract_features or text_signatures(minhash=True))"
         )
 
     # ONE scan of the features table for ALL passes: every pass's keys go

@@ -13,13 +13,13 @@ engine provides beyond reference parity):
 - embedding     cosine near-dup over array<float> (see ann.py)
 
 The MinHash and SimHash modes are the ER near-dup core, not a copy of
-it: signatures come from the features pass's per-document step
-(``shingle_signature``), band keys from its ``spark_minhash_band_keys``,
-block rows from ``block_keys`` and pairs from ``candidate_pairs``, so a
-text's signature and band keys here equal its ER features-table values.
-Everything except the one Arrow pass (signatures and band keys) is
-JVM-side column algebra — blocking keys, pair generation, Hamming
-distances, and Jaccard all run inside whole-stage codegen.
+it: signatures, fingerprints and band keys come from the features
+pass's batch step (``hashing.signature_batch``), block rows from
+``block_keys`` and pairs from ``candidate_pairs``, so a text's
+fingerprint and band keys here equal its ER features-table values.
+Everything except the one Arrow pass (``text_signatures``) is JVM-side
+column algebra — blocking keys, pair generation, Hamming distances, and
+Jaccard all run inside whole-stage codegen.
 """
 
 from __future__ import annotations
@@ -28,7 +28,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
-from ccer.functions.hashing import band_rows, shingle_signature, spark_minhash_band_keys
+from ccer.functions.hashing import band_rows, signature_batch
 from ccer.functions.normalize import normalize_text
 from ccer.operators.blocking import block_keys, candidate_pairs
 
@@ -112,56 +112,39 @@ def text_signatures(
     num_perm: int = 128,
     shingle_k: int = 3,
     minhash_bands: int = 32,
+    minhash: bool = True,
 ) -> DataFrame:
-    """One Arrow pass: id → (MinHash signature, SimHash fingerprint, LSH
-    band keys), the ``id``/``sig``/``simhash``/``bands`` columns
-    ``block_keys`` and ``estimated_jaccard`` read.
+    """One Arrow pass: id → SimHash fingerprint ``simhash`` and, with
+    ``minhash``, the 32-bit MinHash signature ``sig`` and its
+    ``minhash_bands`` LSH band keys ``bands`` (what ``block_keys`` and
+    ``estimated_jaccard`` read). Without ``minhash`` the MinHash grid is
+    never built: the SimHash near-dup pass reads only ``simhash``.
 
-    Each text goes through the features pass's per-document step
-    (``shingle_signature``) over its full normalized text, and the batch's
-    band keys through its ``spark_minhash_band_keys`` for ``minhash_bands``
-    bands. A text shorter than the features ``text_cap`` therefore gets
-    its ER features row's ``simhash`` and ``bands``, and ``block_keys``
-    emits the same MinHash keys over both tables. Signatures are stored
-    32-bit (top half of each 64-bit min-hash, order-preserving truncation
-    — the convention of the ER features pass and datasketch's default
-    precision). Halves every downstream signature byte: the pair-verify
-    join-backs and the localCheckpointed live set in the curation funnel
-    / streaming state. Cost: an extra 2^-32 per-position collision
-    probability in the estimated-Jaccard match count — ≪ the sketch's own
-    1/sqrt(num_perm) noise.
+    Each batch's normalized, split texts go through one
+    ``hashing.signature_batch`` call, the step the features pass runs, so
+    a text shorter than the features ``text_cap`` gets its ER features
+    row's ``simhash`` and ``bands``. 32-bit signatures halve every
+    downstream signature byte (pair-verify join-backs, the curation
+    live set and streaming state) at an extra 2^-32 per-position
+    collision probability, ≪ the estimate's 1/sqrt(num_perm) noise.
     """
-    rows_per_band = band_rows(num_perm, minhash_bands)
+    if minhash:
+        band_rows(num_perm, minhash_bands)  # raises on a ragged banding
     target = docs.sparkSession.sparkContext.defaultParallelism
     if docs.rdd.getNumPartitions() < target:
         docs = docs.repartition(target)
 
     def gen(iterator):
-        # per-task word-hash memo for the shingle hasher, bounded as in
-        # the features pass
-        word_cache: dict = {}
         for pdf in iterator:
-            if len(word_cache) > 2_000_000:
-                word_cache.clear()
-            sig32 = np.empty((len(pdf), num_perm), dtype=np.int32)
-            fps = np.empty(len(pdf), dtype=np.int64)
-            for i, text in enumerate(pdf[text_col].tolist()):
-                words = (normalize_text(text) or "").split()
-                _, sig, fp = shingle_signature(words, shingle_k, num_perm, word_cache)
-                sig32[i] = (sig >> np.uint64(32)).astype(np.uint32).view(np.int32)
-                fps[i] = np.uint64(fp).astype(np.int64)
-            yield pd.DataFrame(
-                {
-                    "id": pdf[id_col].astype(np.int64),
-                    "sig": list(sig32),
-                    "simhash": fps,
-                    "bands": list(
-                        spark_minhash_band_keys(sig32, minhash_bands, rows_per_band)
-                    ),
-                }
+            words = ((normalize_text(t) or "").split() for t in pdf[text_col].tolist())
+            signatures = signature_batch(
+                words, shingle_k, num_perm,
+                sig=minhash, bands=minhash_bands if minhash else None,
             )
+            yield pd.DataFrame({"id": pdf[id_col].astype(np.int64), **signatures})
 
-    return docs.select(id_col, text_col).mapInPandas(gen, schema=SIGNATURE_SCHEMA)
+    schema = SIGNATURE_SCHEMA if minhash else "id long, simhash long"
+    return docs.select(id_col, text_col).mapInPandas(gen, schema=schema)
 
 
 def _join_endpoints(pairs: DataFrame, sigs: DataFrame, col: str) -> DataFrame:
@@ -231,11 +214,9 @@ def simhash_neardup_pairs(
     bit_count(a XOR b) prefilter; the distance is recomputed on the
     surviving pairs."""
     # consumed three times (keys + the two fingerprint join-backs); only
-    # the fingerprint is kept
-    sigs = (
-        text_signatures(docs, text_col, id_col)
-        .select("id", "simhash")
-        .localCheckpoint(eager=False)
+    # the fingerprint is built
+    sigs = text_signatures(docs, text_col, id_col, minhash=False).localCheckpoint(
+        eager=False
     )
     blocks = block_keys(
         sigs,

@@ -24,9 +24,11 @@ byte here rides it once per consuming join):
 - the KMV overlap sketch stores 32-bit values (the order-preserving top
   half of each 64-bit hash): bottom-k semantics are preserved with
   collision probability 2^-32 per comparison — immaterial next to the
-  estimator's own variance — at half the bytes. The band keys hash the
-  same 32-bit truncation of the signature that ``dedup.text_signatures``
-  stores, with the same kernel, so a text's keys are equal in both.
+  estimator's own variance — at half the bytes.
+
+The band keys, SimHash and sketch come from one ``signature_batch`` call
+per Arrow batch, the step ``dedup.text_signatures`` runs too, so a
+text's band keys and fingerprint are equal in both tables.
 """
 
 from __future__ import annotations
@@ -35,12 +37,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 
-from ccer.functions.hashing import (
-    band_rows,
-    hash64,
-    shingle_signature,
-    spark_minhash_band_keys,
-)
+from ccer.functions.hashing import band_rows, hash64, signature_batch
 from ccer.functions.normalize import html_to_text, normalize_text, normalize_url, url_host
 
 FEATURES_SCHEMA = (
@@ -84,7 +81,7 @@ def extract_features(
     """
     from pyspark.sql import functions as F
 
-    rows_per_band = band_rows(num_perm, minhash_bands)
+    band_rows(num_perm, minhash_bands)  # raises on a ragged banding
 
     cols = pages.columns
     has_text = "text" in cols
@@ -114,70 +111,49 @@ def extract_features(
         pages = pages.repartition(target)
 
     def gen(iterator):
-        # per-task word-hash memo for the shingle hasher: web text is
-        # Zipfian, so most word hashes are cache hits. Bounded to keep
-        # worker RSS flat on adversarial vocabularies.
-        word_cache: dict = {}
         for pdf in iterator:
-            if len(word_cache) > 2_000_000:
-                word_cache.clear()
             n = len(pdf)
             urls = pdf["url"].tolist()
             tss = pdf["warc_ts"].tolist()
             langs = pdf["lang"].tolist() if "lang" in pdf else [None] * n
             texts = pdf["text"].tolist() if has_text else [None] * n
             htmls = pdf["html"].tolist() if has_html else [None] * n
-            # column-wise output buffers; sketch/band-key columns stay
-            # numpy (Arrow consumes ndarray cells directly — boxing the
-            # ints per row into Python lists would dominate the pass)
+            # column-wise output buffers
             rids, ids2 = [], np.empty(n, dtype=np.int64)
             url_norms, hosts, title_norms = [], [], []
             text_prefixes = []
             text_norm_hashes = np.empty(n, dtype=np.int64)
             n_tokens = np.empty(n, dtype=np.int32)
-            n_shs = np.empty(n, dtype=np.int32)
-            sig32 = np.empty((n, num_perm), dtype=np.int32)
-            shs = []
-            fps = np.empty(n, dtype=np.int64)
-            for i in range(n):
-                url = urls[i] or ""
-                text = texts[i]
-                if text is None and htmls[i] is not None:
-                    text = html_to_text(htmls[i])
-                text = text or ""
-                title = text.split("\n", 1)[0][:title_cap]
-                text_norm = normalize_text(text[:text_cap]) or ""
-                title_norm = normalize_text(title) or ""
-                words = text_norm.split()
-                # hash shingles ONCE; signature, fingerprint, and the
-                # pairwise-overlap sketch all derive from the same hashes.
-                # Per-doc signature grids beat a batch-level segmented
-                # reduce: np.minimum.reduceat over the concatenated hashes
-                # was measured 4x SLOWER than the per-doc (num_perm × n)
-                # grids — reduceat's segmented inner loop runs ~10x below
-                # contiguous ufunc throughput.
-                sh, sig, fp = shingle_signature(words, shingle_k, num_perm, word_cache)
-                rid = f"{url}@{tss[i].isoformat() if tss[i] is not None else ''}"
-                rids.append(rid)
-                ids2[i] = stable_id(rid)
-                url_norms.append(normalize_url(url))
-                hosts.append(url_host(url))
-                title_norms.append(title_norm)
-                text_norm_hashes[i] = hash64(text_norm) & 0x7FFFFFFFFFFFFFFF
-                text_prefixes.append(text_norm[:prefix_cap])
-                n_tokens[i] = len(words)
-                # 32-bit hash space for signature + sketch: the top half
-                # of each 64-bit hash (order-preserving truncation)
-                sig32[i] = (sig >> np.uint64(32)).astype(np.uint32).view(np.int32)
-                # bottom-k (KMV) sketch over the 32-bit hashes — unique
-                # ascending, so the scorer's set ops can assume_unique
-                h32 = np.unique((sh >> np.uint64(32)).astype(np.uint32))
-                n_shs[i] = h32.size
-                shs.append(h32[:sketch_k].view(np.int32))
-                fps[i] = np.uint64(fp).astype(np.int64)
-            # batch-vectorized LSH band keys (guide §4.2: hand the whole
-            # batch to numpy) instead of a JVM hash per row per band
-            bands_col = list(spark_minhash_band_keys(sig32, minhash_bands, rows_per_band))
+
+            def words_per_doc():
+                # the per-record columns, yielding each document's words
+                # to the signature step as it goes
+                for i in range(n):
+                    url = urls[i] or ""
+                    text = texts[i]
+                    if text is None and htmls[i] is not None:
+                        text = html_to_text(htmls[i])
+                    text = text or ""
+                    title = text.split("\n", 1)[0][:title_cap]
+                    text_norm = normalize_text(text[:text_cap]) or ""
+                    words = text_norm.split()
+                    rid = f"{url}@{tss[i].isoformat() if tss[i] is not None else ''}"
+                    rids.append(rid)
+                    ids2[i] = stable_id(rid)
+                    url_norms.append(normalize_url(url))
+                    hosts.append(url_host(url))
+                    title_norms.append(normalize_text(title) or "")
+                    text_norm_hashes[i] = hash64(text_norm) & 0x7FFFFFFFFFFFFFFF
+                    text_prefixes.append(text_norm[:prefix_cap])
+                    n_tokens[i] = len(words)
+                    yield words
+
+            # band keys, fingerprint and overlap sketch all derive from
+            # one hashing of each document's shingles
+            signatures = signature_batch(
+                words_per_doc(), shingle_k, num_perm,
+                bands=minhash_bands, sketch_k=sketch_k,
+            )
             yield pd.DataFrame(
                 {
                     "rid": rids,
@@ -191,10 +167,7 @@ def extract_features(
                     "text_norm_hash": text_norm_hashes,
                     "text_prefix": text_prefixes,
                     "n_tokens": n_tokens,
-                    "n_sh": n_shs,
-                    "simhash": fps,
-                    "sh": shs,
-                    "bands": bands_col,
+                    **signatures,
                 }
             )
 

@@ -119,9 +119,12 @@ def stream_ingest(
     input_dir: str,
     workdir: str,
     trigger_once: bool = True,
+    config: PipelineConfig | None = None,
 ):
     """File-source streaming ingestion: each micro-batch is featurized by
-    the canonical kernel and appended to ``<workdir>/features_stream``.
+    the canonical kernel under ``config``'s features arguments (the batch
+    pipeline's ``PipelineConfig``) and appended to
+    ``<workdir>/features_stream``.
 
     foreachBatch gives exactly-once-per-batch appends (the batch id is
     recorded by the checkpoint); clustering runs on demand over the
@@ -129,9 +132,10 @@ def stream_ingest(
     """
     out_path = os.path.join(workdir, "features_stream")
     checkpoint = os.path.join(workdir, "_stream_checkpoint")
+    features_args = (config or PipelineConfig()).features_args()
 
     def handle_batch(batch_df: DataFrame, batch_id: int) -> None:
-        feats = extract_features(batch_df)
+        feats = extract_features(batch_df, **features_args)
         feats.withColumn("batch_id", F.lit(batch_id)).write.mode("append").parquet(
             out_path
         )

@@ -101,20 +101,53 @@ def test_simhash_neardup_finds_planted(spark, corpus):
     assert not any({a, b} == {0, 3} for a, b in pairs)
 
 
+# (id_a, id_b, hamming) of ``simhash_neardup_pairs(max_hamming=6)`` over
+# 200 synthetic pages, pinned from a signature pass that also built the
+# MinHash signature and band keys
+SIMHASH_PAIRS_200 = [
+    (1307, 60172, 6), (1625, 91422, 4), (9084, 48085, 5), (9939, 55021, 6),
+    (11128, 92472, 6), (11943, 24877, 5), (11943, 64177, 6), (11943, 74994, 5),
+    (11943, 88284, 5), (11984, 12479, 5), (11984, 22259, 2), (12479, 22259, 5),
+    (13620, 55331, 4), (23758, 50982, 5), (24877, 64177, 3), (24877, 74994, 2),
+    (24877, 88284, 6), (26492, 40652, 5), (28348, 41007, 4), (31944, 74224, 5),
+    (32029, 73800, 6), (32219, 64177, 2), (32219, 95106, 6), (35030, 52552, 4),
+    (35719, 67202, 6), (35910, 72986, 5), (37570, 44663, 5), (39323, 48085, 5),
+    (40722, 87952, 4), (44450, 86191, 5), (44450, 93767, 3), (48085, 71779, 4),
+    (48085, 86566, 6), (48596, 58342, 6), (52830, 75334, 6), (64177, 74994, 3),
+    (64177, 88284, 3), (64177, 95106, 4), (71779, 86566, 6), (74994, 88284, 6),
+]
+
+
+def test_simhash_neardup_pairs_pinned(spark):
+    """The fingerprint-only signature pass behind ``simhash_neardup_pairs``
+    finds exactly the pairs, with exactly the distances, of the full one."""
+    from ccer.sources.pages import synthesize_pages
+
+    pages = synthesize_pages(spark, 200, seed=42, with_labels=False)
+    docs = pages.select((F.abs(F.xxhash64("url")) % 100000).alias("doc_id"), "text")
+    got = sorted(tuple(r) for r in simhash_neardup_pairs(docs, max_hamming=6).collect())
+    assert got == SIMHASH_PAIRS_200
+
+
 def test_dedup_reads_er_signature_and_band_keys(spark, monkeypatch):
     """The dedup family is the ER near-dup core, not a copy of it:
-    ``text_signatures`` gives every text the ``shingle_signature`` of its
-    normalized words (the features pass's per-document step) and, on
-    texts shorter than the features text_cap, its ER features
-    ``simhash``; the MinHash block keys ``minhash_neardup_pairs``
-    generates pairs from are exactly ``block_keys`` over the features
-    table's ``bands``."""
+    ``text_signatures`` gives every text the MinHash signature and
+    SimHash of its normalized words' shingle hashes (composed here from
+    the public kernels) and, on texts shorter than the features text_cap,
+    its ER features ``simhash``; the MinHash block keys
+    ``minhash_neardup_pairs`` generates pairs from are exactly
+    ``block_keys`` over the features table's ``bands``."""
     import datetime
 
     import numpy as np
 
     import ccer.operators.dedup as dedup
-    from ccer.functions.hashing import shingle_signature
+    from ccer.functions.hashing import (
+        hash64,
+        minhash_from_hashes,
+        shingle_hashes64,
+        simhash_from_hashes,
+    )
     from ccer.functions.normalize import normalize_text
     from ccer.operators.blocking import block_keys
     from ccer.operators.features import extract_features
@@ -141,7 +174,11 @@ def test_dedup_reads_er_signature_and_band_keys(spark, monkeypatch):
     want = {}
     for i, t in enumerate(texts):
         words = (normalize_text(t) or "").split()
-        _, sig, fp = shingle_signature(words, 3, 128, {})
+        if len(words) >= 3:
+            sh = shingle_hashes64(words, 3)
+        else:  # fewer words hash as one shingle, no words as none
+            sh = np.array([hash64(" ".join(words))] if words else [], dtype=np.uint64)
+        sig, fp = minhash_from_hashes(sh, num_perm=128), simhash_from_hashes(sh)
         sig32 = (sig >> np.uint64(32)).astype(np.uint32).view(np.int32)
         want[ids[f"https://example.com/{i}"]] = (
             sig32.tolist(),

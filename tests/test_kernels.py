@@ -31,10 +31,12 @@ from ccer.functions.textsim import (
     levenshtein,
     levenshtein_ratio,
 )
+from ccer.functions import hashing
 from ccer.functions.hashing import (
     hash64,
     minhash_from_hashes,
     shingle_hashes64,
+    signature_batch,
     simhash_from_hashes,
     spark_minhash_band_keys,
 )
@@ -303,6 +305,81 @@ def test_simhash_near_duplicates_close():
     d_far = bin(_simhash(base) ^ _simhash(far)).count("1")
     assert d_near <= 8
     assert d_far > 16
+
+
+def _signature_docs():
+    """Word lists covering every shingle case: k or more words, fewer
+    than k (one joined-words shingle), none."""
+    rng = np.random.RandomState(3)
+    vocab = [f"w{i}" for i in range(200)]
+    docs = [[vocab[j] for j in rng.randint(0, 200, size=rng.randint(3, 80))] for _ in range(40)]
+    return docs + [[], ["solo"], ["two", "words"], ["a", "b", "c"]]
+
+
+def _reference_shingles(words, k=3):
+    if len(words) >= k:
+        return shingle_hashes64(words, k)
+    if words:
+        return np.array([hash64(" ".join(words))], dtype=np.uint64)
+    return np.empty(0, dtype=np.uint64)
+
+
+def test_signature_batch_matches_public_kernels():
+    """Every column of ``signature_batch`` equals the composition of the
+    public kernels: shingle hashes → MinHash truncated to its top 32 bits
+    → band keys, SimHash as int64, and the bottom-k unique 32-bit sketch."""
+    docs = _signature_docs()
+    got = signature_batch(iter(docs), 3, 128, sig=True, bands=32, sketch_k=16)
+    assert sorted(got) == ["bands", "n_sh", "sh", "sig", "simhash"]
+    for i, words in enumerate(docs):
+        sh = _reference_shingles(words)
+        sig32 = (minhash_from_hashes(sh, num_perm=128) >> np.uint64(32)).astype(
+            np.uint32
+        ).view(np.int32)
+        assert (got["sig"][i] == sig32).all()
+        keys = spark_minhash_band_keys(sig32[None, :], 32, 4)[0]
+        assert (got["bands"][i] == keys).all()
+        assert got["simhash"][i] == np.uint64(simhash_from_hashes(sh)).astype(np.int64)
+        h32 = np.unique((sh >> np.uint64(32)).astype(np.uint32))
+        assert got["n_sh"][i] == h32.size
+        assert (got["sh"][i] == h32[:16].view(np.int32)).all()
+    with pytest.raises(ValueError, match="multiple"):
+        signature_batch(iter(docs), 3, 100, bands=32)
+
+
+def test_signature_batch_simhash_only_skips_minhash(monkeypatch):
+    """A caller reading only ``simhash`` (``simhash_neardup_pairs``)
+    never builds the MinHash grid, and gets the fingerprints a full
+    request gives."""
+    docs = _signature_docs()
+    full = signature_batch(iter(docs), 3, 128, sig=True, bands=32)
+
+    def no_minhash(*args, **kwargs):
+        raise AssertionError("MinHash built for a simhash-only request")
+
+    monkeypatch.setattr(hashing, "minhash_from_hashes", no_minhash)
+    got = signature_batch(iter(docs), 3, 128)
+    assert list(got) == ["simhash"]
+    assert (got["simhash"] == full["simhash"]).all()
+
+
+def test_signature_kernels_called_only_in_hashing():
+    """``signature_batch`` is the one place in ``ccer/`` that builds
+    MinHash signatures, SimHash fingerprints and band keys: no other
+    module calls those kernels, so no second signature loop can form."""
+    import pathlib
+    import re
+
+    root = pathlib.Path(__file__).resolve().parent.parent / "ccer"
+    call = re.compile(
+        r"(?<!def )\b(minhash_from_hashes|simhash_from_hashes|spark_minhash_band_keys)\s*\("
+    )
+    callers = sorted(
+        str(path.relative_to(root.parent))
+        for path in root.rglob("*.py")
+        if call.search(path.read_text())
+    )
+    assert callers == ["ccer/functions/hashing.py"]
 
 
 # ------------------------------------------------------------------- names

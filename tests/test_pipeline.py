@@ -1,6 +1,7 @@
 """End-to-end ER pipeline: synthetic labeled corpus → clusters → F1 gate,
 plus generator determinism and resume-equals-cold-run."""
 
+import os
 import shutil
 
 import pytest
@@ -88,6 +89,44 @@ def test_pipeline_resume_equals_cold(spark, corpus, tmp_path_factory):
     }
     assert described["Num Buckets"] == str(bucket_count)
     shutil.rmtree(cold_dir, ignore_errors=True)
+
+
+def test_stage_store_failed_write_stays_incomplete(spark, tmp_path):
+    """A stage whose compute fails mid-write (a Python UDF raising on one
+    row, after other tasks wrote their files) leaves no ``_SUCCESS``
+    marker and no complete manifest entry, so ``exists`` is False and the
+    next ``stage`` call recomputes; the recomputed stage equals a clean
+    run. This pins the write order: data, then ``_SUCCESS``, then the
+    manifest — on the plain and the bucketed write path."""
+    clean = spark.range(0, 400, numPartitions=4).withColumn("v", F.col("id") * 3)
+
+    @F.udf("long")
+    def fail_on_one_row(x):
+        if x == 337:
+            raise RuntimeError("injected fault")
+        return x
+
+    for bucket_by in (None, "id"):
+        store = StageStore(spark, str(tmp_path / f"store_{bucket_by}"))
+        calls = []
+
+        def faulty():
+            calls.append("faulty")
+            return clean.withColumn("id", fail_on_one_row("id"))
+
+        def healthy():
+            calls.append("healthy")
+            return clean
+
+        with pytest.raises(Exception, match="injected fault"):
+            store.stage("s", faulty, bucket_by=bucket_by)
+        assert not os.path.exists(os.path.join(store.path("s"), "_SUCCESS"))
+        meta = load_manifest(store.base_dir)["stages"].get("s", {})
+        assert not meta.get("complete", False)
+        assert not store.exists("s")
+        got = store.stage("s", healthy, bucket_by=bucket_by)
+        assert calls == ["faulty", "healthy"] and store.exists("s")
+        _assert_same_rows(got, clean)
 
 
 def test_lazy_chain_equals_run_pipeline(spark, corpus, tmp_path_factory):

@@ -110,6 +110,18 @@ def test_stream_ingest_foreachbatch(spark, tmp_path):
     b = {r["rid"]: r["text_norm_hash"] for r in batch.collect()}
     assert a == b
 
+    # the stream featurizes under the batch pipeline's config: at a
+    # non-default banding its rows are that config's features rows
+    cfg = PipelineConfig(minhash_bands=16)
+    workdir16 = str(tmp_path / "wd16")
+    q = stream_ingest(spark, input_dir, workdir16, trigger_once=True, config=cfg)
+    q.awaitTermination(120)
+    out16 = spark.read.parquet(os.path.join(workdir16, "features_stream")).drop("batch_id")
+    assert {r[0] for r in out16.select(F.size("bands")).distinct().collect()} == {16}
+    want16 = extract_features(pages, **cfg.features_args())
+    assert out16.exceptAll(want16).count() == 0
+    assert want16.exceptAll(out16).count() == 0
+
 
 def _write_events(spark, src_dir, name, rows):
     """Land one parquet FILE (not a directory) in the stream's source dir
