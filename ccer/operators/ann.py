@@ -25,7 +25,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
 
-from ccer.operators.blocking import candidate_pairs
+from ccer.operators.blocking import candidate_pairs, join_endpoints
 
 
 def cosine_col(u, v):
@@ -113,7 +113,7 @@ def embedding_neardup_pairs(
     # bucket rows are bare (id, 8-byte bucket) — the vectors (~6 KB at
     # 768-dim floats) do NOT ride the bucket join or the pair-dedup
     # exchange; they join back on id only for the surviving unique pairs
-    # (the ER scorer's slim-crossing pattern, scoring.py:253-270).
+    # (the ER scorer's slim-crossing pattern, through ``join_endpoints``).
     parts = []
     for r in range(n_rotations):
         parts.append(
@@ -129,11 +129,9 @@ def embedding_neardup_pairs(
         F.lit(0).cast("long").alias("simhash"),
     )
     pairs = candidate_pairs(blocks, hamming_prefilter=None)
-    va = vectors.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("vec_a"))
-    vb = vectors.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("vec_b"))
+    vecs = vectors.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec"))
     return (
-        pairs.join(va, "id_a")
-        .join(vb, "id_b")
+        join_endpoints(pairs, vecs, ["vec"])
         .withColumn("cosine", cosine_col("vec_a", "vec_b"))
         .filter(F.col("cosine") >= threshold)
         .select("id_a", "id_b", F.round("cosine", 6).alias("cosine"))
@@ -201,7 +199,7 @@ def ivf_topk(
     row); assignment and probing are one shuffle-free Arrow pass each;
     candidate generation is an equi-join on the 4-byte centroid id with
     bare ids (vectors join back only for surviving candidates — the
-    slim-crossing pattern, scoring.py:253-270). Recall < 1.0 by
+    slim-crossing pattern, ``score_pairs``). Recall < 1.0 by
     construction, 1.0 for exact-duplicate vectors (identical vectors
     share probe lists)."""
     from pyspark.ml.clustering import KMeans

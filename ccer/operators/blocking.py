@@ -361,3 +361,21 @@ def candidate_pairs(
         )
         joined = joined.filter(keep)
     return joined.select("id_a", "id_b").dropDuplicates(["id_a", "id_b"])
+
+
+def join_endpoints(
+    pairs: DataFrame, table: DataFrame, cols: list[str], how: str = "inner"
+) -> DataFrame:
+    """pairs (id_a, id_b, ...) ⋈ ``table`` on ``id``, once per endpoint:
+    adds ``{c}_a`` / ``{c}_b`` for each of ``cols``. The table's id is
+    aliased ``_fid_a``/``_fid_b`` and dropped after each join, so the
+    pair columns keep their order and a table bucketed on ``id`` is
+    scanned with no table-side exchange. ``how="left"`` keeps pairs whose
+    endpoint has no row (its columns NULL)."""
+    for side in ("a", "b"):
+        fid = f"_fid_{side}"
+        t = table.select(
+            [F.col("id").alias(fid)] + [F.col(c).alias(f"{c}_{side}") for c in cols]
+        )
+        pairs = pairs.join(t, pairs[f"id_{side}"] == t[fid], how).drop(fid)
+    return pairs

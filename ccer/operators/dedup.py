@@ -30,7 +30,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from ccer.functions.hashing import band_rows, signature_batch
 from ccer.functions.normalize import normalize_text
-from ccer.operators.blocking import block_keys, candidate_pairs
+from ccer.operators.blocking import block_keys, candidate_pairs, join_endpoints
 
 
 def exact_dedup_groups(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -147,16 +147,6 @@ def text_signatures(
     return docs.select(id_col, text_col).mapInPandas(gen, schema=schema)
 
 
-def _join_endpoints(pairs: DataFrame, sigs: DataFrame, col: str) -> DataFrame:
-    """Join ``col`` of both pair endpoints back from the signature table
-    as ``{col}_a`` / ``{col}_b``."""
-    return pairs.join(
-        sigs.select(F.col("id").alias("id_a"), F.col(col).alias(f"{col}_a")), "id_a"
-    ).join(
-        sigs.select(F.col("id").alias("id_b"), F.col(col).alias(f"{col}_b")), "id_b"
-    )
-
-
 def estimated_jaccard(pairs: DataFrame, sigs: DataFrame, num_perm: int) -> DataFrame:
     """(id_a, id_b) pairs → (id_a, id_b, est_jaccard): matching signature
     positions / num_perm (JVM zip_with + filter + size — no second Python
@@ -164,7 +154,7 @@ def estimated_jaccard(pairs: DataFrame, sigs: DataFrame, num_perm: int) -> DataF
     est = F.size(
         F.filter(F.zip_with("sig_a", "sig_b", lambda x, y: x == y), lambda m: m)
     ) / F.lit(float(num_perm))
-    return _join_endpoints(pairs, sigs, "sig").select(
+    return join_endpoints(pairs, sigs, ["sig"]).select(
         "id_a", "id_b", est.alias("est_jaccard")
     )
 
@@ -191,7 +181,7 @@ def minhash_neardup_pairs(
     # the 128-long signature (~0.5 KB at 32-bit precision) must NOT ride
     # the pair generation: block rows are slim (key, pass, id, simhash)
     # rows, and the signatures join back on id afterwards (the ER
-    # scorer's slim-crossing pattern, scoring.py:253-270).
+    # scorer's slim-crossing pattern, through ``join_endpoints``).
     blocks = block_keys(sigs, passes=("minhash",), minhash_bands=bands)
     pairs = candidate_pairs(blocks, hamming_prefilter=None)
     return (
@@ -225,7 +215,7 @@ def simhash_neardup_pairs(
         simhash_rotations=rotations,
     )
     pairs = candidate_pairs(blocks, hamming_prefilter=max_hamming)
-    return _join_endpoints(pairs, sigs, "simhash").select(
+    return join_endpoints(pairs, sigs, ["simhash"]).select(
         "id_a",
         "id_b",
         F.bit_count(F.col("simhash_a").bitwiseXOR(F.col("simhash_b"))).alias("hamming"),

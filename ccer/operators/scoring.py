@@ -21,11 +21,15 @@ Score components per pair:
   gate analog of name_matching.py:64-82);
 - ``same_url`` — normalized-url equality (re-crawl identity).
 
-Decision rule (gate-then-override, the reference's shape):
+Decision rule (gate-then-override, the reference's shape), with
+``s_set`` = 1.0 on ``same_url``:
     match ⇔ same_url
           ∨ s_set ≥ cos_hi                        (strong-similarity override)
-          ∨ (s_set ≥ cos_lo ∧ s_jw_title ≥ jw_gate)   (gated accept)
-          ∨ s_lev ≥ lev_hi                        (near-identical prefix)
+          ∨ in the ambiguous band lev_band[0] ≤ s_set < cos_hi:
+              (s_set ≥ cos_lo ∧ s_jw_title ≥ jw_gate)   (gated accept)
+              ∨ (s_set < lev_band[1] ∧ s_lev ≥ lev_hi)  (near-identical prefix)
+``s_jw_title`` is computed only when s_set ≥ cos_lo, and ``s_lev`` only
+when the gate did not accept; a score not computed is 0.0.
 """
 
 from __future__ import annotations
@@ -35,6 +39,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from ccer.functions.textsim import jaro_winkler_similarity, levenshtein_ratio
+from ccer.operators.blocking import join_endpoints
 
 EDGES_SCHEMA = (
     "id_a long, id_b long, s_set double, s_lev double, s_jw_title double, "
@@ -63,51 +68,16 @@ class ScoringConfig:
         self.lev_band = lev_band
         self.lev_prefix = lev_prefix
         self.sketch_k = sketch_k
-        # "hybrid": JVM column-algebra cosine decides every pair; only the
-        #           ambiguous band crosses to the Python string kernels.
+        # "hybrid": a string-free Arrow crossing computes the cosine that
+        #           decides every pair; only the ambiguous band crosses to
+        #           the Python string kernels.
         # "sql":    zero Python crossings (the --no-udf mode) — native
         #           levenshtein approximates the kernel tier.
-        # "python": the original all-pairs Arrow scorer (parity baseline).
+        if backend not in ("hybrid", "sql"):
+            raise ValueError(
+                f"unknown scorer backend {backend!r}; expected 'hybrid' or 'sql'"
+            )
         self.backend = backend
-
-
-def _set_cosine_batch(
-    sha: list, shb: list, na: np.ndarray, nb: np.ndarray, k: int
-) -> np.ndarray:
-    """Binary cosine of shingle sets from their bottom-k (KMV) sketches,
-    for a whole Arrow batch at once.
-
-    Sketches are sorted-unique uint32 (top half of the 64-bit shingle
-    hashes). When both sets fit in the sketch the count is exact;
-    otherwise the KMV estimator runs on the bottom-k of the union: the
-    fraction of union-bottom-k hashes present in both sets estimates
-    Jaccard, and |A∩B| = J/(1+J)·(|A|+|B|) converts to cosine with the
-    true set sizes.
-
-    Because each side is a set (no repeats), |A∩B| equals the number of
-    adjacent duplicates in the row-wise sorted concatenation of the two
-    sketches — O(k log k) per pair instead of the O(k²) equality matrix
-    (measured 200× on 100k-pair batches; the k² matrix was the pipeline's
-    hottest loop). Values are lifted to int64 with per-position-distinct
-    pad sentinels above 2³² so padding can never form a duplicate.
-    """
-    m = len(sha)
-    if m == 0:
-        return np.zeros(0)
-    col = np.arange(k, dtype=np.int64)
-
-    def mat(lst, pad_base):
-        lens = np.fromiter((len(x) for x in lst), dtype=np.int64, count=m)
-        out = np.broadcast_to(pad_base + col, (m, k)).copy()
-        mask = col[None, :] < lens[:, None]
-        if lens.sum():
-            flat = np.concatenate([np.asarray(x, dtype=np.int32) for x in lst])
-            out[mask] = flat.view(np.uint32).astype(np.int64)
-        return out, lens
-
-    A, ska = mat(sha, np.int64(1) << 33)
-    B, skb = mat(shb, np.int64(1) << 34)
-    return _cosine_from_mats(A, ska, B, skb, na, nb, k)
 
 
 def _list_values_offsets(arr):
@@ -130,9 +100,10 @@ def _list_values_offsets(arr):
 
 def _mat_from_flat(flat_i32, offs, rows, pad_base, k):
     """Padded (len(rows), k) int64 sketch matrix gathered straight from
-    an Arrow ListArray's flat values + offsets — value-identical to
-    ``mat`` above, zero per-row Python. Sketches are ≤ k elements by
-    construction (features emits ``h32[:sketch_k]``)."""
+    an Arrow ListArray's flat values + offsets, zero per-row Python:
+    row r holds its sketch values lifted to unsigned, then the pads
+    ``pad_base + c`` for the unused positions c. Sketches are ≤ k
+    elements by construction (features emits ``h32[:sketch_k]``)."""
     col = np.arange(k, dtype=np.int64)
     lens = (offs[1:] - offs[:-1])[rows]
     m = len(rows)
@@ -151,8 +122,22 @@ def _mat_from_flat(flat_i32, offs, rows, pad_base, k):
 
 
 def _cosine_from_mats(A, ska, B, skb, na, nb, k):
-    """Shared estimator tail of ``_set_cosine_batch`` (exact + KMV
-    branches) over pre-built padded sketch matrices."""
+    """Binary cosine of shingle sets from their bottom-k (KMV) sketches,
+    for a whole batch of padded sketch matrices (``_mat_from_flat``).
+
+    Sketches are sorted-unique uint32 (top half of the 64-bit shingle
+    hashes). When both sets fit in the sketch the count is exact;
+    otherwise the KMV estimator runs on the bottom-k of the union: the
+    fraction of union-bottom-k hashes present in both sets estimates
+    Jaccard, and |A∩B| = J/(1+J)·(|A|+|B|) converts to cosine with the
+    true set sizes.
+
+    Because each side is a set (no repeats), |A∩B| equals the number of
+    adjacent duplicates in the row-wise sorted concatenation of the two
+    sketches — O(k log k) per pair instead of the O(k²) equality matrix.
+    The two sides' pads are per-position-distinct sentinels above 2³²
+    (different ``pad_base`` per side), so padding never forms a duplicate.
+    """
     conc = np.concatenate([A, B], axis=1)        # (m, 2k)
     conc.sort(axis=1)                            # pads sort last, all distinct
     dup = conc[:, 1:] == conc[:, :-1]            # adjacent duplicate ⇔ A∩B member
@@ -184,9 +169,10 @@ _U32 = 4294967295  # lift int32-viewed-uint32 sketch values back to unsigned
 
 def _with_jvm_set_cosine(df: DataFrame, k: int) -> DataFrame:
     """Add ``s_set`` — the KMV set-cosine — as JVM column algebra over the
-    slim pair row, double-for-double identical to ``_set_cosine_batch``
+    slim pair row, double-for-double identical to ``_cosine_from_mats``
     (asserted by test_scoring_backend_parity in tests/test_pipeline.py,
-    which compares round(s_set, 12) across all three backends):
+    which compares round(s_set, 12) of both backends with a scalar
+    per-pair reference):
 
     - exact branch (both true set sizes fit the sketch): |A∩B|/√(|A||B|)
       with the intersection from ``array_intersect`` (sketch == set);
@@ -247,73 +233,34 @@ def _with_jvm_set_cosine(df: DataFrame, k: int) -> DataFrame:
     return df.withColumn("s_set", s_set).drop("_ia", "_inter", "_m_u", "_kth", "_hits")
 
 
-def attach_pair_features(pairs: DataFrame, features: DataFrame) -> DataFrame:
-    """pairs (id_a,id_b) ⋈ features×2 → wide pair rows for the scorer.
-
-    Two shuffle equi-joins on id — both sides hash-partitioned on the join
-    key, no Python involvement. At scale, bucketing the features table on
-    id makes the second join shuffle-free.
-    """
-    cols = ["url_norm", "title_norm", "text_prefix", "lang", "sh", "n_sh"]
-    fa = features.select(
-        [F.col("id").alias("_fid_a")] + [F.col(c).alias(f"{c}_a") for c in cols]
-    )
-    fb = features.select(
-        [F.col("id").alias("_fid_b")] + [F.col(c).alias(f"{c}_b") for c in cols]
-    )
-    return (
-        pairs.join(fa, pairs.id_a == fa._fid_a)
-        .drop("_fid_a")
-        .join(fb, pairs.id_b == fb._fid_b)
-        .drop("_fid_b")
-    )
-
-
 def score_pairs(
     pairs: DataFrame, features: DataFrame, config: ScoringConfig | None = None
 ) -> DataFrame:
     """Candidate pairs → edges (EDGES_SCHEMA) with scores and the match
-    decision. Backend dispatch (``config.backend``):
+    decision. Both backends join the same slim pair rows — ids, sketches
+    and a url-identity hash, no strings — and send only the ambiguous
+    band (typically a few % of pairs) on to a join with the string
+    payload. Measured at 960k pages, an all-pairs scorer's shuffle of
+    wide rows carried 6.0 GB, ~45% of it strings for pairs that mostly
+    never needed them. Backend (``config.backend``):
 
-    - ``hybrid`` (default): the slim join ships ONLY ids + sketches + a
-      url-identity hash — no strings. The KMV cosine runs in numpy over
-      that string-free Arrow crossing (bit-identical to the all-Python
-      scorer's tier 0/1 by construction: same ``_set_cosine_batch``), the
-      tier-0/1 decisions are JVM filters on its output, and just the
-      ambiguous band (typically a few % of pairs) joins the string
-      payload for the Python kernel tier. Measured at 960k pages the
-      all-Python scorer's shuffle carried 6.0 GB of wide rows; the
-      strings were ~45% of that for pairs that mostly never needed them.
-      (A pure-JVM cosine via array_intersect/array_union higher-order
-      functions was tried and REJECTED: HOF lambdas are interpreted per
-      element with boxing — 13x slower than the Arrow crossing.)
+    - ``hybrid`` (default): the KMV cosine runs in numpy over the
+      string-free Arrow crossing, the tier-0/1 decisions are JVM filters
+      on its output, and the ambiguous band runs the Python string
+      kernels. (A pure-JVM cosine via array_intersect/array_union
+      higher-order functions was tried and REJECTED: HOF
+      lambdas are interpreted per element with boxing — 13x slower than
+      the Arrow crossing.)
     - ``sql``: zero Python crossings — the HOF-based JVM cosine plus
       native ``levenshtein`` ratios (title + prefix) instead of the
       Python kernels. The --no-udf COMPATIBILITY mode for clusters
       without Python workers; correct, not fast.
-    - ``python``: the original all-pairs Arrow scorer (parity baseline).
     """
     cfg = config or ScoringConfig()
-    if cfg.backend == "python":
-        return _score_pairs_python(pairs, features, cfg)
-
-    fa = features.select(
-        F.col("id").alias("_fid_a"),
-        F.col("sh").alias("sh_a"),
-        F.col("n_sh").alias("n_sh_a"),
-        _url_key("url_norm").alias("uh_a"),
-    )
-    fb = features.select(
-        F.col("id").alias("_fid_b"),
-        F.col("sh").alias("sh_b"),
-        F.col("n_sh").alias("n_sh_b"),
-        _url_key("url_norm").alias("uh_b"),
-    )
-    slim = (
-        pairs.join(fa, pairs.id_a == fa._fid_a)
-        .drop("_fid_a")
-        .join(fb, pairs.id_b == fb._fid_b)
-        .drop("_fid_b")
+    slim = join_endpoints(
+        pairs,
+        features.select("id", "sh", "n_sh", _url_key("url_norm").alias("uh")),
+        ["sh", "n_sh", "uh"],
     )
     # three-valued logic trap: with only `uh_a.isNotNull() & (uh_a == uh_b)`
     # a pair where uh_a is set but uh_b is NULL (malformed url on one side)
@@ -347,7 +294,7 @@ def score_pairs(
     # rows (~25 B/pair) once and both branches read the blocks; the
     # ContextCleaner reclaims them when the DataFrame is collected.
     base = base.localCheckpoint(eager=True)
-    lo_band, hi_band = cfg.lev_band
+    lo_band = cfg.lev_band[0]
     match0 = F.col("same_url") | (F.col("s_set") >= F.lit(cfg.cos_hi))
     amb_cond = (
         (~match0) & (F.col("s_set") >= F.lit(lo_band)) & (F.col("s_set") < F.lit(cfg.cos_hi))
@@ -361,22 +308,8 @@ def score_pairs(
         "same_url",
         match0.alias("is_match"),
     )
-    amb = base.filter(amb_cond)
-    ta = features.select(
-        F.col("id").alias("_fid_a"),
-        F.col("title_norm").alias("title_norm_a"),
-        F.col("text_prefix").alias("text_prefix_a"),
-    )
-    tb = features.select(
-        F.col("id").alias("_fid_b"),
-        F.col("title_norm").alias("title_norm_b"),
-        F.col("text_prefix").alias("text_prefix_b"),
-    )
-    amb_wide = (
-        amb.join(ta, amb.id_a == ta._fid_a)
-        .drop("_fid_a")
-        .join(tb, amb.id_b == tb._fid_b)
-        .drop("_fid_b")
+    amb_wide = join_endpoints(
+        base.filter(amb_cond), features, ["title_norm", "text_prefix"]
     )
     if cfg.backend == "sql":
         amb_scored = _tier2_sql(amb_wide, cfg)
@@ -387,11 +320,9 @@ def score_pairs(
 
 def _numpy_cosine_pass(slim: DataFrame, sketch_k: int) -> DataFrame:
     """String-free Arrow crossing: (ids, sketches, same_url) → s_set via
-    the vectorized sort-merge KMV estimator — the same estimator tail
-    (``_cosine_from_mats``) the all-Python scorer's tier 1 runs, so
-    parity is by construction (pinned bit-for-bit by an exceptAll A/B
-    against the mapInPandas formulation and the three-backend 12-dp
-    parity test).
+    the vectorized sort-merge KMV estimator ``_cosine_from_mats`` (pinned
+    to 12 dp against a scalar per-pair reference and the sql backend's
+    JVM cosine by test_scoring_backend_parity).
 
     mapInArrow, not mapInPandas (r6, guide §4.2): the sketch lists are
     unpacked straight from the Arrow ListArray's flat values + offsets
@@ -454,7 +385,7 @@ def _tier2_sql(amb_wide: DataFrame, cfg: ScoringConfig) -> DataFrame:
     """Ambiguous band decided with native levenshtein ratios (no Python):
     gate-then-override like the kernel tier, with the title levenshtein
     ratio standing in for Jaro-Winkler."""
-    lo_band, hi_band = cfg.lev_band
+    hi_band = cfg.lev_band[1]
 
     def lev_ratio(a, b):
         a = F.coalesce(a, F.lit(""))
@@ -483,9 +414,9 @@ def _tier2_sql(amb_wide: DataFrame, cfg: ScoringConfig) -> DataFrame:
 
 def _tier2_python(amb_wide: DataFrame, cfg: ScoringConfig) -> DataFrame:
     """Ambiguous band through the Python string kernels (Jaro-Winkler
-    gate, lazy Levenshtein) — identical decision code to the all-Python
-    scorer's tier 2, applied to the few % of pairs that need it."""
-    lo_band, hi_band = cfg.lev_band
+    gate, lazy Levenshtein) — the decision rule's ambiguous band, applied
+    to the few % of pairs that need it."""
+    hi_band = cfg.lev_band[1]
     cos_lo, jw_gate, lev_hi, prefix = cfg.cos_lo, cfg.jw_gate, cfg.lev_hi, cfg.lev_prefix
 
     def tier2(iterator):
@@ -525,87 +456,6 @@ def _tier2_python(amb_wide: DataFrame, cfg: ScoringConfig) -> DataFrame:
             )
 
     return amb_wide.mapInPandas(tier2, schema=EDGES_SCHEMA)
-
-
-def _score_pairs_python(
-    pairs: DataFrame, features: DataFrame, cfg: ScoringConfig
-) -> DataFrame:
-    """The original all-pairs Arrow scorer (parity baseline)."""
-    wide = attach_pair_features(pairs, features)
-
-    lo_band, hi_band = cfg.lev_band
-    prefix = cfg.lev_prefix
-    sketch_k = cfg.sketch_k
-
-    def score(iterator):
-        for pdf in iterator:
-            n = len(pdf)
-            s_set = np.zeros(n)
-            s_lev = np.zeros(n)
-            s_jw = np.zeros(n)
-            match = np.zeros(n, dtype=bool)
-
-            # tier 0 (vectorized): re-crawl identity by normalized url
-            ua = pdf["url_norm_a"].to_numpy()
-            ub = pdf["url_norm_b"].to_numpy()
-            same_url = np.asarray(
-                (ua == ub) & (ua != "") & ~pd.isna(ua), dtype=bool
-            )
-            s_set[same_url] = 1.0
-            match |= same_url
-
-            # tier 1 (vectorized): KMV set cosine for every undecided pair
-            rest = np.flatnonzero(~same_url)
-            if rest.size:
-                sha = pdf["sh_a"].iloc[rest].tolist()
-                shb = pdf["sh_b"].iloc[rest].tolist()
-                nsa = pdf["n_sh_a"].to_numpy()[rest]
-                nsb = pdf["n_sh_b"].to_numpy()[rest]
-                cs = _set_cosine_batch(sha, shb, nsa, nsb, sketch_k)
-                s_set[rest] = cs
-                match[rest] |= cs >= cfg.cos_hi
-
-            # tier 2 (narrow loop): string kernels ONLY in the ambiguous
-            # band — the common case (weak-signal same-host pairs) is
-            # decided by the cosine and never touches a kernel
-            amb = np.flatnonzero(
-                ~match & ~same_url & (s_set >= lo_band) & (s_set < cfg.cos_hi)
-            )
-            if amb.size:
-                ta = pdf["title_norm_a"].iloc[amb].tolist()
-                tb = pdf["title_norm_b"].iloc[amb].tolist()
-                xa = pdf["text_prefix_a"].iloc[amb].tolist()
-                xb = pdf["text_prefix_b"].iloc[amb].tolist()
-                for j, i in enumerate(amb):
-                    cs_i = s_set[i]
-                    if cs_i >= cfg.cos_lo:
-                        jw = jaro_winkler_similarity(ta[j] or "", tb[j] or "")
-                        s_jw[i] = jw
-                        if jw >= cfg.jw_gate:
-                            match[i] = True
-                            continue
-                    # pay for the Levenshtein DP only here
-                    if cs_i < hi_band:
-                        lr = levenshtein_ratio(
-                            (xa[j] or "")[:prefix], (xb[j] or "")[:prefix]
-                        )
-                        s_lev[i] = lr
-                        if lr >= cfg.lev_hi:
-                            match[i] = True
-            out = pd.DataFrame(
-                {
-                    "id_a": pdf["id_a"].to_numpy(),
-                    "id_b": pdf["id_b"].to_numpy(),
-                    "s_set": s_set,
-                    "s_lev": s_lev,
-                    "s_jw_title": s_jw,
-                    "same_url": np.asarray(same_url, dtype=bool),
-                    "is_match": match,
-                }
-            )
-            yield out
-
-    return wide.mapInPandas(score, schema=EDGES_SCHEMA)
 
 
 def match_edges(scored: DataFrame) -> DataFrame:

@@ -27,6 +27,7 @@ from ccer.operators.ann import (
     ivf_topk,
     lsh_topk,
 )
+from ccer.operators.blocking import join_endpoints
 from ccer.operators.dedup import (
     exact_dedup_groups,
     minhash_neardup_pairs,
@@ -1140,11 +1141,9 @@ def q_simhash_neardup_verified(spark, sf_dir):
     copies = docs.select((F.col("doc_id") + 100000).alias("doc_id"), "text")
     both = docs.unionByName(copies)
     pairs = simhash_neardup_pairs(both, max_hamming=0)
-    ta = both.select(F.col("doc_id").alias("id_a"), F.col("text").alias("text_a"))
-    tb = both.select(F.col("doc_id").alias("id_b"), F.col("text").alias("text_b"))
+    texts = both.select(F.col("doc_id").alias("id"), "text")
     return (
-        pairs.join(ta, "id_a")
-        .join(tb, "id_b")
+        join_endpoints(pairs, texts, ["text"])
         .filter(F.col("text_a") == F.col("text_b"))
         .select("id_a", "id_b", "hamming")
     )

@@ -56,7 +56,7 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ccer.operators.blocking import block_keys, candidate_pairs
+from ccer.operators.blocking import block_keys, candidate_pairs, join_endpoints
 from ccer.operators.cluster import connected_components
 from ccer.operators.dedup import estimated_jaccard, text_signatures
 
@@ -185,22 +185,9 @@ def curate_batch(
     # map OLD endpoints to their (relabel-compressed) component label so
     # cross-batch chains close transitively
     if state is not None:
-        cm = state.comps
-        edges = (
-            edges.join(
-                cm.select(F.col("id").alias("id_a"), F.col("component").alias("ca")),
-                "id_a",
-                "left",
-            )
-            .join(
-                cm.select(F.col("id").alias("id_b"), F.col("component").alias("cb")),
-                "id_b",
-                "left",
-            )
-            .select(
-                F.coalesce("ca", "id_a").alias("id_a"),
-                F.coalesce("cb", "id_b").alias("id_b"),
-            )
+        edges = join_endpoints(edges, state.comps, ["component"], how="left").select(
+            F.coalesce("component_a", "id_a").alias("id_a"),
+            F.coalesce("component_b", "id_b").alias("id_b"),
         )
         edges = _apply_relabels(edges, "id_a", state.relabels)
         edges = _apply_relabels(edges, "id_b", state.relabels)

@@ -105,12 +105,13 @@ def main() -> None:
         dq.q_ordered_export(spark, sf_dir),
         must_contain=["TakeOrderedAndProject"],
     )
-    # 7. bucketed features: the scoring joins read the bucketed stage with
-    # NO features-side exchange (only the 16-byte pairs side shuffles)
+    # 7. bucketed features: the scorer's slim endpoint join reads the
+    # bucketed stage with NO features-side exchange (only the 16-byte
+    # pairs side shuffles)
     import shutil
     import tempfile
 
-    from ccer.operators.scoring import attach_pair_features
+    from ccer.operators.blocking import join_endpoints
     from ccer.sources.catalog import StageStore
 
     wd = tempfile.mkdtemp(prefix="ccer_planaudit_")
@@ -121,7 +122,7 @@ def main() -> None:
         store = StageStore(spark, wd)
         feats_b = store.write(feats, "features", bucket_by="id")
         pairs_b = store.write(pairs, "pairs")
-        wide = attach_pair_features(pairs_b, feats_b)
+        wide = join_endpoints(pairs_b, feats_b, ["sh", "n_sh"])
         text = plan_of(wide)
         import re as _re
 

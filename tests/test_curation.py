@@ -294,9 +294,10 @@ def test_multimodal_plumbing(spark):
 
 
 def test_yaml_scorer_backend(tmp_path):
-    """YAML `scorer:` selects the scoring backend; --no-udf maps to sql.
-    Every PipelineConfig / ScoringConfig parameter is settable from YAML,
-    and YAML lists arrive as tuples."""
+    """YAML `scorer:` selects the scoring backend (hybrid or sql; any
+    other name raises); --no-udf maps to sql. Every PipelineConfig /
+    ScoringConfig parameter is settable from YAML, and YAML lists arrive
+    as tuples."""
     from ccer.config import CcerConfig
 
     p = tmp_path / "cfg.yaml"
@@ -313,6 +314,12 @@ def test_yaml_scorer_backend(tmp_path):
     assert pc.scoring.lev_band == (0.4, 0.8)
     # default is the hybrid backend
     assert CcerConfig().pipeline.scoring.backend == "hybrid"
+    # a removed backend or a misspelt one fails, rather than scoring
+    # with hybrid
+    for bad in ("python", "pyhton"):
+        p.write_text(f"scorer: {bad}\n")
+        with pytest.raises(ValueError, match="hybrid.*sql"):
+            CcerConfig.from_yaml(str(p))
 
 
 def test_repetition_and_c4(spark):

@@ -438,9 +438,18 @@ def _scalar_set_cosine(a, b, na, nb, k):
 
 
 def test_set_cosine_batch_matches_scalar_reference():
+    """The scorer's production cosine path — Arrow ListArray →
+    ``_list_values_offsets`` → ``_mat_from_flat`` → ``_cosine_from_mats``
+    — equals the scalar reference on random sketches, including empty
+    and over-sketch sets and a sliced window of the array."""
     import numpy as np
+    import pyarrow as pa
 
-    from ccer.operators.scoring import _set_cosine_batch
+    from ccer.operators.scoring import (
+        _cosine_from_mats,
+        _list_values_offsets,
+        _mat_from_flat,
+    )
 
     rng = np.random.default_rng(11)
     k = 16
@@ -454,13 +463,28 @@ def test_set_cosine_batch_matches_scalar_reference():
         ub = np.unique(np.concatenate([base[: rng.integers(0, len(base) + 1)], extra]).astype(np.uint32))
         na.append(ua.size)
         nb.append(ub.size)
-        sha.append(ua[:k].view(np.int32))
-        shb.append(ub[:k].view(np.int32))
+        sha.append(ua[:k].view(np.int32).tolist())
+        shb.append(ub[:k].view(np.int32).tolist())
         cases.append((ua, ub))
-    got = _set_cosine_batch(sha, shb, np.array(na), np.array(nb), k)
-    for i, (ua, ub) in enumerate(cases):
-        want = _scalar_set_cosine(ua[:k], ub[:k], na[i], nb[i], k)
-        assert abs(got[i] - want) < 1e-12, (i, got[i], want)
+    arr_a = pa.array(sha, type=pa.list_(pa.int32()))
+    arr_b = pa.array(shb, type=pa.list_(pa.int32()))
+    na, nb = np.array(na), np.array(nb)
+
+    def cosine(start, length):
+        rows = np.arange(length)
+        fa, oa = _list_values_offsets(arr_a.slice(start, length))
+        fb, ob = _list_values_offsets(arr_b.slice(start, length))
+        A, ska = _mat_from_flat(fa, oa, rows, np.int64(1) << 33, k)
+        B, skb = _mat_from_flat(fb, ob, rows, np.int64(1) << 34, k)
+        window = slice(start, start + length)
+        return _cosine_from_mats(A, ska, B, skb, na[window], nb[window], k)
+
+    for start, length in [(0, len(cases)), (137, 211)]:
+        got = cosine(start, length)
+        for j, (ua, ub) in enumerate(cases[start : start + length]):
+            i = start + j
+            want = _scalar_set_cosine(ua[:k], ub[:k], na[i], nb[i], k)
+            assert abs(got[j] - want) < 1e-12, (i, got[j], want)
 
 
 def test_sketch_gather_reads_sliced_lists_and_rejects_nulls():

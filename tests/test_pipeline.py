@@ -175,48 +175,144 @@ def test_skew_salting_bounds_block_size(spark, corpus, tmp_path_factory):
     feats.unpersist()
 
 
+def _oracle_score(fa, fb, cfg):
+    """Scalar per-pair reference for ``score_pairs``, written from the
+    decision rule in scoring.py's module docstring over two collected
+    feature rows: url identity by string equality, the set cosine from
+    plain Python sets, then the ambiguous band's Jaro-Winkler gate and
+    Levenshtein fallback. Returns (s_set, s_lev, s_jw_title, same_url,
+    is_match, branch)."""
+    from ccer.functions.textsim import jaro_winkler_similarity, levenshtein_ratio
+    from test_kernels import _scalar_set_cosine
+
+    if fa["url_norm"] and fa["url_norm"] == fb["url_norm"]:
+        return 1.0, 0.0, 0.0, True, True, "url"
+    s_set = _scalar_set_cosine(fa["sh"], fb["sh"], fa["n_sh"], fb["n_sh"], cfg.sketch_k)
+    if s_set >= cfg.cos_hi:
+        return s_set, 0.0, 0.0, False, True, "cosine"
+    if s_set < cfg.lev_band[0]:
+        return s_set, 0.0, 0.0, False, False, "below_band"
+    s_jw = s_lev = 0.0
+    if s_set >= cfg.cos_lo:
+        s_jw = jaro_winkler_similarity(fa["title_norm"] or "", fb["title_norm"] or "")
+        if s_jw >= cfg.jw_gate:
+            return s_set, 0.0, s_jw, False, True, "jw"
+    if s_set < cfg.lev_band[1]:
+        s_lev = levenshtein_ratio(
+            (fa["text_prefix"] or "")[: cfg.lev_prefix],
+            (fb["text_prefix"] or "")[: cfg.lev_prefix],
+        )
+        if s_lev >= cfg.lev_hi:
+            return s_set, s_lev, s_jw, False, True, "lev"
+    return s_set, s_lev, s_jw, False, False, "ambiguous_reject"
+
+
+def _branch_cases(spark):
+    """Hand-built feature rows and pairs, one pair per branch of the
+    decision rule. Sketches are 10-element sets, so the cosine is exact:
+    sharing n elements gives s_set = n / 10."""
+    ten = list(range(10))
+
+    def sharing(n):
+        return ten[:n] + list(range(100, 110 - n))
+
+    rows = [
+        # url identity: disjoint sketches, same normalized url
+        (1, "example.com/a", "one", "first page", ten),
+        (2, "example.com/a", "two", "second page", list(range(200, 210))),
+        # cosine override: s_set 0.9
+        (3, "example.com/c3", "three", "third page", ten),
+        (4, "example.com/c4", "four", "fourth page", sharing(9)),
+        # JW accept: s_set 0.6, equal titles
+        (5, "example.com/j5", "annual report", "alpha text", ten),
+        (6, "example.com/j6", "annual report", "omega words", sharing(6)),
+        # Levenshtein accept: s_set 0.4 (below cos_lo), equal prefixes
+        (7, "example.com/l7", "red", "the quick brown fox jumps", ten),
+        (8, "example.com/l8", "blue", "the quick brown fox jumps", sharing(4)),
+        # ambiguous reject: s_set 0.6, a NULL title, unlike prefixes
+        (9, None, None, "lorem ipsum dolor", ten),
+        (10, "example.com/r10", "zebra crossing", "completely different", sharing(6)),
+        # below the band: s_set 0.1
+        (11, "example.com/b11", "same title", "same prefix", ten),
+        (12, "example.com/b12", "same title", "same prefix", sharing(1)),
+    ]
+    feats = spark.createDataFrame(
+        [(i, u, t, x, sh, len(sh)) for i, u, t, x, sh in rows],
+        schema=(
+            "id long, url_norm string, title_norm string, text_prefix string, "
+            "sh array<int>, n_sh int"
+        ),
+    )
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(1, 13, 2)], schema="id_a long, id_b long"
+    )
+    return feats, pairs
+
+
 def test_scoring_backend_parity(spark, corpus):
-    """The JVM (hybrid) scorer's cosine + decisions are double-for-double
-    identical to the all-Python Arrow scorer, and the --no-udf SQL
-    backend agrees on the decided tiers (its kernel tier is a documented
-    levenshtein approximation, so only match SUPERSET/rows are compared
-    where both are non-ambiguous)."""
+    """Both scorer backends against the scalar per-pair oracle, on the
+    corpus's candidate pairs and on one hand-built pair per branch of the
+    decision rule. hybrid matches the oracle per pair: s_set to 12
+    decimals, same_url, s_lev, s_jw_title and is_match. The --no-udf sql
+    backend has the same pair set and s_set, and the same tier-0/1
+    decisions (its kernel tier is a documented levenshtein stand-in)."""
     from ccer.operators.blocking import block_keys, candidate_pairs, salt_oversized_blocks
     from ccer.operators.features import extract_features
     from ccer.operators.scoring import ScoringConfig, score_pairs
 
+    cfg = ScoringConfig()
     feats = extract_features(corpus.drop("true_cluster_id")).cache()
     pairs = candidate_pairs(salt_oversized_blocks(block_keys(feats))).cache()
     assert pairs.count() > 100
+    hand_feats, hand_pairs = _branch_cases(spark)
 
-    def rows(backend):
-        cfg = ScoringConfig(backend=backend)
-        out = score_pairs(pairs, feats, cfg)
+    def scored(p, f, backend):
+        out = score_pairs(p, f, ScoringConfig(backend=backend))
         return {
-            (r["id_a"], r["id_b"]): (round(r["s_set"], 12), r["same_url"], r["is_match"])
+            (r["id_a"], r["id_b"]): (
+                round(r["s_set"], 12),
+                round(r["s_lev"], 12),
+                round(r["s_jw_title"], 12),
+                r["same_url"],
+                r["is_match"],
+            )
             for r in out.collect()
         }
 
-    py = rows("python")
-    hy = rows("hybrid")
-    assert set(py) == set(hy)
-    mismatches = {k: (py[k], hy[k]) for k in py if py[k] != hy[k]}
-    assert not mismatches, list(mismatches.items())[:5]
+    for f, p in [(feats, pairs), (hand_feats, hand_pairs)]:
+        rows = {
+            r["id"]: r
+            for r in f.select("id", "url_norm", "title_norm", "text_prefix", "sh", "n_sh").collect()
+        }
+        oracle = {
+            (r["id_a"], r["id_b"]): _oracle_score(rows[r["id_a"]], rows[r["id_b"]], cfg)
+            for r in p.collect()
+        }
+        want = {
+            k: (round(s, 12), round(lev, 12), round(jw, 12), same, m)
+            for k, (s, lev, jw, same, m, _) in oracle.items()
+        }
+        hy = scored(p, f, "hybrid")
+        assert set(hy) == set(want)
+        mismatches = {k: (want[k], hy[k]) for k in want if want[k] != hy[k]}
+        assert not mismatches, list(mismatches.items())[:5]
 
-    # sql backend: same pair set; s_set identical to 12 decimals (the JVM
-    # HOF cosine vs the numpy sort-merge estimator); tier-0/1 decisions
-    # identical (its kernel tier is a documented levenshtein stand-in)
-    sq = rows("sql")
-    assert set(sq) == set(py)
-    cos_mismatch = {
-        k: (py[k][0], sq[k][0]) for k in py if py[k][0] != sq[k][0]
+        sq = scored(p, f, "sql")
+        assert set(sq) == set(want)
+        cos_mismatch = {k: (want[k][0], sq[k][0]) for k in want if want[k][0] != sq[k][0]}
+        assert not cos_mismatch, list(cos_mismatch.items())[:5]
+        for k, (*_, m, branch) in oracle.items():
+            if branch in ("url", "cosine", "below_band"):
+                assert sq[k][4] == m, (k, want[k], sq[k])
+
+    assert {k: v[5] for k, v in oracle.items()} == {
+        (1, 2): "url",
+        (3, 4): "cosine",
+        (5, 6): "jw",
+        (7, 8): "lev",
+        (9, 10): "ambiguous_reject",
+        (11, 12): "below_band",
     }
-    assert not cos_mismatch, list(cos_mismatch.items())[:5]
-    cfg = ScoringConfig()
-    for k, (s, same, m) in py.items():
-        if same or s >= cfg.cos_hi or s < cfg.lev_band[0]:
-            assert sq[k][2] == m, (k, py[k], sq[k])
-
     pairs.unpersist()
     feats.unpersist()
 
@@ -243,7 +339,7 @@ def test_scoring_null_url_pair(spark):
     pairs = spark.createDataFrame(
         [(2, 1), (1, 3), (2, 3), (2, 4)], schema="id_a long, id_b long"
     )
-    for backend in ("python", "hybrid", "sql"):
+    for backend in ("hybrid", "sql"):
         out = {
             (r["id_a"], r["id_b"]): (r["same_url"], r["is_match"])
             for r in score_pairs(pairs, feats, ScoringConfig(backend=backend)).collect()
