@@ -73,11 +73,15 @@ class ScoringConfig:
         #           the Python string kernels.
         # "sql":    zero Python crossings (the --no-udf mode) — native
         #           levenshtein approximates the kernel tier.
-        if backend not in ("hybrid", "sql"):
-            raise ValueError(
-                f"unknown scorer backend {backend!r}; expected 'hybrid' or 'sql'"
-            )
+        _check_backend(backend)
         self.backend = backend
+
+
+def _check_backend(backend: str) -> None:
+    if backend not in ("hybrid", "sql"):
+        raise ValueError(
+            f"unknown scorer backend {backend!r}; expected 'hybrid' or 'sql'"
+        )
 
 
 def _list_values_offsets(arr):
@@ -257,6 +261,9 @@ def score_pairs(
       without Python workers; correct, not fast.
     """
     cfg = config or ScoringConfig()
+    # checked here too: ``backend`` is a plain attribute, and a value
+    # assigned after construction must not fall through to hybrid
+    _check_backend(cfg.backend)
     slim = join_endpoints(
         pairs,
         features.select("id", "sh", "n_sh", _url_key("url_norm").alias("uh")),

@@ -3,8 +3,9 @@
 The reference materializes every phase into a staging table
 (build_db.py:206-276 staging→clean; query_db/constants.py:25-33 temp
 stage tables) — that materialization is what makes its pipeline
-restartable. Here each stage (features, blocks, pairs, edges,
-components, clusters) is written through this store; the manifest makes
+restartable. Here each stage (the ER plan's features, blocks, pairs,
+edges, components, clusters; the curation funnel's docs and its filter
+stages) is written through this store; the manifest makes
 any stage resumable (north rule: "checkpointing each stage … so any
 stage is resumable").
 
@@ -19,6 +20,18 @@ from the input bytes and the cores, and records it in the manifest, so
 a resume re-registers the table with the count the files were written
 with. Lineage rows (per-partition counts + wall time) land next to each
 stage.
+
+Keep-list stages: a stage that only filters the rows of an earlier
+stage can store just the key of its survivors (``write(..., keep_of=
+base)`` of a one-column frame). The manifest records ``base`` and
+``key``, and ``read`` serves the stage as the base's rows semi-joined to
+the stored keys — the base's columns in the base's order — so the text
+is stored once, in the base. A keep-list under
+``spark.sql.autoBroadcastJoinThreshold`` (``ccer.session`` sets 64 MB:
+~8 M 8-byte ids) makes the read-back a broadcast semi-join with no
+exchange over the base. The trade-off: a larger keep-list shuffles the
+whole base on every read-back. The key must be unique in the base, or
+the read-back returns every row under a kept key.
 
 Resume safety: the manifest records a ``fingerprint`` per stage (caller-
 supplied config/input digest). ``exists`` requires (a) the manifest entry,
@@ -37,6 +50,7 @@ import shutil
 import time
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.types import StructField, StructType
 
 
 def load_manifest(base_dir: str) -> dict:
@@ -65,6 +79,10 @@ class StageStore:
             table_format = "iceberg" if self._iceberg_available() else "parquet"
         self.table_format = table_format
         self.fingerprint = fingerprint
+        # stage name -> its stored rows as read by this store, so the base
+        # of every keep-list read is resolved once (a parquet read infers
+        # its schema from a footer, one Spark job per read)
+        self._frames: dict[str, DataFrame] = {}
 
     def _iceberg_available(self) -> bool:
         try:
@@ -113,7 +131,7 @@ class StageStore:
             return False
         if self.fingerprint is not None and meta.get("fingerprint") != self.fingerprint:
             return False
-        return True
+        return not meta.get("base") or self.exists(meta["base"])
 
     def rows(self, name: str) -> int | None:
         """The row count ``write`` recorded for a stage (None when it was
@@ -138,10 +156,22 @@ class StageStore:
         partition_by: list[str] | None = None,
         bucket_by: str | None = None,
         start: float | None = None,
+        keep_of: str | None = None,
+        check=None,
     ) -> DataFrame:
         """Materialize a stage; records lineage (row count, per-partition
         counts, duration) and marks it complete in the manifest. Returns
         the re-read DataFrame so downstream plans start from the scan.
+
+        ``keep_of``: ``df`` is a keep-list over the stage of that name —
+        one key column holding the ids of the base rows that survive.
+        Only the ids are stored; the manifest records ``base`` and
+        ``key``, and the returned frame (like every ``read``) is the
+        base semi-joined to them.
+
+        ``check``: called with the re-read stage before the manifest
+        marks it complete; an exception refuses the stage, so a resume
+        recomputes it instead of trusting it.
 
         ``bucket_by``: hash-bucket the stage on a join key. Downstream
         equi-joins on that key then read co-located, pre-sorted buckets
@@ -159,6 +189,17 @@ class StageStore:
         # excludes the stage's dominant cost (measured: ~50 s of scoring
         # invisible between 'pairs' and 'edges' at 960k pages).
         start = time.time() if start is None else start
+        # the files are about to be replaced: a stale "complete" entry
+        # must not outlive them if this write or its check fails
+        self.invalidate_from(name, [name])
+        self._frames.pop(name, None)
+        key = None
+        if keep_of is not None:
+            if len(df.columns) != 1:
+                raise ValueError(
+                    f"keep-list stage {name!r} must have one key column, got {df.columns}"
+                )
+            key = df.columns[0]
         bucket_count = None
         if self.table_format == "iceberg":
             writer = df.writeTo(f"ccer.{name}")
@@ -194,9 +235,14 @@ class StageStore:
             if partition_by:
                 writer = writer.partitionBy(*partition_by)
             writer.parquet(self.path(name))
-        out = self.read(name)
-        per_partition = self._lineage_counts(name, out)
+        if keep_of is None:
+            stored = out = self._frames[name] = self._read_stored(name, {})
+        else:
+            stored, out = self._read_keep_list(name, keep_of, key, {})
+        per_partition = self._lineage_counts(name, stored)
         rows = sum(p["rows"] for p in per_partition)
+        if check is not None:
+            check(out)
         manifest = load_manifest(self.base_dir)
         manifest["stages"][name] = {
             "complete": True,
@@ -207,6 +253,8 @@ class StageStore:
             "fingerprint": self.fingerprint,
             "bucket_by": bucket_by,
             "bucket_count": bucket_count,
+            "base": keep_of,
+            "key": key,
             "finished_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
         }
         self._save_manifest(manifest)
@@ -268,13 +316,36 @@ class StageStore:
         ]
 
     def read(self, name: str) -> DataFrame:
+        """A stage's rows. A keep-list stage (manifest ``base`` and
+        ``key``) reads as ``read(base)`` semi-joined to its stored keys,
+        with the base's columns in the base's order; any other stage
+        reads as stored."""
+        meta = load_manifest(self.base_dir)["stages"].get(name, {})
+        if meta.get("base"):
+            return self._read_keep_list(name, meta["base"], meta["key"], meta)[1]
+        if name not in self._frames:
+            self._frames[name] = self._read_stored(name, meta)
+        return self._frames[name]
+
+    def _read_keep_list(self, name: str, base: str, key: str, meta: dict):
+        """(stored keys, base rows semi-joined to them). The keys are read
+        with the base's key type, so no job infers their schema."""
+        rows = self.read(base)
+        schema = StructType([StructField(key, rows.schema[key].dataType)])
+        keys = self._read_stored(name, meta, schema)
+        return keys, rows.join(keys, key, "left_semi")
+
+    def _read_stored(
+        self, name: str, meta: dict, schema: StructType | None = None
+    ) -> DataFrame:
+        """What ``write`` stored under ``name``; ``meta`` is its manifest
+        entry, ``{}`` while ``write`` is still landing it."""
         if self.table_format == "iceberg":
             return self.spark.read.table(f"ccer.{name}")
         try:
             tbl = self._table_name(name)
             if self.spark.catalog.tableExists(tbl):
                 return self.spark.read.table(tbl)
-            meta = load_manifest(self.base_dir)["stages"].get(name, {})
             if meta.get("bucket_by"):
                 # resume in a fresh session: re-register the external
                 # bucketed table over the existing files (bucket ids are
@@ -291,7 +362,8 @@ class StageStore:
                 return self.spark.read.table(tbl)
         except Exception:
             pass
-        return self.spark.read.parquet(self.path(name))
+        reader = self.spark.read if schema is None else self.spark.read.schema(schema)
+        return reader.parquet(self.path(name))
 
     def invalidate_from(self, name: str, order: list[str]) -> None:
         """Mark ``name`` and all later stages incomplete (re-run policy)."""

@@ -312,8 +312,9 @@ def main() -> None:
     )
 
     # exact dedup: ONE exchange, keyed on the 16-byte md5 digest — never
-    # the raw text as a shuffle key, and no residual self semi-join
-    # (the pre-r4 shape carried the corpus text across three exchanges)
+    # the raw text as a shuffle key — and the text never crosses it: the
+    # exchange ships (digest, doc_id) and the survivors are a doc_id
+    # keep-list (a full-row survivor pick shipped every column)
     from ccer.operators.dedup import exact_dedup
 
     docs_full = spark.read.parquet(f"{sf_dir}/documents.parquet")
@@ -322,18 +323,51 @@ def main() -> None:
     # again in the details ("(4) Exchange") — count tree nodes only
     import re as _re
 
-    n_exch = len(_re.findall(r"Exchange \(\d+\)", ed_text))
-    ed_ok = n_exch == 1 and "min_by" in ed_text and "md5" in ed_text
+    n_exch = len(_re.findall(r"(?<!Broadcast)Exchange \(\d+\)", ed_text))
+    # the only Exchange ships two attributes, the digest and the partial
+    # min id; a full-row survivor pick ships the row (text included)
+    # inside an aggregation-buffer struct, so "no text#" alone misses it
+    exch_inputs = _re.findall(r"\(\d+\) Exchange\nInput \[(\d+)\]: \[(.*)\]", ed_text)
+    text_free = bool(exch_inputs) and all(
+        n == "2" and "text#" not in attrs for n, attrs in exch_inputs
+    )
+    ed_ok = n_exch == 1 and "md5" in ed_text and text_free
     notes = [
         f"{'✓' if n_exch == 1 else '✗'} exactly one Exchange ({n_exch} found)",
         f"{'✓' if 'md5' in ed_text else '✗'} shuffle keyed on md5 digest, not raw text",
-        f"{'✓' if 'min_by' in ed_text else '✗'} min_by survivor pick (map-side duplicate collapse)",
+        f"{'✓' if text_free else '✗'} the Exchange carries only (digest, id): no `text`, no row struct",
     ]
     checks.append(("exact_dedup_single_digest_exchange", ed_ok, notes))
     sections.append(
         "## exact_dedup_single_digest_exchange\n\n"
         + "\n".join(f"- {n}" for n in notes)
         + f"\n\n```\n{ed_text[:3500]}\n```\n"
+    )
+
+    # keep-list read-back: a curation filter stage stores only survivor
+    # doc_ids and reads back as docs semi-joined to them; at sf0.01 the
+    # keep-list is far under the broadcast threshold, so the read-back is
+    # a broadcast semi-join and docs is scanned in place, never shuffled
+    import tempfile
+
+    from ccer.sources.catalog import StageStore
+
+    with tempfile.TemporaryDirectory() as keep_wd:
+        store = StageStore(spark, keep_wd)
+        store.write(docs_full, "docs")
+        store.write(exact_dedup(docs_full), "exact", keep_of="docs")
+        kl_text = plan_of(StageStore(spark, keep_wd).read("exact"))
+    kl_ok = "BroadcastHashJoin" in kl_text and "LeftSemi" in kl_text
+    kl_no_exch = not _re.search(r"(?<!Broadcast)Exchange \(\d+\)", kl_text)
+    notes = [
+        f"{'✓' if kl_ok else '✗'} read-back is a `BroadcastHashJoin LeftSemi`",
+        f"{'✓' if kl_no_exch else '✗'} no Exchange over docs (only the keep-list broadcasts)",
+    ]
+    checks.append(("keep_list_broadcast_semi_join", kl_ok and kl_no_exch, notes))
+    sections.append(
+        "## keep_list_broadcast_semi_join\n\n"
+        + "\n".join(f"- {n}" for n in notes)
+        + f"\n\n```\n{kl_text[:3500]}\n```\n"
     )
 
     asof_text = plan_of(dq.q_asof_join(spark, sf_dir))

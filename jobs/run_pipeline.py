@@ -50,6 +50,7 @@ def main() -> None:
     args = parser.parse_args()
 
     from ccer.config import CcerConfig
+    from ccer.operators.scoring import ScoringConfig
     from ccer.plans.curation_workflow import stage_counts
     from ccer.plans.pipeline import run_pipeline
     from ccer.session import get_spark, job_counts, task_metrics
@@ -57,7 +58,8 @@ def main() -> None:
 
     ccer_cfg = CcerConfig.from_yaml(args.config) if args.config else CcerConfig()
     if args.no_udf:
-        ccer_cfg.pipeline.scoring.backend = "sql"
+        scoring = ccer_cfg.pipeline.scoring
+        ccer_cfg.pipeline.scoring = ScoringConfig(**{**vars(scoring), "backend": "sql"})
 
     extra_conf = {"spark.ui.enabled": "true"} if args.metrics else None
     spark = get_spark(app_name="ccer-pipeline", cores=args.cores, extra_conf=extra_conf)

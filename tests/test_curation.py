@@ -46,23 +46,25 @@ def test_exact_dedup(spark, corpus):
     groups = exact_dedup_groups(corpus).collect()
     assert len(groups) == 1 and groups[0]["keep_id"] == 0 and groups[0]["n_dups"] == 2
     kept = exact_dedup(corpus)
+    assert kept.columns == ["doc_id"]
     assert kept.count() == 7
     assert kept.filter(F.col("doc_id") == 1).count() == 0
 
 
 def test_exact_dedup_survivor_row_intact_and_null_text(spark):
-    """The min_by survivor pick must return the survivor's FULL row
-    (not a column mix across group members), keep every non-duplicated
-    column value byte-identical, and treat NULL text as its own group
-    (one NULL-text survivor).
+    """``exact_dedup`` returns the survivors' ids (min id per text); the
+    deduplicated table is the input semi-joined to them, and that must
+    give each survivor's FULL row (not a column mix across group
+    members), keep every non-duplicated column value byte-identical,
+    and treat NULL text as its own group (one NULL-text survivor).
 
-    NULL handling is an INTENTIONAL semantics change from the earlier
-    groupBy+semi-join shape, not parity: the old semi-join on
-    ``[text, id]`` never matched NULL keys, so it dropped ALL NULL-text
-    rows; the min_by shape groups NULLs together and keeps exactly one
-    survivor. Keeping a row rather than silently deleting undecodable
-    documents is the behavior a curation funnel wants — the quality
-    gate downstream judges NULL text on its own terms."""
+    NULL handling is an INTENTIONAL semantics choice: a semi-join on
+    ``[text, id]`` never matches NULL keys and would drop ALL NULL-text
+    rows, while grouping on the text digest puts the NULLs in one group
+    and keeps exactly one survivor. Keeping a row rather than silently
+    deleting undecodable documents is the behavior a curation funnel
+    wants — the quality gate downstream judges NULL text on its own
+    terms."""
     rows = [
         (10, "same text", "en", "s-keep"),
         (11, "same text", "de", "s-drop"),
@@ -73,13 +75,16 @@ def test_exact_dedup_survivor_row_intact_and_null_text(spark):
     df = spark.createDataFrame(
         rows, "doc_id long, text string, lang string, source string"
     )
-    got = {r["doc_id"]: r for r in exact_dedup(df).collect()}
+    ids = exact_dedup(df)
+    assert ids.columns == ["doc_id"]
+    kept = df.join(ids, "doc_id", "left_semi")
+    got = {r["doc_id"]: r for r in kept.collect()}
     assert set(got) == {10, 12, 14}
     # survivor carries ITS OWN ride-along columns, not the loser's
     assert got[10]["lang"] == "en" and got[10]["source"] == "s-keep"
     assert got[12]["lang"] == "fr" and got[12]["text"] is None
     # column order preserved for downstream schema stability
-    assert exact_dedup(df).columns == df.columns
+    assert kept.columns == df.columns
 
 
 def test_minhash_neardup_finds_planted(spark, corpus):

@@ -249,6 +249,18 @@ def _branch_cases(spark):
     return feats, pairs
 
 
+def test_scoring_backend_assigned_after_construction_raises():
+    """``backend`` is a plain attribute: a misspelt value assigned after
+    the constructor's check must fail at ``score_pairs``, not score with
+    hybrid. The check runs before any plan is built."""
+    from ccer.operators.scoring import ScoringConfig, score_pairs
+
+    cfg = ScoringConfig()
+    cfg.backend = "pyhton"
+    with pytest.raises(ValueError, match="'pyhton'.*hybrid.*sql"):
+        score_pairs(None, None, cfg)
+
+
 def test_scoring_backend_parity(spark, corpus):
     """Both scorer backends against the scalar per-pair oracle, on the
     corpus's candidate pairs and on one hand-built pair per branch of the
