@@ -49,7 +49,9 @@ def block_keys(
     simhash_bits: int = 16,
     simhash_rotations=(0, 21, 43),
 ) -> DataFrame:
-    """features → (block_key long, pass_id int, id long, simhash long).
+    """features → (block_key long, pass_id int, id long, simhash long),
+    plus the table's boolean ``new`` column when it has one (a delta's
+    tagged features: ``candidate_pairs`` then runs in probe mode).
 
     The MinHash pass reads the table's ``bands`` column: the band keys
     the Arrow pass that made the table computed (``extract_features``
@@ -132,10 +134,12 @@ def block_keys(
     if not entries:
         raise ValueError(f"no blocking passes selected from {passes!r}")
 
+    new = ["new"] if "new" in features.columns else []
     return (
         features.select(
             "id",
             "simhash",
+            *new,
             F.explode(F.array(*entries)).alias("_e"),
         )
         .select(
@@ -143,31 +147,16 @@ def block_keys(
             F.col("_e.pass_id").alias("pass_id"),
             "id",
             "simhash",
+            *new,
         )
         .filter(F.col("block_key").isNotNull())
     )
 
 
 def block_size_profile(blocks: DataFrame) -> DataFrame:
-    """(block_key, pass_id, count) over a set of RAW (unsalted) block rows.
-
-    This is the one corpus-wide aggregation behind skew salting. In batch
-    mode it runs once over everything; in the incremental path it runs
-    over the BATCH only and is merged into the persisted prior profile
-    with ``merge_profiles`` — per-batch shuffle work then scales with the
-    batch, not the corpus (the profile itself is #distinct-keys rows of
-    20 bytes, and a prior profile persisted hash-partitioned on block_key
-    satisfies the merge's clustering requirement exchange-free)."""
+    """(block_key, pass_id, count) over a set of RAW (unsalted) block rows:
+    the one aggregation behind skew salting."""
     return blocks.groupBy("block_key", "pass_id").count()
-
-
-def merge_profiles(prior: DataFrame, delta: DataFrame) -> DataFrame:
-    """Combine two block-size profiles by summing counts per key."""
-    return (
-        prior.unionByName(delta)
-        .groupBy("block_key", "pass_id")
-        .agg(F.sum("count").alias("count"))
-    )
 
 
 def salt_oversized_blocks(
@@ -175,7 +164,6 @@ def salt_oversized_blocks(
     block_cap: int = 500,
     weak_pass_caps: dict | None = None,
     salt_bits_max: int = 20,
-    profile: DataFrame | None = None,
 ) -> DataFrame:
     """Subdivide blocks larger than their cap by a SimHash-prefix salt
     whose width adapts to the block size (see module docstring).
@@ -189,28 +177,25 @@ def salt_oversized_blocks(
     candidate pairs from one host, 4x the 480k count (the salted cells,
     not the matches, were the growth).
 
-    One aggregation (block-size profile — or none at all when a
-    pre-computed ``profile`` is passed, the incremental path) + one
-    broadcast join of the oversized-key list (the skew tail — tiny by
-    construction) back onto the block rows; the block rows are shuffled
-    exactly once. Salt depth is a pure function of the profile, so
-    passing the same profile yields the same salted keys for old and new
-    rows alike (cross-batch pairs stay co-blocked).
+    One aggregation (``block_size_profile``) + one broadcast join of the
+    oversized-key list (the skew tail — tiny by construction) back onto
+    the block rows; the block rows are shuffled exactly once. Salt depth
+    is a pure function of the profile over ALL the rows passed, so a
+    delta's old and new rows (salted together) get the same salted keys
+    as a batch run over the same rows (cross-batch pairs stay
+    co-blocked). Columns other than ``block_key`` pass through.
     """
     # host is a weak signal: a same-host pair that is a REAL near-dup is
     # almost always also band- or fingerprint-blocked, so a tight cap
     # costs ~no recall while cutting the quadratic same-host pair volume
     caps = {PASS_HOST: 16} if weak_pass_caps is None else weak_pass_caps
-    if profile is None and not blocks.isStreaming:
-        # no precomputed profile: the block rows feed BOTH the size
-        # profile and the salt join-back, and in a composed (unstaged)
-        # plan the whole upstream key explode would run once per branch
-        # (measured at 242k pages: ~115 executor-CPU-s of duplicated
-        # band-key work). A lazy localCheckpoint materializes the slim
-        # rows on first use so the second branch reads blocks instead of
-        # recomputing; callers that manage their own staging (the
-        # checkpointed pipeline, the incremental path) pass ``profile``
-        # and never hit this.
+    if not blocks.isStreaming:
+        # the block rows feed BOTH the size profile and the salt
+        # join-back, and in a composed (unstaged) plan the whole upstream
+        # key explode would run once per branch (measured at 242k pages:
+        # ~115 executor-CPU-s of duplicated band-key work). A lazy
+        # localCheckpoint materializes the slim rows on first use so the
+        # second branch reads blocks instead of recomputing.
         # deserialized (default) storage: this checkpoint is re-read hot
         # by the profile branch, the salt join-back, AND the downstream
         # pair generation — a serialized level was measured 5x more CPU
@@ -223,9 +208,7 @@ def salt_oversized_blocks(
         cap_col = F.when(
             F.col("pass_id") == pass_id, F.lit(min(cap, block_cap))
         ).otherwise(cap_col)
-    sizes = (profile if profile is not None else block_size_profile(blocks)).withColumn(
-        "_cap", cap_col
-    )
+    sizes = block_size_profile(blocks).withColumn("_cap", cap_col)
     oversized = sizes.filter(F.col("count") > F.col("_cap")).select(
         "block_key",
         F.least(

@@ -7,7 +7,10 @@ every consumer runs it through a stage hook:
   written stage's row count from the manifest;
 - ``q_er_cluster_documents`` and ``q_er_cluster_invariants`` pass
   ``LAZY_STAGES``, the identity hook: each stage is its unmaterialized
-  plan and reports no row count.
+  plan and reports no row count;
+- ``incremental_update`` passes a ``DeltaStages``, whose ``stage``
+  applies one delta rule per stage against the prior features and
+  components, and which reports no row count.
 
 Reference lifecycle analog: FileProcessor.run (query_db/workflows.py:56-100)
 — prescan ids → linkage → discovery → combine — with every phase landing
@@ -28,7 +31,7 @@ from __future__ import annotations
 
 from types import SimpleNamespace
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ccer.functions.hashing import band_rows
 from ccer.operators.blocking import block_keys, candidate_pairs, salt_oversized_blocks
@@ -70,7 +73,7 @@ class PipelineConfig:
         self.hamming_prefilter = hamming_prefilter
         self.host_hamming_prefilter = host_hamming_prefilter
 
-    # knob -> operator arguments, shared by er_chain and the ER delta
+    # knob -> operator arguments, read by er_chain and stream_ingest
     def features_args(self) -> dict:
         return dict(
             num_perm=self.num_perm, shingle_k=self.shingle_k,
@@ -123,6 +126,48 @@ LAZY_STAGES = SimpleNamespace(
     stage=lambda name, compute, **write_kwargs: compute(),
     rows=lambda name: None,
 )
+
+
+class DeltaStages:
+    """The delta stage hook: ``er_chain(new_pages, cfg, DeltaStages(
+    prior_features, prior_components))`` advances the prior clustering by
+    the new pages, one rule per stage (see ``ccer.streaming.ingest``):
+
+    - ``features``: the batch's features, materialized once, tagged
+      ``new=True`` and unioned with the prior features tagged
+      ``new=False`` (``candidate_pairs`` then runs in probe mode);
+    - ``edges``: the new edges unioned with the prior ``id → component``
+      mapping as ``(id_a=id, id_b=component)`` edges;
+    - every other stage: its plan unchanged.
+
+    ``frames`` holds each stage's frame: the features union, and every
+    other stage as its operators produced it (edges without the prior
+    mapping)."""
+
+    def __init__(
+        self, prior_features: DataFrame | None, prior_components: DataFrame | None
+    ):
+        self.prior_features = prior_features
+        self.prior_components = prior_components
+        self.frames: dict[str, DataFrame] = {}
+
+    def stage(self, name: str, compute, **write_kwargs) -> DataFrame:
+        out = compute()
+        if name == "features":
+            # block keys, the scorer and cluster assignment all read the
+            # batch's features: run the Arrow pass once
+            out = out.localCheckpoint(eager=False).withColumn("new", F.lit(True))
+            if self.prior_features is not None:
+                out = self.prior_features.withColumn("new", F.lit(False)).unionByName(out)
+        self.frames[name] = out
+        if name == "edges" and self.prior_components is not None:
+            out = self.prior_components.select(
+                F.col("id").alias("id_a"), F.col("component").alias("id_b")
+            ).unionByName(out)
+        return out
+
+    def rows(self, name: str) -> None:
+        return None
 
 
 def er_chain(pages: DataFrame, cfg: PipelineConfig, stages) -> DataFrame:

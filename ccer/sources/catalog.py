@@ -153,7 +153,6 @@ class StageStore:
         self,
         df: DataFrame,
         name: str,
-        partition_by: list[str] | None = None,
         bucket_by: str | None = None,
         start: float | None = None,
         keep_of: str | None = None,
@@ -203,9 +202,7 @@ class StageStore:
         bucket_count = None
         if self.table_format == "iceberg":
             writer = df.writeTo(f"ccer.{name}")
-            if partition_by:
-                writer = writer.partitionedBy(*[F.col(c) for c in partition_by])
-            elif bucket_by or "id" in df.columns:
+            if bucket_by or "id" in df.columns:
                 # bucket on the join/shuffle key so stage reads are
                 # co-located for the downstream self-joins
                 bucket_count = self._bucket_count(df)
@@ -231,12 +228,15 @@ class StageStore:
                 .saveAsTable(tbl)
             )
         else:
-            writer = df.write.mode("overwrite")
-            if partition_by:
-                writer = writer.partitionBy(*partition_by)
-            writer.parquet(self.path(name))
+            df.write.mode("overwrite").parquet(self.path(name))
         if keep_of is None:
-            stored = out = self._frames[name] = self._read_stored(name, {})
+            # re-read with the written schema, top-level fields nullable
+            # as a parquet read reports them: inferring it from a footer
+            # would cost one Spark job per stage
+            schema = StructType(
+                [StructField(f.name, f.dataType, True, f.metadata) for f in df.schema]
+            )
+            stored = out = self._frames[name] = self._read_stored(name, {}, schema)
         else:
             stored, out = self._read_keep_list(name, keep_of, key, {})
         per_partition = self._lineage_counts(name, stored)

@@ -7,18 +7,16 @@ micro-batches through ``foreachBatch``; each batch runs the SAME feature
 kernel (one code path — the byte-identical invariant again) and appends
 to the features stage; clustering is then advanced incrementally.
 
-The delta probe is ``candidate_pairs`` over ``new``-tagged blocks: the
-batch's own pair generator, salting and Hamming prefilter, under the one
-``PipelineConfig``, so a delta scores exactly the batch's candidate pairs
-that touch a new record.
-
-Incremental clustering correctness: connected components over
-(previous id→component mapping edges) ∪ (edges incident to new records)
-equals connected components over the full edge set, because a component
-mapping preserves connectivity of everything already merged. So each
-increment only scores pairs that TOUCH a new record — the already-
-clustered corpus is never re-scored (the property that makes continuous
-crawl ingestion tractable at 10^12 docs).
+An increment is the batch's ``er_chain`` under the ``DeltaStages`` hook
+(``ccer.plans.pipeline``), one delta rule per stage. ``features``: the
+batch's features tagged ``new`` and unioned with the prior features, so
+the batch's own blocking, salting and ``candidate_pairs`` (probe mode)
+score exactly the batch candidate pairs that touch a new record — the
+already-clustered corpus is never re-scored. ``edges``: the new edges
+unioned with the prior ``id → component`` mapping, taken as edges;
+connected components over that union equals connected components over
+the full edge set, because a component mapping preserves connectivity
+of everything already merged. Every other stage runs as in the batch.
 """
 
 from __future__ import annotations
@@ -27,17 +25,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ccer.operators.blocking import (
-    block_keys,
-    block_size_profile,
-    candidate_pairs,
-    merge_profiles,
-    salt_oversized_blocks,
-)
-from ccer.operators.cluster import assign_clusters, connected_components
 from ccer.operators.features import extract_features
-from ccer.operators.scoring import match_edges, score_pairs
-from ccer.plans.pipeline import PipelineConfig
+from ccer.plans.pipeline import DeltaStages, PipelineConfig, er_chain
 
 PAGE_SCHEMA_DDL = (
     "url string, warc_ts timestamp, html binary, text string, lang string"
@@ -50,68 +39,36 @@ def incremental_update(
     prior_components: DataFrame | None,
     new_pages: DataFrame,
     config: PipelineConfig | None = None,
-    prior_blocks: DataFrame | None = None,
-    prior_profile: DataFrame | None = None,
 ) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame, DataFrame]:
-    """Advance the clustering by one batch of pages.
+    """Advance the clustering by one batch of pages: ``er_chain`` under
+    ``DeltaStages`` (see the module docstring for the delta rules).
 
-    Returns (features_all, blocks_raw_all, components_all, clusters_all,
-    profile_all).
+    Returns (features_all, pairs, components_all, clusters_all, edges):
+
+    0. ``features_all``: the prior features ∪ the batch's features, the
+       features columns (no ``new``); pass it back as ``prior_features``;
+    1. ``pairs``: this delta's candidate pairs as ``candidate_pairs``
+       produced them — every pair touches a new record;
+    2. ``components_all``: the ``id → component`` mapping of every
+       record in a multi-record component; pass it back as
+       ``prior_components``;
+    3. ``clusters_all``: every record labeled with its cluster id, in
+       ``er_chain``'s clusters schema;
+    4. ``edges``: this delta's match edges as ``match_edges`` produced
+       them, without the prior mapping.
 
     ``config`` is the batch's ``PipelineConfig``, passed on as ``er_chain``
     does; with no row count, "auto" simhash bits take the 16-bit floor.
-
-    Per-batch work that scales with the BATCH, not the corpus: feature
-    extraction (Arrow pass) and block-key derivation (band explosion)
-    run on the new records only — pass the returned ``blocks_raw_all``
-    back in as ``prior_blocks`` and old records' keys are reused, never
-    recomputed (in the checkpointed pipeline this is the persisted
-    ``blocks`` stage) — and, when ``prior_profile`` (the returned
-    ``profile_all``) is passed back in, the block-size profile behind
-    skew salting: only the BATCH's block rows are counted and the delta
-    is merged into the prior profile (#distinct-keys rows of 20 bytes),
-    so no per-batch aggregation ever re-scans the corpus's block rows.
-
-    The delta probe is ``candidate_pairs`` over ``new``-tagged blocks
-    (tagged before salting); its per-block shuffle of slim block rows is
-    the one pass over corpus rows, and keeps only blocks with a new member.
     """
-    cfg = config or PipelineConfig()
-    # the batch's features feed its block keys, the profile delta, the
-    # scorer and cluster assignment: materialize the Arrow pass once
-    feats_new = extract_features(new_pages, **cfg.features_args()).localCheckpoint(
-        eager=False
+    stages = DeltaStages(prior_features, prior_components)
+    clusters = er_chain(new_pages, config or PipelineConfig(), stages)
+    return (
+        stages.frames["features"].drop("new"),
+        stages.frames["pairs"],
+        stages.frames["components"],
+        clusters,
+        stages.frames["edges"],
     )
-    if prior_features is None:
-        feats_all = feats_new
-    else:
-        feats_all = prior_features.unionByName(feats_new)
-
-    block_args = cfg.block_args(None)
-    blocks_new_raw = block_keys(feats_new, **block_args)
-    tagged = blocks_new_raw.withColumn("new", F.lit(True))
-    if prior_blocks is None and prior_features is not None:
-        prior_blocks = block_keys(prior_features, **block_args)
-    if prior_blocks is not None:
-        tagged = prior_blocks.withColumn("new", F.lit(False)).unionByName(tagged)
-    blocks_raw_all = tagged.drop("new")
-    if prior_profile is not None:
-        profile_all = merge_profiles(prior_profile, block_size_profile(blocks_new_raw))
-    else:
-        profile_all = block_size_profile(blocks_raw_all)
-    blocks = salt_oversized_blocks(tagged, profile=profile_all, **cfg.salt_args())
-    pairs = candidate_pairs(blocks, **cfg.pair_args())
-    new_edges = match_edges(score_pairs(pairs, feats_all, cfg.scoring))
-    if prior_components is not None:
-        prior_edges = prior_components.select(
-            F.col("id").alias("id_a"), F.col("component").alias("id_b")
-        )
-        all_edges = prior_edges.unionByName(new_edges)
-    else:
-        all_edges = new_edges
-    components = connected_components(all_edges)
-    clusters = assign_clusters(feats_all, components)
-    return feats_all, blocks_raw_all, components, clusters, profile_all
 
 
 def stream_ingest(

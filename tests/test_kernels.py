@@ -382,6 +382,26 @@ def test_signature_kernels_called_only_in_hashing():
     assert callers == ["ccer/functions/hashing.py"]
 
 
+def test_er_composition_only_in_pipeline():
+    """``er_chain`` is the one ER composition in ``ccer/``: the operators
+    only the chain composes are called from ``ccer/plans/pipeline.py``
+    alone, so no hand-written copy of the chain (a delta included) can
+    form beside it."""
+    import pathlib
+    import re
+
+    root = pathlib.Path(__file__).resolve().parent.parent / "ccer"
+    call = re.compile(
+        r"(?<!def )\b(salt_oversized_blocks|score_pairs|match_edges|assign_clusters)\s*\("
+    )
+    callers = sorted(
+        str(path.relative_to(root.parent))
+        for path in root.rglob("*.py")
+        if call.search(path.read_text())
+    )
+    assert callers == ["ccer/plans/pipeline.py"]
+
+
 # ------------------------------------------------------------------- names
 def test_parse_name_styles():
     p = parse_name_by_style("Smith J", "last_initial")

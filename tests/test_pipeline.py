@@ -129,6 +129,25 @@ def test_stage_store_failed_write_stays_incomplete(spark, tmp_path):
         _assert_same_rows(got, clean)
 
 
+def test_stage_store_write_returns_the_read_schema(spark, tmp_path):
+    """``write`` re-reads a plain parquet stage with the written frame's
+    schema instead of inferring it from a footer; the frame it returns
+    has exactly the schema ``spark.read.parquet`` reports for the stage —
+    top-level fields nullable, timestamp and nested array types kept."""
+    df = spark.range(0, 50, numPartitions=2).select(
+        "id",
+        F.lit(7).alias("n_tokens"),
+        F.timestamp_seconds(F.col("id") * 3600).alias("warc_ts"),
+        F.array(F.col("id"), F.col("id") + 1).alias("bands"),
+        F.array(F.struct(F.col("id").alias("k"), F.lit("x").alias("v"))).alias("kv"),
+    )
+    assert not df.schema["id"].nullable
+    store = StageStore(spark, str(tmp_path / "store"))
+    out = store.write(df, "clusters")
+    assert out.schema == spark.read.parquet(store.path("clusters")).schema
+    _assert_same_rows(out, df)
+
+
 def test_lazy_chain_equals_run_pipeline(spark, corpus, tmp_path_factory):
     """The one ER chain through the identity hook (the query registry's
     path) labels every record exactly as the staged run does."""

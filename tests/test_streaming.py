@@ -5,7 +5,6 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from ccer.operators.blocking import block_keys
 from ccer.operators.features import extract_features
 from ccer.plans.pipeline import LAZY_STAGES, PipelineConfig, er_chain
 from ccer.sources.pages import synthesize_pages
@@ -27,69 +26,25 @@ def test_incremental_equals_batch(spark, cfg):
     batch_clusters = er_chain(pages, cfg, LAZY_STAGES)
     batch_map = {r["rid"]: r["cluster_id"] for r in batch_clusters.collect()}
 
-    # two-increment run over the same rows (split by hash for stability)
+    # two-increment run over the same rows (split by hash for stability);
+    # the second increment is handed only the first's features and
+    # components
     p1 = pages.filter(F.xxhash64("url") % 2 == 0)
     p2 = pages.subtract(p1)
-    f1, b1, c1, _, pr1 = incremental_update(spark, None, None, p1, cfg)
+    f1, _, c1, _, _ = incremental_update(spark, None, None, p1, cfg)
     f1 = f1.localCheckpoint(eager=True)
-    b1 = b1.localCheckpoint(eager=True)
     c1 = c1.localCheckpoint(eager=True)
-    pr1 = pr1.localCheckpoint(eager=True)
-    # prior block rows AND the block-size profile passed back in: old
-    # records' keys are reused (not recomputed) and the salting profile
-    # is advanced by the batch delta only — no per-batch aggregation
-    # re-scans the corpus's block rows
-    _, _, _, inc_clusters, pr2 = incremental_update(
-        spark, f1, c1, p2, cfg, prior_blocks=b1, prior_profile=pr1
-    )
+    f2, pairs, _, inc_clusters, edges = incremental_update(spark, f1, c1, p2, cfg)
     inc_map = {r["rid"]: r["cluster_id"] for r in inc_clusters.collect()}
     assert inc_map == batch_map
-    # the merged profile equals a from-scratch count over all block rows
-    all_blocks = block_keys(
-        extract_features(pages, **cfg.features_args()), **cfg.block_args(None)
-    )
-    full = {
-        (r["block_key"], r["pass_id"]): r["count"]
-        for r in all_blocks.groupBy("block_key", "pass_id").count().collect()
-    }
-    merged = {(r["block_key"], r["pass_id"]): r["count"] for r in pr2.collect()}
-    assert merged == full
-    pages.unpersist()
-
-
-def test_incremental_profile_skips_corpus_recount(spark):
-    """With prior_blocks + prior_profile supplied, the second batch's
-    salting must derive its block-size profile from (prior profile ∪
-    batch delta) — the physical plan may not re-aggregate the prior
-    corpus's block rows (the last O(corpus) per-batch shuffle)."""
-    pages = synthesize_pages(spark, 200, seed=7, with_labels=False).cache()
-    pages.count()
-    p1 = pages.filter(F.xxhash64("url") % 2 == 0)
-    p2 = pages.subtract(p1)
-    f1, b1, c1, _, pr1 = incremental_update(spark, None, None, p1)
-    f1 = f1.localCheckpoint(eager=True)
-    b1 = b1.localCheckpoint(eager=True)
-    pr1 = pr1.localCheckpoint(eager=True)
-    c1 = c1.localCheckpoint(eager=True)
-    _, _, _, _, pr2 = incremental_update(
-        spark, f1, c1, p2, prior_blocks=b1, prior_profile=pr1
-    )
-    # pr2 = merge(pr1 checkpoint, count(batch block rows)). Checkpoints
-    # surface as "Scan ExistingRDD[<their output attributes>]"; of the
-    # four prior-state checkpoints exactly ONE (pr1) may appear in pr2's
-    # plan, next to the batch's own features checkpoint. A fallback that
-    # re-counted blocks_raw_all would pull in b1's checkpoint.
-    import re
-
-    def scans(df):
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        return re.findall(r"Scan ExistingRDD\[[^\]]*\]", plan)
-
-    pr2_scans = scans(pr2)
-    assert len(pr2_scans) == 2, pr2_scans
-    assert scans(pr1)[0] in pr2_scans, pr2_scans
-    for prior in (f1, b1, c1):
-        assert scans(prior)[0] not in pr2_scans, pr2_scans
+    # the delta's clusters are er_chain's clusters table, not features rows
+    assert inc_clusters.columns == batch_clusters.columns
+    assert f2.columns == extract_features(pages, **cfg.features_args()).columns
+    # the delta's own pairs and edges each touch a new record
+    new_ids = {r["id"] for r in f2.join(f1, "id", "left_anti").select("id").collect()}
+    for frame in (pairs, edges):
+        rows = frame.select("id_a", "id_b").collect()
+        assert rows and all(r["id_a"] in new_ids or r["id_b"] in new_ids for r in rows)
     pages.unpersist()
 
 
