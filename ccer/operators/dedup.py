@@ -162,17 +162,34 @@ def minhash_neardup_pairs(
     bands: int = 32,
     est_threshold: float = 0.7,
 ) -> DataFrame:
-    """MinHash-LSH near-duplicate pairs with signature-estimated Jaccard.
-
-    ``block_keys`` MinHash band keys → ``candidate_pairs`` (no Hamming
-    prefilter) → ``estimated_jaccard`` ≥ ``est_threshold``.
-    """
+    """MinHash-LSH near-duplicate pairs with signature-estimated Jaccard:
+    ``text_signatures`` → ``signature_neardup_pairs``."""
     # consumed three times (band keys + the two signature join-backs):
     # materialize the Arrow pass once; blocks are reclaimed by the
     # ContextCleaner when the result DataFrame is collected.
     sigs = text_signatures(
         docs, text_col, id_col, num_perm=num_perm, minhash_bands=bands
     ).localCheckpoint(eager=False)
+    return signature_neardup_pairs(sigs, num_perm, bands, est_threshold)
+
+
+def signature_neardup_pairs(
+    sigs: DataFrame,
+    num_perm: int = 128,
+    bands: int = 32,
+    est_threshold: float = 0.7,
+    prior: DataFrame | None = None,
+) -> DataFrame:
+    """Near-duplicate pairs among ``text_signatures`` rows ``sigs``:
+    ``block_keys`` MinHash band keys → ``candidate_pairs`` (no Hamming
+    prefilter) → ``estimated_jaccard`` ≥ ``est_threshold``. ``prior``:
+    the signature rows of docs swept earlier, which ``sigs`` then probes
+    (``candidate_pairs`` in probe mode): every pair has an endpoint in
+    ``sigs``."""
+    if prior is not None:
+        sigs = prior.withColumn("new", F.lit(False)).unionByName(
+            sigs.withColumn("new", F.lit(True))
+        )
     # the 128-long signature (~0.5 KB at 32-bit precision) must NOT ride
     # the pair generation: block rows are slim (key, pass, id, simhash)
     # rows, and the signatures join back on id afterwards (the ER

@@ -1,8 +1,13 @@
 """End-to-end training-data curation pipeline: pages → docs →
-exact-dedup → near-dup sweep → quality filter → decontaminate → sample,
-each stage checkpointed to the StageStore and resumable — the curation
-counterpart of the ER plan in ``pipeline.py``, composed from the same
-operator library a user reaches for one-at-a-time.
+exact-dedup → near-dup sweep → quality filter → decontaminate → sample
+— the curation counterpart of the ER plan in ``pipeline.py``, composed
+from the same operator library a user reaches for one-at-a-time.
+
+The funnel after ``docs`` is defined once, in ``curation_chain``, and
+run through a stage hook: ``run_curation`` passes a ``StageStore`` (each
+stage checkpointed and resumable), ``curate_batch``
+(``ccer.streaming.curation``) a ``CurationDelta``, one delta rule per
+stage against a stream's accumulated dedup state.
 
 Reference lifecycle analog: FileProcessor.run (query_db/workflows.py:56-100)
 staged-materialization shape, applied to the corpus-curation flow the
@@ -43,10 +48,15 @@ the same way.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
+from ccer.functions.hashing import band_rows
+from ccer.operators.blocking import join_endpoints
 from ccer.operators.cluster import connected_components
-from ccer.operators.dedup import decontaminate, exact_dedup, minhash_neardup_pairs
+from ccer.operators.dedup import (
+    decontaminate, exact_dedup, minhash_neardup_pairs, signature_neardup_pairs,
+    text_signatures,
+)
 from ccer.operators.quality import repetition_signals
 from ccer.operators.textstats import stratified_sample
 from ccer.sources.catalog import StageStore, load_manifest
@@ -67,6 +77,9 @@ class CurationConfig:
         sample_by_source: dict | None = None,
         sample_seed: int = 42,
     ):
+        # the dedup operators band every signature 32 ways: a ragged
+        # num_perm fails here, not inside the Arrow pass
+        band_rows(num_perm, 32)
         self.minhash_threshold = minhash_threshold
         self.num_perm = num_perm
         self.min_tokens = min_tokens
@@ -84,18 +97,39 @@ class CurationConfig:
         return hashlib.sha256(payload.encode()).hexdigest()[:16]
 
 
-def run_curation(
-    spark: SparkSession,
-    pages: DataFrame,
-    workdir: str,
-    config: CurationConfig | None = None,
-    resume: bool = True,
+def doc_rows(pages: DataFrame) -> DataFrame:
+    """The ``docs`` stage's plan: ``(doc_id, url, source, lang, text)``,
+    ``doc_id`` the url's ``xxhash64`` and ``source`` its host without
+    ``www.``, normalized JVM-side (``parse_url`` runs in codegen)."""
+    host = F.regexp_replace(
+        F.lower(F.parse_url(F.col("url"), F.lit("HOST"))), r"^www\.", ""
+    )
+    return pages.select(
+        F.xxhash64("url").alias("doc_id"), "url", host.alias("source"), "lang", "text"
+    )
+
+
+def component_roots(docs: DataFrame, comps: DataFrame) -> DataFrame:
+    """``docs`` minus every doc that is not its near-dup component's
+    label, the component's min id; docs absent from ``comps`` survive."""
+    losers = comps.filter(F.col("id") != F.col("component")).select(
+        F.col("id").alias("doc_id")
+    )
+    return docs.join(losers, "doc_id", "left_anti")
+
+
+def curation_chain(
+    docs: DataFrame,
+    cfg: CurationConfig,
+    stages,
     eval_docs: DataFrame | None = None,
 ) -> DataFrame:
-    """Run (or resume) the curation funnel; returns the surviving docs
-    ``(doc_id, url, source, lang, text)``. Stage row counts land in the
-    StageStore manifest (per-partition lineage + duration), so the CLI
-    can report the funnel without recounting.
+    """The curation funnel over the ``docs`` stage's rows: exact →
+    neardup → quality → decontam → sample; returns the surviving docs
+    rows. ``stages`` is the hook: ``stages.stage(name, compute,
+    keep_of="docs")`` returns the stage's rows, where ``compute()`` is
+    the ``doc_id`` keep-list of its survivors. The operators are called
+    through this module's globals.
 
     ``eval_docs``: any DataFrame with a ``text`` column (an id column is
     derived if absent); only its n-grams are used. No-op stages
@@ -103,33 +137,9 @@ def run_curation(
     rather than materialized as pass-throughs — a pass-through stage
     would store every doc id and add a semi-join to each read.
     """
-    cfg = config or CurationConfig()
-    store = StageStore(spark, workdir, fingerprint=cfg.fingerprint())
-    if not resume:
-        store.invalidate_from("docs", CURATION_STAGE_ORDER)
 
-    # JVM-native host normalization (parse_url runs in codegen; the ER
-    # plan's Arrow features pass has its own Python url_host — this
-    # stage never needs the Python crossing)
-    host = F.regexp_replace(
-        F.lower(F.parse_url(F.col("url"), F.lit("HOST"))), r"^www\.", ""
-    )
-    docs = store.stage(
-        "docs",
-        lambda: pages.select(
-            F.xxhash64("url").alias("doc_id"),
-            "url",
-            host.alias("source"),
-            "lang",
-            "text",
-        ),
-        check=_require_unique_doc_ids,
-    )
-
-    # a filter stage stores its survivors' doc_ids; the store serves its
-    # rows (and its text, to the next stage) as docs semi-joined to them
     def keep(name, compute):
-        return store.stage(name, lambda: compute().select("doc_id"), keep_of="docs")
+        return stages.stage(name, lambda: compute().select("doc_id"), keep_of="docs")
 
     exact = keep("exact", lambda: exact_dedup(docs))
 
@@ -137,15 +147,7 @@ def run_curation(
         edges = minhash_neardup_pairs(
             exact, num_perm=cfg.num_perm, est_threshold=cfg.minhash_threshold
         ).select("id_a", "id_b")
-        comps = connected_components(edges)
-        # keep the min-id member of each near-dup component: the
-        # component label IS the min id, so survivors are exactly the
-        # docs whose id equals their label — everyone else drops; docs
-        # absent from the edge set are singletons and survive
-        losers = comps.filter(F.col("id") != F.col("component")).select(
-            F.col("id").alias("doc_id")
-        )
-        return exact.join(losers, "doc_id", "left_anti")
+        return component_roots(exact, connected_components(edges))
 
     neardup = keep("neardup", neardup_sweep)
 
@@ -196,6 +198,154 @@ def run_curation(
 
         return keep("sample", sample_stage)
     return decontam
+
+
+def run_curation(
+    spark: SparkSession,
+    pages: DataFrame,
+    workdir: str,
+    config: CurationConfig | None = None,
+    resume: bool = True,
+    eval_docs: DataFrame | None = None,
+) -> DataFrame:
+    """Run (or resume) the curation funnel through the stage store: the
+    ``docs`` stage, then ``curation_chain``. Returns the surviving docs
+    ``(doc_id, url, source, lang, text)``. Stage row counts land in the
+    StageStore manifest (per-partition lineage + duration), so the CLI
+    can report the funnel without recounting."""
+    cfg = config or CurationConfig()
+    store = StageStore(spark, workdir, fingerprint=cfg.fingerprint())
+    if not resume:
+        store.invalidate_from("docs", CURATION_STAGE_ORDER)
+    docs = store.stage("docs", lambda: doc_rows(pages), check=_require_unique_doc_ids)
+    return curation_chain(docs, cfg, store, eval_docs)
+
+
+class CurationDelta:
+    """The curation delta stage hook: the ``docs`` stage and
+    ``curation_chain`` under ``CurationDelta(prior, cfg)`` advance a
+    stream's dedup state ``prior`` (a ``ccer.streaming.curation``
+    ``CurationState``; None before the first batch) by one batch of
+    pages, one rule per stage:
+
+    - ``docs``: ``doc_id`` becomes the arrival id, ``prior.next_id``
+      plus the rank by ``(text, url)`` within the batch, so "min
+      ``doc_id``" keeps the first arrival and every prior label is below
+      every new id;
+    - ``exact``: the batch's ``exact_dedup`` survivors, anti-joined
+      against the digests in ``prior.seen``;
+    - ``neardup``: the batch's ``text_signatures`` rows (kept for the
+      state) probe ``prior.sigs`` through ``signature_neardup_pairs``,
+      the signature half of ``minhash_neardup_pairs``, and an old
+      endpoint stands for its component's label (``prior.comps``, then
+      ``prior.relabels``), so a chain A (batch 1) ← B (batch 2, dropped
+      as A's near-dup) ← C (batch 3, near-dup of B only) drops C as the
+      sweep over the union would; survivors are the component roots;
+    - every other stage: ``compute()``, semi-joined into ``docs``.
+
+    ``frames`` holds each stage's rows; ``delta`` the state's advance:
+    this batch's ``seen``, ``sigs`` and ``comps`` rows, the whole
+    compressed ``relabels`` and the new ``next_id``."""
+
+    def __init__(self, prior, cfg: CurationConfig):
+        self.prior = prior
+        self.cfg = cfg
+        self.next_id = prior.next_id if prior is not None else 0
+        self.frames: dict[str, DataFrame] = {}
+        self.delta: dict = {}
+
+    def stage(self, name: str, compute, keep_of: str | None = None) -> DataFrame:
+        if name == "docs":
+            out = self._arrival_ranked(compute())
+        elif name == "neardup":
+            out = self._neardup_probe(self.frames["exact"])
+        else:
+            out = compute()
+            if keep_of is not None:
+                out = self.frames[keep_of].join(out, "doc_id", "left_semi")
+            if name == "exact":
+                out = self._unseen(out)
+        self.frames[name] = out
+        return out
+
+    def _arrival_ranked(self, docs: DataFrame) -> DataFrame:
+        """``docs`` with ``doc_id`` = ``next_id`` + rank, assigned
+        DISTRIBUTED (range-partition → per-partition row_number +
+        driver-side partition offsets), never through a single-partition
+        global window that a large catch-up batch would funnel into."""
+        spark = docs.sparkSession
+        n_part = max(2, spark.sparkContext.defaultParallelism)
+        # localCheckpoint pins the SAMPLED range boundaries (each action
+        # re-samples them), so the counts and the ranked join see one
+        # partitioning. Executor loss then fails the batch instead of
+        # recomputing it; a stream replays a failed batch.
+        by_range = (
+            docs.repartitionByRange(n_part, "text", "url")
+            .withColumn("__pid", F.spark_partition_id())
+            .localCheckpoint(eager=True)
+        )
+        counts = dict(by_range.groupBy("__pid").count().collect())
+        offsets, acc = [], 0
+        for pid in range(n_part):
+            offsets.append((pid, acc))
+            acc += counts.get(pid, 0)
+        self.delta["next_id"] = self.next_id + acc
+        off = spark.createDataFrame(offsets, "__pid int, __off long")
+        rank = F.row_number().over(Window.partitionBy("__pid").orderBy("text", "url"))
+        return (
+            by_range.join(F.broadcast(off), "__pid")
+            .withColumn("doc_id", F.lit(self.next_id) + F.col("__off") + rank)
+            .select(*docs.columns)
+        )
+
+    def _unseen(self, exact: DataFrame) -> DataFrame:
+        digest = F.unhex(F.md5(F.col("text")))
+        if self.prior is not None:
+            exact = exact.join(self.prior.seen, digest == F.col("text_md5"), "left_anti")
+        exact = exact.localCheckpoint(eager=True)
+        self.delta["seen"] = exact.select(digest.alias("text_md5"), "doc_id")
+        return exact
+
+    def _neardup_probe(self, exact: DataFrame) -> DataFrame:
+        cfg, prior = self.cfg, self.prior
+        sigs = text_signatures(exact, num_perm=cfg.num_perm).localCheckpoint(eager=True)
+        edges = signature_neardup_pairs(
+            sigs, num_perm=cfg.num_perm, est_threshold=cfg.minhash_threshold,
+            prior=prior.sigs if prior is not None else None,
+        ).select("id_a", "id_b")
+        merged = None
+        if prior is not None:
+            # every old id → its component's label after the relabels
+            # (relabels is small by construction: a broadcast join)
+            relabel = prior.relabels.withColumnRenamed("old_label", "component")
+            labels = prior.comps.join(F.broadcast(relabel), "component", "left").select(
+                "id", F.coalesce("new_label", "component").alias("component")
+            )
+            edges = join_endpoints(edges, labels, ["component"], how="left").select(
+                F.coalesce("component_a", "id_a").alias("id_a"),
+                F.coalesce("component_b", "id_b").alias("id_b"),
+            ).filter(F.col("id_a") != F.col("id_b"))
+            merged = prior.relabels
+        comps = connected_components(edges).localCheckpoint(eager=True)
+        # prior labels (ids <= next_id) that this batch merged into an
+        # older component (a bridge doc) become relabel rows; compressed
+        # transitively, as every relabel points at a smaller label
+        swallowed = comps.filter(
+            (F.col("id") <= self.next_id) & (F.col("id") != F.col("component"))
+        ).select(F.col("id").alias("old_label"), F.col("component").alias("new_label"))
+        merged = swallowed if merged is None else merged.unionByName(swallowed)
+        self.delta.update(
+            sigs=sigs,
+            comps=sigs.select("id")
+            .join(comps, "id", "left")
+            .select("id", F.coalesce("component", "id").alias("component")),
+            relabels=connected_components(
+                merged.select(F.col("old_label").alias("id_a"), F.col("new_label").alias("id_b"))
+            )
+            .filter(F.col("id") != F.col("component"))
+            .select(F.col("id").alias("old_label"), F.col("component").alias("new_label")),
+        )
+        return component_roots(exact, comps)
 
 
 def _require_unique_doc_ids(docs: DataFrame) -> None:

@@ -99,6 +99,13 @@ class StageStore:
             json.dump(manifest, fh, indent=2, sort_keys=True)
         os.replace(tmp, self.manifest_path)
 
+    def commit(self, record: dict) -> None:
+        """Store ``record`` as the manifest's ``commit`` entry in one
+        atomic manifest write (a reader sees the old record or this one)."""
+        manifest = load_manifest(self.base_dir)
+        manifest["commit"] = record
+        self._save_manifest(manifest)
+
     def completed_stages(self) -> list[str]:
         stages = load_manifest(self.base_dir)["stages"]
         return [name for name in stages if self.exists(name)]

@@ -197,51 +197,3 @@ def synthesize_pages(
     if not with_labels:
         df = df.drop("true_cluster_id")
     return df
-
-
-def labeled_pairs(pages_with_labels: DataFrame, max_cluster: int | None = None) -> DataFrame:
-    """Pairwise F1 oracle (FIXTURES.md §2): all intra-cluster pairs plus
-    hard negatives (same host, different cluster), with ``is_match``.
-
-    Pure DataFrame construction — a self-join on true_cluster_id for the
-    positives, a host-block self-join anti-filtered on cluster for the
-    negatives.
-    """
-    from pyspark.sql import functions as F
-
-    docs = pages_with_labels.select(
-        "url", "warc_ts", "true_cluster_id",
-        F.regexp_extract("url", r"^[a-z]+://([^/]+)", 1).alias("raw_host"),
-    ).withColumn("rid", F.concat_ws("@", "url", F.col("warc_ts").cast("string")))
-    if max_cluster is not None:
-        docs = docs.filter(F.col("true_cluster_id") < max_cluster)
-    a = docs.alias("a")
-    b = docs.alias("b")
-    pos = (
-        a.join(b, F.col("a.true_cluster_id") == F.col("b.true_cluster_id"))
-        .filter(F.col("a.rid") < F.col("b.rid"))
-        .select(
-            F.col("a.url").alias("url_a"),
-            F.col("a.warc_ts").alias("ts_a"),
-            F.col("b.url").alias("url_b"),
-            F.col("b.warc_ts").alias("ts_b"),
-            F.lit(True).alias("is_match"),
-            F.lit("cluster").alias("block_key"),
-        )
-    )
-    neg = (
-        a.join(b, F.col("a.raw_host") == F.col("b.raw_host"))
-        .filter(
-            (F.col("a.rid") < F.col("b.rid"))
-            & (F.col("a.true_cluster_id") != F.col("b.true_cluster_id"))
-        )
-        .select(
-            F.col("a.url").alias("url_a"),
-            F.col("a.warc_ts").alias("ts_a"),
-            F.col("b.url").alias("url_b"),
-            F.col("b.warc_ts").alias("ts_b"),
-            F.lit(False).alias("is_match"),
-            F.concat(F.lit("host:"), F.col("a.raw_host")).alias("block_key"),
-        )
-    )
-    return pos.unionByName(neg).dropDuplicates(["url_a", "ts_a", "url_b", "ts_b"])

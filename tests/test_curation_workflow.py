@@ -82,6 +82,10 @@ def test_curation_config_fingerprint_invalidates(spark, pages, tmp_path_factory)
     )
     n2 = out2.count()
     assert n2 > n1
+    # a num_perm the 32-band LSH cannot split evenly is refused when the
+    # config is built
+    with pytest.raises(ValueError, match="multiple of minhash_bands"):
+        CurationConfig(num_perm=100)
 
 
 def _full_row_stages(docs, cfg, eval_docs):

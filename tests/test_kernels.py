@@ -402,6 +402,48 @@ def test_er_composition_only_in_pipeline():
     assert callers == ["ccer/plans/pipeline.py"]
 
 
+def test_curation_composition_only_in_curation_workflow():
+    """``curation_chain`` is the one curation composition in ``ccer/``:
+    the funnel's operators are called from ``ccer/plans/curation_workflow.py``
+    and otherwise only one per function (``driver_queries.py`` runs
+    each operator alone), and the stream calls neither them nor the near-dup
+    probe's parts, so no hand-written copy of the funnel or of its probe
+    can form beside the chain."""
+    import ast
+    import pathlib
+
+    root = pathlib.Path(__file__).resolve().parent.parent / "ccer"
+    funnel = {
+        "exact_dedup", "minhash_neardup_pairs", "repetition_signals",
+        "decontaminate", "stratified_sample",
+    }
+    probe = {
+        "text_signatures", "signature_neardup_pairs", "block_keys",
+        "candidate_pairs", "estimated_jaccard",
+    }
+
+    def called(node):
+        return {
+            n.func.id if isinstance(n.func, ast.Name) else n.func.attr
+            for n in ast.walk(node)
+            if isinstance(n, ast.Call) and isinstance(n.func, (ast.Name, ast.Attribute))
+        }
+
+    callers = []
+    for path in sorted(root.rglob("*.py")):
+        tree = ast.parse(path.read_text())
+        name = str(path.relative_to(root.parent))
+        if called(tree) & funnel:
+            callers.append(name)
+        if name != "ccer/plans/curation_workflow.py":
+            for fn in tree.body:
+                if isinstance(fn, ast.FunctionDef):
+                    assert len(called(fn) & funnel) <= 1, (name, fn.name)
+    assert callers == ["ccer/plans/curation_workflow.py", "ccer/plans/driver_queries.py"]
+    stream = ast.parse((root / "streaming" / "curation.py").read_text())
+    assert not called(stream) & (funnel | probe)
+
+
 # ------------------------------------------------------------------- names
 def test_parse_name_styles():
     p = parse_name_by_style("Smith J", "last_initial")

@@ -7,11 +7,18 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from ccer.streaming.curation import CurationState, curate_batch
+from ccer.streaming.curation import curate_batch
 
 
 def _doc(tag, words):
     return f"{tag} " + " ".join(words)
+
+
+def _pages(spark, rows):
+    """(url, text) rows → a pages batch (url, lang, text)."""
+    return spark.createDataFrame(
+        [(url, "en", text) for url, text in rows], "url string, lang string, text string"
+    )
 
 
 @pytest.fixture(scope="module")
@@ -28,33 +35,27 @@ def test_cross_batch_dedup_and_chain(spark, vocab):
     near2[20], near2[60] = "chg2a", "chg2b"        # near-dup of near1
     other = vocab[100:180]
 
-    b1 = spark.createDataFrame(
-        [("a_base", _doc("a", base)), ("a_other", _doc("a", other))],
-        "name string, text string",
-    )
-    b2 = spark.createDataFrame(
+    b1 = _pages(spark, [("a_base", _doc("a", base)), ("a_other", _doc("a", other))])
+    b2 = _pages(
+        spark,
         [
             ("b_near1", _doc("a", near1)),          # near-dup of a_base
             ("b_exact", _doc("a", other)),          # exact dup of a_other
             ("b_fresh", _doc("b", vocab[200:280])),
         ],
-        "name string, text string",
     )
-    b3 = spark.createDataFrame(
-        [("c_near2", _doc("a", near2))],            # near-dup of b_near1 ONLY
-        "name string, text string",
-    )
+    b3 = _pages(spark, [("c_near2", _doc("a", near2))])  # near-dup of b_near1 ONLY
 
     s1, st = curate_batch(spark, None, b1)
-    assert {r["name"] for r in s1.collect()} == {"a_base", "a_other"}
+    assert {r["url"] for r in s1.collect()} == {"a_base", "a_other"}
 
     s2, st = curate_batch(spark, st, b2)
     # near-dup of a prior survivor and exact dup of a prior text both drop
-    assert {r["name"] for r in s2.collect()} == {"b_fresh"}
+    assert {r["url"] for r in s2.collect()} == {"b_fresh"}
 
     s3, st = curate_batch(spark, st, b3)
     # c_near2 matches only b_near1 — which was DROPPED in batch 2; its
-    # buckets+sigs in state map it to a_base's component, so the chain
+    # sigs and comps rows in state map it to a_base's component, so the chain
     # still closes and c_near2 drops (batch-mode equivalence)
     assert s3.count() == 0
 
@@ -77,10 +78,7 @@ def test_incremental_equals_single_batch(spark, vocab):
     batches_rows[1][3] = ("b_nd0", " ".join(["b"] + wa[1:]))
     batches_rows[2][5] = ("c_xd", batches_rows[1][1][1])
 
-    dfs = [
-        spark.createDataFrame(rows, "name string, text string")
-        for rows in batches_rows
-    ]
+    dfs = [_pages(spark, rows) for rows in batches_rows]
 
     st = None
     inc_texts = set()
@@ -109,23 +107,17 @@ def test_bridge_merges_for_future_not_retroactively(spark, vocab):
     n = list(y)
     n[0], n[70] = "nmutA", "nmutB"   # near-dup of y only
 
-    b1 = spark.createDataFrame(
-        [("x", _doc("a", x)), ("y", _doc("a", y))], "name string, text string"
-    )
+    b1 = _pages(spark, [("x", _doc("a", x)), ("y", _doc("a", y))])
     s1, st = curate_batch(spark, None, b1)
     assert s1.count() == 2           # x and y both emitted (J below threshold)
 
-    s2, st = curate_batch(
-        spark, st, spark.createDataFrame([("m", _doc("a", m))], "name string, text string")
-    )
+    s2, st = curate_batch(spark, st, _pages(spark, [("m", _doc("a", m))]))
     # the bridge drops; x and y stay emitted (cannot unship), but their
     # components are merged for the future: one relabel row
     assert s2.count() == 0
     assert st.relabels.count() == 1
 
-    s3, st = curate_batch(
-        spark, st, spark.createDataFrame([("n", _doc("a", n))], "name string, text string")
-    )
+    s3, st = curate_batch(spark, st, _pages(spark, [("n", _doc("a", n))]))
     # n matches only y, whose label relabels into x's merged component —
     # n must drop exactly as batch mode over the union would drop it
     assert s3.count() == 0
@@ -182,12 +174,10 @@ def test_relabels_equal_union_find_over_two_bridges(spark, vocab):
 
     st, survivors, names, sizes = None, set(), {}, []
     for rows in batches:
-        surv, st = curate_batch(
-            spark, st, spark.createDataFrame(rows, "name string, text string")
-        )
+        surv, st = curate_batch(spark, st, _pages(spark, rows))
         for r in surv.collect():
-            survivors.add(r["id"])
-            names[r["name"]] = r["id"]
+            survivors.add(r["doc_id"])
+            names[r["url"]] = r["doc_id"]
         sigs = {r["id"]: np.array(r["sig"]) for r in st.sigs.collect()}
         want = _union_find_relabels(sigs, survivors)
         got = {r["old_label"]: r["new_label"] for r in st.relabels.collect()}
@@ -198,74 +188,131 @@ def test_relabels_equal_union_find_over_two_bridges(spark, vocab):
     assert got == {names["b"]: names["a"], names["c"]: names["a"]}
 
 
+def _append_pages(spark, input_dir, rows):
+    """Append one parquet file of (url, text) pages to a stream's input."""
+    spark.createDataFrame(
+        [(url, text, "en") for url, text in rows], "url string, text string, lang string"
+    ).withColumn("warc_ts", F.current_timestamp()).withColumn(
+        "html", F.lit(None).cast("binary")
+    ).select("url", "warc_ts", "html", "text", "lang").coalesce(1).write.mode(
+        "append"
+    ).parquet(input_dir)
+
+
+def _run_stream(spark, input_dir, workdir):
+    from ccer.streaming.curation import stream_curate
+
+    stream_curate(spark, input_dir, workdir).awaitTermination(180)
+
+
 def test_stream_curate_end_to_end(spark, tmp_path, vocab):
-    """File-source streaming curation: two files → two curated appends,
-    persisted state, cross-file dedup. A second availableNow pass with a
-    third file resumes from the saved state (exact dup of file-1 text
-    still drops)."""
-    from ccer.streaming.curation import load_state, stream_curate
+    """File-source streaming curation: two files → two committed batches,
+    cross-file dedup. A second availableNow pass with a third file
+    resumes from the committed state (exact dup of file-1 text still
+    drops)."""
+    import json
+    import os
+
+    from ccer.plans.curation_workflow import CurationConfig
+    from ccer.streaming.curation import _STATE_FORMAT_VERSION, load_state, read_curated
 
     input_dir = str(tmp_path / "in")
     workdir = str(tmp_path / "wd")
     base = _doc("a", vocab[:60])
     other = _doc("b", vocab[60:120])
-    spark.createDataFrame(
-        [("u1", base, "en"), ("u2", other, "en")],
-        "url string, text string, lang string",
-    ).withColumn("warc_ts", F.current_timestamp()).withColumn(
-        "html", F.lit(None).cast("binary")
-    ).select("url", "warc_ts", "html", "text", "lang").coalesce(1).write.mode(
-        "append"
-    ).parquet(input_dir)
-
-    q = stream_curate(spark, input_dir, workdir)
-    q.awaitTermination(180)
-    out1 = spark.read.parquet(workdir + "/curated")
-    assert out1.count() == 2
+    _append_pages(spark, input_dir, [("u1", base), ("u2", other)])
+    _run_stream(spark, input_dir, workdir)
+    assert read_curated(spark, workdir).count() == 2
 
     # second run: one exact dup of file 1 + one fresh doc
-    spark.createDataFrame(
-        [("u3", base, "en"), ("u4", _doc("c", vocab[120:180]), "en")],
-        "url string, text string, lang string",
-    ).withColumn("warc_ts", F.current_timestamp()).withColumn(
-        "html", F.lit(None).cast("binary")
-    ).select("url", "warc_ts", "html", "text", "lang").coalesce(1).write.mode(
-        "append"
-    ).parquet(input_dir)
+    _append_pages(spark, input_dir, [("u3", base), ("u4", _doc("c", vocab[120:180]))])
+    _run_stream(spark, input_dir, workdir)
+    out = read_curated(spark, workdir)
+    assert out.columns == ["doc_id", "url", "source", "lang", "text", "batch_id"]
+    assert out.count() == 3                        # u3 deduped against u1
+    assert {r["url"] for r in out.collect()} == {"u1", "u2", "u4"}
+    st = load_state(spark, workdir)
+    # u3's digest was seen in batch 1, so only u4's is added
+    assert st.next_id == 4 and st.seen.count() == 3
 
-    q = stream_curate(spark, input_dir, workdir)
-    q.awaitTermination(180)
-    out2 = spark.read.parquet(workdir + "/curated")
-    assert out2.count() == 3                       # u3 deduped against u1
-    assert {r["url"] for r in out2.collect()} == {"u1", "u2", "u4"}
-    st = load_state(spark, workdir + "/curation_state")
-    assert st.next_id == 4 and st.seen.count() == 4
+    # a state written under another config or format version must REFUSE
+    # to load: read as "no state" it would re-emit every earlier survivor,
+    # and signatures of another format never match new ones
+    with pytest.raises(ValueError, match="written under config"):
+        load_state(spark, workdir, CurationConfig(minhash_threshold=0.5))
+    manifest_path = os.path.join(workdir, "_manifest.json")
+    with open(manifest_path) as fh:
+        manifest = json.load(fh)
+    assert manifest["commit"]["format_version"] == _STATE_FORMAT_VERSION
+    with open(manifest_path, "w") as fh:
+        json.dump(dict(manifest, commit=dict(manifest["commit"], format_version=4)), fh)
+    with pytest.raises(ValueError, match="format_version=4"):
+        load_state(spark, workdir)
+    with open(manifest_path, "w") as fh:
+        json.dump(manifest, fh)
+    # a v4 state kept whole tables beside curation_state/_meta.json
+    v4 = tmp_path / "v4" / "curation_state"
+    v4.mkdir(parents=True)
+    (v4 / "_meta.json").write_text(json.dumps({"next_id": 4, "format_version": 4}))
+    with pytest.raises(ValueError, match="format_version=4"):
+        load_state(spark, str(tmp_path / "v4"))
 
-    # state persisted by an older build must REFUSE to load: a pre-v2
-    # build (64-bit sigs, no version stamp) wrote sigs/buckets that never
-    # match new ones, so a silent resume would miss near-duplicates of
-    # pre-upgrade docs; a v3 build wrote buckets as (bucket, id), which
-    # lacks the block_keys columns the probe reads.
-    import json
-    import os
 
-    import pytest
+def test_stream_replay_after_failure_equals_uninterrupted_run(
+    spark, tmp_path, vocab, monkeypatch
+):
+    """A batch that fails between two of its state writes — after its
+    survivors are written — is replayed by the stream. The replay must
+    equal an uninterrupted run of the same batches: the same survivors,
+    no survivor written twice, the same state."""
+    from ccer.sources.catalog import StageStore
+    from ccer.streaming.curation import load_state, read_curated
 
-    meta_path = os.path.join(workdir, "curation_state", "_meta.json")
-    with open(meta_path) as fh:
-        meta = json.load(fh)
-    from ccer.streaming.curation import _STATE_FORMAT_VERSION
+    near = list(vocab[:60])
+    near[7] = "mut"
+    batches = [
+        [("u1", _doc("a", vocab[:60])), ("u2", _doc("b", vocab[60:120]))],
+        [
+            ("u3", _doc("a", near)),                # near-dup of u1
+            ("u4", _doc("c", vocab[120:180])),
+            ("u5", _doc("b", vocab[60:120])),       # exact dup of u2
+            ("u6", _doc("d", vocab[180:240])),
+        ],
+    ]
 
-    assert meta["format_version"] == _STATE_FORMAT_VERSION
-    stale = dict(meta)
-    del stale["format_version"]  # pre-versioning state had only next_id
-    with open(meta_path, "w") as fh:
-        json.dump(stale, fh)
-    with pytest.raises(ValueError, match="format_version=1"):
-        load_state(spark, workdir + "/curation_state")
-    with open(meta_path, "w") as fh:
-        json.dump(dict(meta, format_version=3), fh)
-    with pytest.raises(ValueError, match="format_version=3"):
-        load_state(spark, workdir + "/curation_state")
-    with open(meta_path, "w") as fh:
-        json.dump(meta, fh)
+    def run(name, fail_batch=None):
+        input_dir, workdir = str(tmp_path / name / "in"), str(tmp_path / name / "wd")
+        for k, rows in enumerate(batches):
+            _append_pages(spark, input_dir, rows)
+            if k != fail_batch:
+                _run_stream(spark, input_dir, workdir)
+                continue
+            write = StageStore.write
+
+            def failing_write(store, df, stage, *args, **kwargs):
+                if stage == "sigs":                 # after curated and seen
+                    raise RuntimeError("injected failure")
+                return write(store, df, stage, *args, **kwargs)
+
+            with monkeypatch.context() as patch:
+                patch.setattr(StageStore, "write", failing_write)
+                with pytest.raises(Exception, match="injected failure"):
+                    _run_stream(spark, input_dir, workdir)
+            assert (tmp_path / name / "wd" / "batches" / "1" / "curated" / "_SUCCESS").exists()
+            _run_stream(spark, input_dir, workdir)  # the stream replays batch 1
+        return workdir
+
+    clean, replayed = run("clean"), run("replayed", fail_batch=1)
+
+    def same(a, b):
+        return a.exceptAll(b).count() == 0 == b.exceptAll(a).count()
+
+    out = read_curated(spark, replayed)
+    assert {r["url"] for r in out.collect()} == {"u1", "u2", "u4", "u6"}
+    assert same(out, read_curated(spark, clean))
+    written = spark.read.parquet(str(tmp_path / "replayed" / "wd" / "batches" / "*" / "curated"))
+    assert written.count() == out.count() == 4
+    a, b = load_state(spark, clean), load_state(spark, replayed)
+    assert a.next_id == b.next_id == 6
+    for table in ("seen", "sigs", "comps", "relabels"):
+        assert same(getattr(a, table), getattr(b, table)), table
